@@ -124,6 +124,9 @@ object Bench {
       "\"" + k + "\":" + all.map(fmt).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a failed query is left out of total (so it lowers the score); the
+    // file record names it next to total
+    val failed = results.collect { case (k, v, _) if v < 0 => "\"" + k + "\"" }.mkString("[", ",", "]")
     // the COMPACT record is what stdout carries: VERDICT r5 #1 — the
     // driver's per-round snapshot is a log-tail capture, and the full
     // 126-query record with per-pass arrays (~12 KB) overflowed the tail
@@ -131,7 +134,7 @@ object Bench {
     // stays (the judge reads it); the per-pass arrays live in the FILE
     // record only.
     val compact = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","align_docs_per_sec":$docsPerSec,"align_docs":$nDocs,"cpus":"$cpus"}"""
-    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_runs":$qruns,"sf":"$sfDir","align_docs_per_sec":$docsPerSec,"align_docs":$nDocs,"align_runs_sec":$runsJson,"cpus":"$cpus"}"""
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"query_runs":$qruns,"sf":"$sfDir","align_docs_per_sec":$docsPerSec,"align_docs":$nDocs,"align_runs_sec":$runsJson,"cpus":"$cpus","failed":$failed}"""
     println(compact)
     // ALSO write the FULL record to a file (VERDICT r4 #1: the committed
     // record must never depend on a log-tail buffer). Overwritten per

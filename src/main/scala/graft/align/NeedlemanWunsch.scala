@@ -228,6 +228,25 @@ object NeedlemanWunsch {
     */
   val FullMatrixCellThreshold: Long = 16L * 1000 * 1000
 
+  /** Whether [[alignChars]] runs the full matrix (rather than the banded
+    * path) on a traLen × ocrLen problem; [[estimateCells]] shares it.
+    */
+  def usesFullMatrix(traLen: Int, ocrLen: Int): Boolean =
+    (traLen + 1L) * (ocrLen + 1L) <= FullMatrixCellThreshold
+
+  /** DP cells [[alignChars]] fills on a traLen × ocrLen problem with the
+    * default initial band: exact on the full matrix; on the banded path the
+    * shortest accepted attempt sequence (bands 64, 128, 256 — the initial
+    * band and [[AgreementStreak]] agreeing doublings), ignoring the band's
+    * clipping at the matrix corners. A cost model for placing pages, not a
+    * bound: a page that needs wider bands fills more.
+    */
+  def estimateCells(traLen: Int, ocrLen: Int): Long =
+    if (usesFullMatrix(traLen, ocrLen)) traLen.toLong * ocrLen
+    else (0 to AgreementStreak).iterator
+      .map(d => traLen.toLong * math.min(2L * (DefaultInitialBand << d) + 1, ocrLen))
+      .sum
+
   /** Char-level alignment. Small problems run the full matrix (exact by
     * construction). Large problems use the banded fast path (O(n·band) fill)
     * with a doubling-agreement acceptance rule — see [[alignCharsBanded]].
@@ -237,14 +256,11 @@ object NeedlemanWunsch {
       ocrStream: String,
       scoring: Scoring = Scoring.Default,
       initialBand: Int = DefaultInitialBand,
-      ws: Workspace = new Workspace): AlignResult = {
-    val n = transcript.length + 1L
-    val m = ocrStream.length + 1L
-    if (n * m <= FullMatrixCellThreshold)
+      ws: Workspace = new Workspace): AlignResult =
+    if (usesFullMatrix(transcript.length, ocrStream.length))
       alignCharsFull(transcript, ocrStream, scoring, ws)
     else
       alignCharsBanded(transcript, ocrStream, scoring, initialBand, ws)
-  }
 
   /** Full-matrix char alignment (band = m covers every column). */
   def alignCharsFull(

@@ -4,6 +4,7 @@ import graft.align._
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** One output span column group (FIXTURES.md output schema, flat ints). */
 final case class SpanCols(seq: Int, syl: String, ulx: Int, uly: Int, lrx: Int, lry: Int)
@@ -26,7 +27,7 @@ final case class AlignedDoc(
 
 /** The flagship job: Dataset[Page] → per-url aligned spans via the typed
   * mapPartitions kernel (SURVEY.md §3 lifecycle). Catalyst plan:
-  * FileScan → [Exchange(salt)] → DeserializeToObject → MapPartitions →
+  * FileScan → [Exchange(layout)] → DeserializeToObject → MapPartitions →
   * SerializeFromObject — one narrow scan, at most one shuffle, then the
   * embarrassingly parallel CPU-bound kernel stage.
   */
@@ -46,15 +47,17 @@ object AlignJob {
 
   /** Run the kernel over pages.
     *
-    * @param saltPartitions if > 0, hash-salt rows on url before the kernel —
-    *   the explicit skew break of SURVEY.md §4 item 3 (kernel cost is opaque
-    *   to AQE; one pathologically long document must not straggle a
-    *   partition). 0 = no extra shuffle (input partitioning is trusted).
-    *   Trade-off at 10^12 rows: the salt Exchange moves the full page
-    *   payloads once — worth it when per-partition kernel-cost variance is
-    *   high; skip it when input splits are already well-mixed and rely on
-    *   the MaxAlignChars cap + many-docs-per-partition averaging (the
-    *   metrics table's per-partition lineage shows which regime you're in).
+    * @param saltPartitions if > 0, lay the rows out over this many partitions
+    *   before the kernel (see [[layout]]) — the explicit skew break of
+    *   SURVEY.md §4 item 3: kernel cost is opaque to AQE, so one
+    *   pathologically long document must not straggle a partition. On batch
+    *   input this runs one small planning job when `align` is called.
+    *   0 = no extra shuffle (input partitioning is trusted). Trade-off at
+    *   10^12 rows: the layout Exchange moves the full page payloads once —
+    *   worth it when per-partition kernel-cost variance is high; skip it when
+    *   input splits are already well-mixed and rely on the MaxAlignChars cap
+    *   + many-docs-per-partition averaging (the metrics table's per-partition
+    *   lineage shows which regime you're in).
     */
   def align(
       pages: Dataset[Page],
@@ -63,15 +66,10 @@ object AlignJob {
     val spark = pages.sparkSession
     import spark.implicits._
 
-    val repartitioned =
-      if (saltPartitions > 0)
-        pages.repartition(saltPartitions, pmod(xxhash64(col("url")), lit(saltPartitions)))
-      else pages
-
     val cellsAcc = spark.sparkContext.longAccumulator("graft.align.cellsFilled")
     val docsAcc = spark.sparkContext.longAccumulator("graft.align.docsAligned")
 
-    repartitioned.mapPartitions { it =>
+    layout(pages, saltPartitions).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       // one reusable DP workspace + syllable memo per partition: no
       // per-document buffer churn, repeated vocabulary syllabified once
@@ -112,12 +110,7 @@ object AlignJob {
     val spark = pages.sparkSession
     import spark.implicits._
 
-    val repartitioned =
-      if (saltPartitions > 0)
-        pages.repartition(saltPartitions, pmod(xxhash64(col("url")), lit(saltPartitions)))
-      else pages
-
-    repartitioned.mapPartitions { it =>
+    layout(pages, saltPartitions).mapPartitions { it =>
       val ws = new graft.align.NeedlemanWunsch.Workspace
       val sylCache = new Syllabify.Cache
       it.flatMap { p =>
@@ -129,6 +122,55 @@ object AlignJob {
         }
       }
     }.toDF("system", "url", "seq", "syl", "ulx", "uly", "lrx", "lry")
+  }
+
+  /** Pages per partition that [[layout]] places by estimated cost. */
+  private val PlannedPagesPerPartition = 16
+
+  /** The kernel stage's input over `k` partitions. The `PlannedPagesPerPartition·k`
+    * pages with the most estimated DP cells ([[NeedlemanWunsch.estimateCells]]
+    * on the capped text length) are placed longest-first, each into the
+    * least-loaded partition; every other row goes to `pmod(xxhash64(url), k)`.
+    * One Exchange either way. Streaming input gets an empty plan (no query
+    * can run on it ahead of the stream), so its rows all take the hash.
+    * `k` ≤ 0 leaves the input partitioning as it is.
+    */
+  private def layout(pages: Dataset[Page], k: Int): Dataset[Page] =
+    if (k <= 0) pages
+    else {
+      val (urls, bins) =
+        if (pages.isStreaming) (Array.empty[String], Array.empty[Int]) else planHeaviest(pages, k)
+      pages.repartitionById(k, coalesce(
+        element_at(map_from_arrays(lit(urls), lit(bins)), col("url")),
+        pmod(xxhash64(col("url")), lit(k)).cast(IntegerType)))
+    }
+
+  /** (urls, partitions) of the heaviest pages: one narrow driver query over
+    * (url, capped text length), then longest-first into the least-loaded of
+    * `k` bins, ties broken by url. The transcript length stands in for both
+    * sides of the DP: the stream is extracted from the html, which the query
+    * does not read.
+    */
+  private def planHeaviest(pages: Dataset[Page], k: Int): (Array[String], Array[Int]) = {
+    val cells = udf((len: Int) => NeedlemanWunsch.estimateCells(len, len))
+    val heaviest = pages
+      .select(col("url"),
+        cells(least(length(col("text")), lit(AlignKernel.MaxAlignChars))).as("cells"))
+      .where(col("url").isNotNull && col("cells").isNotNull)
+      .orderBy(col("cells").desc, col("url"))
+      .limit(PlannedPagesPerPartition * k)
+      .collect()
+    val loads = new Array[Long](k)
+    // a repeated url keeps its first bin: the plan is a map keyed by url
+    val bins = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    heaviest.foreach { r =>
+      val bin = bins.getOrElseUpdate(r.getString(0), loads.indices.minBy(loads(_)))
+      loads(bin) += r.getLong(1)
+    }
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      f"align layout: k=$k, ${heaviest.length} rows planned, estimated bin load " +
+        f"max ${loads.max / 1e6}%.1f M / mean ${loads.sum / 1e6 / k}%.1f M cells")
+    (bins.keys.toArray, bins.values.toArray)
   }
 
   /** Flat spans table: (url, seq, syl, ulx, uly, lrx, lry). */

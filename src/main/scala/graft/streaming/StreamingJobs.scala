@@ -27,9 +27,10 @@ object StreamingJobs {
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
       .parquet(pagesDir)
       .as[Page]
-    // same url-hash salt as the batch flagship: a micro-batch of crawled
-    // pages has the same long-document skew as a batch partition, and the
-    // output is salt-independent by construction (spec-asserted)
+    // the batch flagship's layout with an empty plan (nothing can be queried
+    // ahead of a stream), so every row takes the url hash: a micro-batch of
+    // crawled pages has the same long-document skew as a batch partition,
+    // and the output is layout-independent by construction (spec-asserted)
     AlignJob.spans(AlignJob.align(pages,
       saltPartitions = spark.sparkContext.defaultParallelism))
   }

@@ -213,18 +213,22 @@ class PdfSpec extends AnyFunSuite {
     // side's behavior so the mirrored re.ASCII patterns cannot drift: a
     // 0xA0 between a /Name token and its object ref must NOT form a font
     // entry, and "7\u00a00 obj" must NOT parse as an object header.
-    val body = "1 0 obj<</Type/Page/Resources<</Font<</F1\u00a02 0 R>>>>" +
-      ">>endobj\n7\u00a00 obj<<>>endobj\n" +
-      "3 0 obj<</Length 2>>stream\nAB\nendstream endobj"
-    val bytes = body.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1)
-    // must not throw; the 0xA0-joined tokens are simply not structural
-    val (n, _) = Pdf.extractText(bytes)
-    assert(n >= 0)
+    // Font F1 -> object 5 -> /ToUnicode 7, whose CMap maps 'a' to 'Z': the
+    // text reads "Z" only when both the font entry and header 7 parse.
+    val cmap = "1 beginbfchar\n<61> <005A>\nendbfchar"
+    def extract(fontSep: String, headerSep: String): (Int, String) = Pdf.extractText((
+      "%PDF-1.4\n" +
+        s"3 0 obj\n<< /Font << /F1${fontSep}5 0 R >> >>\nendobj\n" +
+        "5 0 obj\n<< /Type /Font /ToUnicode 7 0 R >>\nendobj\n" +
+        s"7${headerSep}0 obj\n<< /Length ${cmap.length} >>\nstream\n$cmap\nendstream\nendobj\n" +
+        "4 0 obj\n<< /Length 22 >>\nstream\nBT /F1 12 Tf (a) Tj ET\nendstream\nendobj\n"
+    ).getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
     // the delimiter forms DO bind (sanity that the patterns still match)
-    val ok = "1 0 obj<</Font<</F1 2 0 R>>>>endobj"
-    val (n2, _) = Pdf.extractText(
-      ok.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    assert(n2 >= 0)
+    assert(extract(" ", " ") === ((1, "Z")))
+    // no F1 entry: the content keeps its raw 'a'
+    assert(extract("\u00a0", " ")._2 === "a")
+    // no object 7: /ToUnicode 7 0 R finds no CMap stream
+    assert(extract(" ", "\u00a0")._2 === "a")
   }
 
   test("extractText: /Font-prefixed tokens don't harvest unrelated dicts") {

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.SparkEntry
 import graft.ops.{Dedup, Similarity, TextOps}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -33,11 +33,14 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("align output is identical across different salt partitionings") {
     import spark.implicits._
     val pages = AlignJob.synthPages(spark, sfDir).filter(_.url < PageGen.urlFor(80))
-    def run(salt: Int): Array[String] =
+    def run(pages: Dataset[Page], salt: Int): Array[String] =
       AlignJob.spans(AlignJob.align(pages, saltPartitions = salt))
         .selectExpr("concat_ws(':', url, seq, syl, ulx, uly, lrx, lry)")
         .as[String].collect().sorted
-    assert(run(3) sameElements run(11))
+    assert(run(pages, 3) sameElements run(pages, 11))
+    // the cost-planned layout places every heavy-tailed page by estimate
+    val heavy = HeavyTailPages(spark)
+    assert(run(heavy, 4) sameElements run(heavy, 0))
   }
 
   test("align metrics: no kernel errors on the corpus; lineage populated") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.pipeline.{AlignJob, PageGen}
+import graft.pipeline.{AlignJob, Page, PageGen}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, countDistinct}
 import org.scalatest.BeforeAndAfterAll
@@ -146,6 +147,41 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[String].collect().sorted
     assert(readSpans() sameElements batchAll)
     rmTree(base)
+  }
+
+  test("streaming align submits no layout planning job; batch align submits one") {
+    import spark.implicits._
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_stream_plan"
+    rmTree(base)
+    val pagesDir = s"$base/pages"
+    AlignJob.synthPages(spark, sfDir).filter(_.url < PageGen.urlFor(20)).write.parquet(pagesDir)
+    val batchPages = spark.read.parquet(pagesDir).as[Page] // schema inference runs a job
+
+    val jobsByGroup = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobsByGroup.merge(g, 1, (a: Integer, b: Integer) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("stream-align", "streaming align")
+      StreamingJobs.alignStream(spark, pagesDir)
+      sc.setJobGroup("batch-align", "batch align")
+      AlignJob.align(batchPages, saltPartitions = 4)
+      sc.clearJobGroup()
+      // the listener bus delivers events in order: once the batch planning
+      // job is seen, any job the streaming call submitted was seen before it
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobsByGroup.containsKey("batch-align") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(jobsByGroup.get("batch-align") === 1)
+      assert(!jobsByGroup.containsKey("stream-align"), jobsByGroup)
+    } finally {
+      sc.removeSparkListener(listener)
+      rmTree(base)
+    }
   }
 
   test("stateful sessionization (flatMapGroupsWithState) matches the batch sessions it closes") {
