@@ -8,7 +8,8 @@ import scala.collection.mutable.ArrayBuffer
   * @param ocrAlign gapped noisy-stream string ('_' = gap)
   * @param bandUsed final band half-width that produced the accepted result
   *                 (0 = full matrix / not banded)
-  * @param cellsFilled total DP cells filled across all banding attempts
+  * @param cellsFilled DP cells of the fills actually run (an attempt that
+  *                    reuses a wider fill's result adds none)
   * @param note non-empty when the giant-document policy engaged:
   *             `band_capped:<b>` (result from the widest runnable band,
   *             accepted WITHOUT full agreement) or `band_overflow_drop:<b>`
@@ -43,11 +44,11 @@ final case class AlignResult(
   * Two implementations are provided:
   *   - [[alignTokens]] — literal-semantics port over token sequences (full
   *     matrices); the correctness anchor, used by golden tests;
-  *   - [[alignChars]] — char-specialized banded DP (O(n·b) fill, rolling
-  *     score rows, in-band pointer storage) that self-verifies: if the
-  *     traceback path comes within a safety margin of the band edge the band
-  *     is doubled and the alignment re-run, falling back to the full matrix.
-  *     Property tests assert banded == full on randomized inputs.
+  *   - [[alignChars]] — char-specialized DP: the full matrix below
+  *     [[FullMatrixCellThreshold]], above it a banded DP (O(n·b) fill,
+  *     rolling score rows, in-band pointer storage) accepted by the
+  *     band-agreement rule of [[alignCharsBanded]], falling back to the full
+  *     matrix. Property tests assert banded == full on randomized inputs.
   */
 object NeedlemanWunsch {
 
@@ -213,7 +214,10 @@ object NeedlemanWunsch {
   val MinBand: Int = 16
 
   /** Consecutive agreeing band doublings required before a banded result is
-    * accepted (bands b, 2b, 4b must produce identical output). Measured on
+    * accepted (bands b, 2b, 4b must produce identical output). The widest
+    * band of the first streak, `b << AgreementStreak`, is filled first; the
+    * narrower two are then filled only when its path does not prove their
+    * result (see [[alignCharsBanded]]). Measured on
     * ≤60-char adversarial gibberish — the worst case, where the band is a
     * large fraction of the matrix — single agreement is wrong ≈0.2% of the
     * time; production documents only reach this path above the full-matrix
@@ -236,16 +240,14 @@ object NeedlemanWunsch {
 
   /** DP cells [[alignChars]] fills on a traLen × ocrLen problem with the
     * default initial band: exact on the full matrix; on the banded path the
-    * shortest accepted attempt sequence (bands 64, 128, 256 — the initial
-    * band and [[AgreementStreak]] agreeing doublings), ignoring the band's
-    * clipping at the matrix corners. A cost model for placing pages, not a
-    * bound: a page that needs wider bands fills more.
+    * single widest fill of the first streak (band 256 = 64 <<
+    * [[AgreementStreak]], whose path proves the narrower two), ignoring the
+    * band's clipping at the matrix corners. A cost model for placing pages,
+    * not a bound: a page that needs narrower fills or wider bands fills more.
     */
   def estimateCells(traLen: Int, ocrLen: Int): Long =
     if (usesFullMatrix(traLen, ocrLen)) traLen.toLong * ocrLen
-    else (0 to AgreementStreak).iterator
-      .map(d => traLen.toLong * math.min(2L * (DefaultInitialBand << d) + 1, ocrLen))
-      .sum
+    else traLen.toLong * math.min(2L * (DefaultInitialBand << AgreementStreak) + 1, ocrLen)
 
   /** Char-level alignment. Small problems run the full matrix (exact by
     * construction). Large problems use the banded fast path (O(n·band) fill)
@@ -269,9 +271,9 @@ object NeedlemanWunsch {
       scoring: Scoring,
       ws: Workspace = new Workspace): AlignResult = {
     val m = ocrStream.length + 1
-    val (res, cells) = alignCharsWithBand(transcript, ocrStream, scoring, m, ws)
-    val (ta, oa) = res.get // full band never aborts
-    AlignResult(ta, oa, 0, cells)
+    val f = alignCharsWithBand(transcript, ocrStream, scoring, m, ws)
+    val (ta, oa) = f.res.get // full band never aborts
+    AlignResult(ta, oa, 0, f.cells)
   }
 
   /** Banded char alignment with the three-band agreement rule: keep doubling
@@ -290,6 +292,31 @@ object NeedlemanWunsch {
     * Documents small enough for [[FullMatrixCellThreshold]] (the realistic
     * web-page range) never take this path and are exact by construction; any
     * disagreement here widens toward the provably exact full matrix.
+    *
+    * Widest first: the first streak's widest band W = b << [[AgreementStreak]]
+    * is filled once up front, when W < m and its pointers fit the storage
+    * budget (the doubling loop reaches W in that case anyway). The attempts
+    * then run in the doubling order, but an attempt at band b' ≤ W takes W's
+    * result without a fill when b' = W, or when W's path half-width is ≤ b'.
+    * That is exact by a lemma: for bands b' ≤ B on one centre line, if band
+    * B's traceback stays within b' of the line, band b' returns the same
+    * result.
+    *   - Every band-b' value is ≤ its band-B value: band b' allows a subset
+    *     of the paths, and max, add, NegInf absorption and IEEE rounding are
+    *     monotone. The cells on the path keep their band-B values, because
+    *     the path lies in band b'.
+    *   - Ties (first-wins argmax): a candidate listed before the chosen one
+    *     was strictly smaller in band B, so it stays strictly smaller in band
+    *     b', and every pointer on the path is chosen the same way.
+    *   - Corner pointer: the traceback starts from the corner's mat pointer
+    *     (textSeqCompare.py:96-107), which compares the three states at
+    *     (n−2, m−2). When it names x or y, that state's value is not on the
+    *     path, so its pointer chain from (n−2, m−2) counts toward the
+    *     half-width as well.
+    * Which bands must agree stays the empirical rule above: the lemma only
+    * skips fills whose result it proves, so `traAlign`, `ocrAlign`,
+    * `bandUsed` and `note` are the doubling loop's for every input, and
+    * `cellsFilled` is never higher.
     */
   def alignCharsBanded(
       transcript: String,
@@ -316,16 +343,26 @@ object NeedlemanWunsch {
     var band = math.min(math.max(MinBand, initialBand), maxBandStorage)
 
     if (band >= m) {
-      val (res, c) = alignCharsWithBand(transcript, ocrStream, scoring, m, ws)
-      val (ta, oa) = res.get
-      return AlignResult(ta, oa, 0, c)
+      val f = alignCharsWithBand(transcript, ocrStream, scoring, m, ws)
+      val (ta, oa) = f.res.get
+      return AlignResult(ta, oa, 0, f.cells)
     }
 
-    var prev: Option[(String, String)] = {
-      val (res, c) = alignCharsWithBand(transcript, ocrStream, scoring, band, ws)
-      cells += c
-      res
+    val widest = band.toLong << AgreementStreak
+    val wide: Option[Fill] =
+      if (widest < m && widest <= maxBandStorage)
+        Some(alignCharsWithBand(transcript, ocrStream, scoring, widest.toInt, ws))
+      else None
+    wide.foreach(cells += _.cells)
+    def attempt(b: Int): Option[(String, String)] = wide match {
+      case Some(w) if b == widest || (b < widest && w.halfWidth <= b) => w.res
+      case _ =>
+        val f = alignCharsWithBand(transcript, ocrStream, scoring, b, ws)
+        cells += f.cells
+        f.res
     }
+
+    var prev = attempt(band)
     // widest band that produced an in-band traceback so far (a later, wider
     // attempt can fail on the edge while a narrower one succeeded — the cap
     // fallback must not discard that success)
@@ -344,8 +381,7 @@ object NeedlemanWunsch {
         }
       }
       val full = nextBand >= m
-      val (cur, c) = alignCharsWithBand(transcript, ocrStream, scoring, nextBand, ws)
-      cells += c
+      val cur = attempt(nextBand)
       if (full) {
         val (ta, oa) = cur.get
         return AlignResult(ta, oa, 0, cells)
@@ -364,20 +400,28 @@ object NeedlemanWunsch {
     throw new IllegalStateException("unreachable")
   }
 
-  /** One banded attempt. Returns (Some(alignments), cells) on success or
-    * (None, cells) if the traceback touched the band edge.
+  /** One banded fill: the alignment (None if the traceback touched the band
+    * edge), the DP cells filled, and the path's half-width — the largest
+    * |j − center(i)| over the cells the traceback visits and, when the
+    * corner's mat pointer names x or y, over that state's pointer chain from
+    * (n−2, m−2) (see [[alignCharsBanded]]). The half-width is Int.MaxValue
+    * when the traceback aborts or the corner chain leaves the band.
+    */
+  private[graft] final case class Fill(res: Option[(String, String)], cells: Long, halfWidth: Int)
+
+  /** One banded attempt.
     *
     * Band: row i is filled for j in [max(1, c(i)-b), min(m-1, c(i)+b)] where
     * c(i) = round(i·(m-1)/(n-1)) — the skewed diagonal, which always contains
     * (0,0) and (n-1,m-1). Score matrices roll (two rows); pointers are stored
     * only in-band (3 bits per cell worth, kept as bytes).
     */
-  private def alignCharsWithBand(
+  private[graft] def alignCharsWithBand(
       transcript: String,
       ocrStream: String,
       scoring: Scoring,
       band: Int,
-      ws: Workspace): (Option[(String, String)], Long) = {
+      ws: Workspace): Fill = {
 
     val sentinel = ' '
     val n = transcript.length + 1
@@ -387,8 +431,6 @@ object NeedlemanWunsch {
 
     val slope = if (n > 1) (m - 1).toDouble / (n - 1).toDouble else 0.0
     @inline def center(i: Int): Int = math.round(i * slope).toInt
-    @inline def lo(i: Int): Int = math.max(1, center(i) - band)
-    @inline def hi(i: Int): Int = math.min(m - 1, center(i) + band)
 
     val width = 2 * band + 1
     require(n.toLong * width <= Int.MaxValue - 8,
@@ -407,25 +449,29 @@ object NeedlemanWunsch {
       else fillBandDouble(transcript, ocrStream, scoring, band, ws, n, m, slope, ptrs)
 
     // traceback (textSeqCompare.py:96-170); aborts only if the path escapes
-    // the stored band (acceptance is agreement-based, see alignCharsBanded)
-    @inline def inBand(xi: Int, yj: Int): Boolean = yj >= lo(xi) && yj <= hi(xi)
-
+    // the stored band (acceptance is agreement-based, see alignCharsBanded).
+    // Visited cells have 1 ≤ j ≤ m-1, so a cell is in band iff its distance
+    // |j - center(i)| from the centre line is ≤ band.
     val traAlign = new java.lang.StringBuilder(n + m)
     val ocrAlign = new java.lang.StringBuilder(n + m)
     var xpt = n - 1
     var ypt = m - 1
     // boundary cells have pointer 0 (the reference's np.zeros init); they are
     // never stored in the band, so guard the corner read when a side is empty
-    var mpt: Int = if (xpt == 0 || ypt == 0) 0 else ptrs(bandIdx(xpt, ypt)) & 3
+    val corner: Int = if (xpt == 0 || ypt == 0) 0 else ptrs(bandIdx(xpt, ypt)) & 3
+    var mpt = corner
 
     traAlign.append(traAt(xpt))
     ocrAlign.append(ocrAt(ypt))
 
+    var halfWidth = 0
     var aborted = false
     while (!aborted && xpt > 0 && ypt > 0) {
-      {
-        if (!inBand(xpt, ypt)) { aborted = true }
-        else if (mpt == 0) {
+      val d = math.abs(ypt - center(xpt))
+      if (d > band) { aborted = true }
+      else {
+        if (d > halfWidth) halfWidth = d
+        if (mpt == 0) {
           traAlign.append(traAt(xpt - 1))
           ocrAlign.append(ocrAt(ypt - 1))
           mpt = ptrs(bandIdx(xpt, ypt)) & 3
@@ -443,7 +489,24 @@ object NeedlemanWunsch {
         }
       }
     }
-    if (aborted && band < m) return (None, cells)
+    if (aborted && band < m) return Fill(None, cells, Int.MaxValue)
+
+    // corner clause of the lemma: a mat corner pointer's chain is the path
+    // itself; an x or y one names a state whose chain the path skips
+    var ci = n - 2
+    var cj = m - 2
+    var cs = corner
+    while (corner != 0 && halfWidth <= band && ci > 0 && cj > 0) {
+      val d = math.abs(cj - center(ci))
+      if (d > band) halfWidth = Int.MaxValue
+      else {
+        if (d > halfWidth) halfWidth = d
+        val p = ptrs(bandIdx(ci, cj))
+        if (cs == 0) { cs = p & 3; ci -= 1; cj -= 1 }
+        else if (cs == 1) { cs = (p >> 2) & 3; ci -= 1 }
+        else { cs = (p >> 4) & 3; cj -= 1 }
+      }
+    }
 
     while (ypt > 0) { traAlign.append('_'); ocrAlign.append(ocrAt(ypt - 1)); ypt -= 1 }
     while (xpt > 0) { ocrAlign.append('_'); traAlign.append(traAt(xpt - 1)); xpt -= 1 }
@@ -451,8 +514,8 @@ object NeedlemanWunsch {
     // `[-1:0:-1]` — drop the sentinel pair (index 0) and reverse
     val ta = traAlign.toString
     val oa = ocrAlign.toString
-    (Some((new StringBuilder(ta.substring(1)).reverse.toString,
-           new StringBuilder(oa.substring(1)).reverse.toString)), cells)
+    Fill(Some((new StringBuilder(ta.substring(1)).reverse.toString,
+               new StringBuilder(oa.substring(1)).reverse.toString)), cells, halfWidth)
   }
 
   /** Double-arithmetic banded fill (the general path for non-integral

@@ -3,7 +3,13 @@ package graft.tools
 import graft.align._
 
 /** Offline sweep: disagreement rate of k-way doubling-agreement banded DP vs
-  * the exact token kernel, per scoring family and agreement strength.
+  * the exact token kernel, per scoring family and agreement strength, on
+  * strings of at most 60 chars; then a realistic-length leg: 2,000 noisy
+  * copies of 300–3,000 chars through the banded path with the default
+  * scoring against the full matrix, counting the pages accepted from the
+  * single widest fill and the cells filled.
+  *
+  * `runMain graft.tools.BandSweep [casesPerShortLeg=5000] [agree=2]`
   */
 object BandSweep {
   def main(args: Array[String]): Unit = {
@@ -56,9 +62,9 @@ object BandSweep {
       1 + rng.nextInt(12), -1 - rng.nextInt(12),
       -rng.nextInt(10), -rng.nextInt(10),
       -rng.nextInt(6), -rng.nextInt(6)), n, () => 16)
+    val words = Array("alleluia", "dominus", "gloria", "sanctus", "benedictus", "meus", "dixit")
     var fail = 0
     for (i <- 0 until n) {
-      val words = Array("alleluia", "dominus", "gloria", "sanctus", "benedictus", "meus", "dixit")
       val t = Array.fill(30 + rng.nextInt(60))(words(rng.nextInt(words.length))).mkString(" ")
       val noisy = graft.pipeline.PageGen.noisyRender(t, rng.nextLong())
       val (ta, oa) = NeedlemanWunsch.alignTokens(
@@ -67,5 +73,34 @@ object BandSweep {
       if (got._1 != ta.mkString || got._2 != oa.mkString) fail += 1
     }
     println(s"realistic-default-band64 agree=$agree: $fail/$n disagree")
+
+    // alignChars runs the full matrix below 16 M cells, so the banded path
+    // is called directly; a page is accepted from the single widest fill
+    // when it filled no more cells than that one fill
+    val longCases = 2000
+    val widest = NeedlemanWunsch.DefaultInitialBand << NeedlemanWunsch.AgreementStreak
+    val ws = new NeedlemanWunsch.Workspace
+    var longFail = 0
+    var single = 0
+    var cells = 0L
+    var fullCells = 0L
+    for (_ <- 0 until longCases) {
+      val len = 300 + rng.nextInt(2701)
+      val sb = new StringBuilder
+      while (sb.length < len) sb.append(words(rng.nextInt(words.length))).append(' ')
+      val t = sb.substring(0, len)
+      val noisy = graft.pipeline.PageGen.noisyRender(t, rng.nextLong())
+      val r = NeedlemanWunsch.alignCharsBanded(t, noisy, ws = ws)
+      val full = NeedlemanWunsch.alignCharsFull(t, noisy, Scoring.Default, ws)
+      if (r.traAlign != full.traAlign || r.ocrAlign != full.ocrAlign) longFail += 1
+      if (r.bandUsed == widest &&
+          r.cellsFilled == NeedlemanWunsch.alignCharsWithBand(t, noisy, Scoring.Default, widest, ws).cells)
+        single += 1
+      cells += r.cellsFilled
+      fullCells += full.cellsFilled
+    }
+    println(s"realistic-long-300-3000-default: $longFail/$longCases disagree vs full matrix; " +
+      s"$single/$longCases accepted from the single widest fill (band $widest); " +
+      s"banded cells $cells, full-matrix cells $fullCells")
   }
 }

@@ -13,7 +13,8 @@ object AlignmentPropertiesSpec extends Properties("alignment") {
   // The banded-agreement property is EMPIRICAL (see NeedlemanWunsch
   // scaladoc): universally true only below the full-matrix threshold. Pin
   // the generator seed so CI is deterministic; the wide sweep lives in
-  // graft.tools.BandSweep (0/8000 at band >= 16).
+  // graft.tools.BandSweep (0/20,000 short pairs at band >= 16, and 0/2,000
+  // noisy pages of 300-3,000 chars against the full matrix).
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withInitialSeed(org.scalacheck.rng.Seed(42L))
 
