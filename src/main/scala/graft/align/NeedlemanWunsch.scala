@@ -49,6 +49,13 @@ final case class AlignResult(
   *     rolling score rows, in-band pointer storage) accepted by the
   *     band-agreement rule of [[alignCharsBanded]], falling back to the full
   *     matrix. Property tests assert banded == full on randomized inputs.
+  *
+  * Every char fill (banded or full) runs one of two fills with identical
+  * outputs: [[fillBandInt]] when the scoring is integral and the page's path
+  * scores fit its Int bound ([[intFillFits]] — every reference scoring on
+  * any realistic page), [[fillBandDouble]] otherwise. The Int fill splits
+  * each row into a branch-free pass over the previous row, which C2
+  * auto-vectorizes, and the serial y-gap chain.
   */
 object NeedlemanWunsch {
 
@@ -61,24 +68,30 @@ object NeedlemanWunsch {
     */
   final class Workspace {
     private[align] var rows: Array[Array[Double]] = Array.fill(6)(new Array[Double](0))
-    private[align] var lrows: Array[Array[Long]] = Array.fill(6)(new Array[Long](0))
+    /** The Int fill's rows: mat, x, y of even rows (0-2) and of odd rows
+      * (3-5), the previous row shifted one column right (6-8), A (9) and
+      * the pass-A pointer bits (10).
+      */
+    private[align] var irows: Array[Array[Int]] = Array.fill(11)(new Array[Int](0))
     private[align] var ptrs: Array[Byte] = new Array[Byte](0)
-    private[align] var ocrChars: Array[Char] = new Array[Char](0)
+    private[align] var stream: Array[Int] = new Array[Int](0)
     private[align] def ensureRows(m: Int): Unit =
       if (rows(0).length < m) rows = Array.fill(6)(new Array[Double](m))
-    private[align] def ensureRowsLong(m: Int): Unit =
-      if (lrows(0).length < m) lrows = Array.fill(6)(new Array[Long](m))
+    private[align] def ensureIntRows(m: Int): Unit =
+      if (irows(0).length < m) irows = Array.fill(11)(new Array[Int](m))
     private[align] def ensurePtrs(sz: Int): Unit =
       if (ptrs.length < sz) ptrs = new Array[Byte](sz)
-    /** The OCR stream copied into a flat char array once per fill — the
-      * inner loop reads it once per cell, and `String.charAt`'s indirection
-      * + bounds check is measurable at ~10 ns/cell total loop cost
-      * (optimization round 7).
+    /** The OCR stream copied into a flat array once per fill, indexed by DP
+      * column: `stream(j)` holds char j − 1, the char that column j matches,
+      * so the fills read it at the index they store at. The inner loop
+      * reads it once per cell, and `String.charAt`'s indirection + bounds
+      * check is measurable at ~10 ns/cell total loop cost.
       */
-    private[align] def ocrArray(s: String): Array[Char] = {
-      if (ocrChars.length < s.length) ocrChars = new Array[Char](s.length)
-      s.getChars(0, s.length, ocrChars, 0)
-      ocrChars
+    private[align] def streamArray(s: String): Array[Int] = {
+      if (stream.length <= s.length) stream = new Array[Int](s.length + 1)
+      var j = 0
+      while (j < s.length) { stream(j + 1) = s.charAt(j); j += 1 }
+      stream
     }
   }
 
@@ -324,7 +337,22 @@ object NeedlemanWunsch {
       scoring: Scoring = Scoring.Default,
       initialBand: Int = DefaultInitialBand,
       ws: Workspace = new Workspace,
-      maxPtrCells: Long = Int.MaxValue - 8): AlignResult = {
+      maxPtrCells: Long = Int.MaxValue - 8): AlignResult =
+    alignCharsBandedWith(transcript, ocrStream, scoring, initialBand, ws, maxPtrCells,
+      forceDoubleFill = false)
+
+  /** [[alignCharsBanded]] with an explicit fill choice: `forceDoubleFill`
+    * runs [[fillBandDouble]] on every scoring, so the equivalence properties
+    * and graft.tools.BandSweep can compare the two fills on identical inputs.
+    */
+  private[graft] def alignCharsBandedWith(
+      transcript: String,
+      ocrStream: String,
+      scoring: Scoring,
+      initialBand: Int,
+      ws: Workspace,
+      maxPtrCells: Long,
+      forceDoubleFill: Boolean): AlignResult = {
     val n = transcript.length + 1
     val m = ocrStream.length + 1
     var cells = 0L
@@ -343,7 +371,7 @@ object NeedlemanWunsch {
     var band = math.min(math.max(MinBand, initialBand), maxBandStorage)
 
     if (band >= m) {
-      val f = alignCharsWithBand(transcript, ocrStream, scoring, m, ws)
+      val f = alignCharsWithBand(transcript, ocrStream, scoring, m, ws, forceDoubleFill)
       val (ta, oa) = f.res.get
       return AlignResult(ta, oa, 0, f.cells)
     }
@@ -351,13 +379,13 @@ object NeedlemanWunsch {
     val widest = band.toLong << AgreementStreak
     val wide: Option[Fill] =
       if (widest < m && widest <= maxBandStorage)
-        Some(alignCharsWithBand(transcript, ocrStream, scoring, widest.toInt, ws))
+        Some(alignCharsWithBand(transcript, ocrStream, scoring, widest.toInt, ws, forceDoubleFill))
       else None
     wide.foreach(cells += _.cells)
     def attempt(b: Int): Option[(String, String)] = wide match {
       case Some(w) if b == widest || (b < widest && w.halfWidth <= b) => w.res
       case _ =>
-        val f = alignCharsWithBand(transcript, ocrStream, scoring, b, ws)
+        val f = alignCharsWithBand(transcript, ocrStream, scoring, b, ws, forceDoubleFill)
         cells += f.cells
         f.res
     }
@@ -421,7 +449,8 @@ object NeedlemanWunsch {
       ocrStream: String,
       scoring: Scoring,
       band: Int,
-      ws: Workspace): Fill = {
+      ws: Workspace,
+      forceDoubleFill: Boolean = false): Fill = {
 
     val sentinel = ' '
     val n = transcript.length + 1
@@ -442,10 +471,10 @@ object NeedlemanWunsch {
     @inline def bandIdx(i: Int, j: Int): Int = i * width + (j - (center(i) - band))
 
     // the fill writes only `ptrs` + returns the cell count; integral
-    // scorings (every reference system) take the integer-ALU fill
+    // scorings (every reference system) take the Int fill when its bound holds
     val cells =
-      if (scoring.isIntegral && !forceDoubleFill)
-        fillBandLong(transcript, ocrStream, scoring, band, ws, n, m, slope, ptrs)
+      if (!forceDoubleFill && intFillFits(scoring, n, m))
+        fillBandInt(transcript, ocrStream, scoring, band, ws, n, m, slope, ptrs)
       else fillBandDouble(transcript, ocrStream, scoring, band, ws, n, m, slope, ptrs)
 
     // traceback (textSeqCompare.py:96-170); aborts only if the path escapes
@@ -518,8 +547,9 @@ object NeedlemanWunsch {
                new StringBuilder(oa.substring(1)).reverse.toString)), cells, halfWidth)
   }
 
-  /** Double-arithmetic banded fill (the general path for non-integral
-    * scorings). Writes packed pointers into `ptrs`; returns cells filled.
+  /** Double-arithmetic banded fill: the path for non-integral scorings and
+    * for integral ones outside the Int fill's bound (exact for integers
+    * below 2^53). Writes packed pointers into `ptrs`; returns cells filled.
     * Rolling score rows (full width m); cells a row reads but its
     * predecessor didn't write are poisoned with NegInf before the fill,
     * keeping the hot loop branch-free.
@@ -540,7 +570,7 @@ object NeedlemanWunsch {
     val width = 2 * band + 1
 
     ws.ensureRows(m)
-    val ocr = ws.ocrArray(ocrStream)
+    val oc = ws.streamArray(ocrStream)
     var matPrev = ws.rows(0)
     var xPrev = ws.rows(1)
     var yPrev = ws.rows(2)
@@ -588,13 +618,13 @@ object NeedlemanWunsch {
       // current-row left neighbor of the band start (unless it's col 0)
       if (jLo - 1 >= 1) { matCur(jLo - 1) = NegInf; xCur(jLo - 1) = NegInf; yCur(jLo - 1) = NegInf }
 
-      // carried registers — the exact twin of fillBandLong's loop (the
-      // equivalence suite compares both fills); candidate order unchanged
+      // carried registers: prev-row (j-1) is last iteration's prev-row (j),
+      // cur-row (j-1) is last iteration's own output
       var pmJ1 = matPrev(jLo - 1); var pxJ1 = xPrev(jLo - 1); var pyJ1 = yPrev(jLo - 1)
       var cmJ1 = matCur(jLo - 1); var cxJ1 = xCur(jLo - 1); var cyJ1 = yCur(jLo - 1)
       j = jLo
       while (j <= jHi) {
-        val msc = if (ti == ocr(j - 1)) matchS else mismatchS
+        val msc = if (ti == oc(j)) matchS else mismatchS
 
         var mBest = 0; var mVal = pmJ1
         if (pxJ1 > mVal) { mBest = 1; mVal = pxJ1 }
@@ -633,31 +663,63 @@ object NeedlemanWunsch {
     cells
   }
 
-  /** Test hook: force the Double fill on integral scorings so the
-    * equivalence suite can compare both fills on identical inputs
-    * (AlignmentPropertiesSpec). Never set in production.
+  /** Sentinel of the Int fill: below every value [[intFillFits]] admits
+    * (|v| < 2^28), and far enough above Int.MinValue that the difference of
+    * any two values fits in 32 bits.
     */
-  @volatile private[align] var forceDoubleFill: Boolean = false
+  private final val NI = -(1 << 29)
 
-  /** Long sentinel for the integer fill. Long.MinValue/4 leaves headroom so
-    * `NegInfL + cost` can never wrap even before the absorption branch.
+  /** Whether [[fillBandInt]] is exact on an n × m problem (sentinels
+    * included). Every finite DP value is a path score: a boundary value −k
+    * plus at most i + j − k step costs, so |v| ≤ (n+m)·C with C the largest
+    * of 1 (the boundary step), |match|, |mismatch|, |gox+gex|, |gex|,
+    * |goy+gey| and |gey|. Below 2^28, NI and every mask difference fit in an
+    * Int.
     */
-  private val NegInfL: Long = Long.MinValue / 4
+  private[align] def intFillFits(scoring: Scoring, n: Int, m: Int): Boolean =
+    scoring.isIntegral && {
+      import scoring._
+      val c = Seq(1.0, matchScore, mismatch, gapOpenX + gapExtendX, gapExtendX,
+        gapOpenY + gapExtendY, gapExtendY).map(math.abs).max
+      (n.toLong + m) * c.toLong < (1L << 28)
+    }
 
-  /** Integer-ALU banded fill for integral scorings (every reference scoring
-    * system — SURVEY §7 risk note / VERDICT r2 #7). Provably identical to
-    * [[fillBandDouble]]:
-    *   - every score reachable here is an exact integer far below 2^53, so
-    *     Double comparisons and Long comparisons order candidates the same;
-    *   - IEEE absorbs additions at -1e100 (`-1e100 + c == -1e100` for any
-    *     cost), which the Long fill mirrors EXACTLY with the explicit
-    *     `base == NegInfL → NegInfL` absorption branch — so poisoned
-    *     candidates stay EQUAL (first-wins ties match), not merely very
-    *     negative.
-    * Gated by the property suite (banded == full), the reference
-    * differential goldens, and graft.tools.BandSweep.
+  /** All ones when v ≠ 0, else 0. */
+  @inline private def nz(v: Int): Int = (v | -v) >> 31
+
+  /** Int banded fill for integral scorings within [[intFillFits]] (with the
+    * default scoring, n + m below ~26 M); outputs identical to
+    * [[fillBandDouble]]. Each row is filled in two passes, [[passA]] and
+    * [[passB]].
+    *
+    * Pass A computes, for every column j of the row, mat(j), x(j), their
+    * pointers and A(j) = first-wins max(mat(j)+goy+gey, x(j)+goy+gey) with
+    * its pointer bit. All of them read only the previous row, so the
+    * iterations are independent and C2 auto-vectorizes the loop, provided
+    * it stays branch-free and every load and store is at index j:
+    *   - argmax: `k = (best − cand) >> 31` is all ones when cand is strictly
+    *     greater, so `best += (cand − best) & k` keeps the first maximum;
+    *   - NegInf absorption: `base + (cost & nz(base ^ NI))` leaves NI at NI,
+    *     as IEEE leaves −1e100 + cost at −1e100, so poisoned candidates tie
+    *     exactly and first-wins picks the same pointer as the Double fill;
+    *   - match score: `matchS + (mmDelta & nz(ti − oc(j)))`;
+    *   - same index: the previous row is copied one column right first
+    *     (`System.arraycopy`, so sm(j) = matPrev(j−1)) and the stream is an
+    *     Int array whose entry j holds char j−1. C2 cannot prove two Int
+    *     arrays distinct, so a load at j−1 next to a store at j would count
+    *     as a loop-carried dependence and leave the loop scalar.
+    *
+    * Pass B is the serial y chain, scalar:
+    * y(j) = y(j−1)+gey when that is strictly greater than A(j−1), with
+    * pointer 2, else A(j−1) with A's bit — the first-wins max of
+    * (y0, y1, y2) is the first-wins max of (y0, y1) against y2. It writes
+    * y and the packed pointer byte.
+    *
+    * Within the bound, NI is below every finite value and no sum or
+    * difference wraps, so every comparison, first-wins tie and absorption
+    * is the Double fill's.
     */
-  private def fillBandLong(
+  private def fillBandInt(
       transcript: String,
       ocrStream: String,
       scoring: Scoring,
@@ -672,30 +734,18 @@ object NeedlemanWunsch {
     @inline def hi(i: Int): Int = math.min(m - 1, center(i) + band)
     val width = 2 * band + 1
 
-    ws.ensureRowsLong(m)
-    val ocr = ws.ocrArray(ocrStream)
-    var matPrev = ws.lrows(0)
-    var xPrev = ws.lrows(1)
-    var yPrev = ws.lrows(2)
-    var matCur = ws.lrows(3)
-    var xCur = ws.lrows(4)
-    var yCur = ws.lrows(5)
+    ws.ensureIntRows(m)
+    val oc = ws.streamArray(ocrStream)
+    val r = ws.irows // layout: see Workspace.irows
 
-    val bge = BoundaryGapExtend.toLong // -1
-
-    // row 0 boundary (textSeqCompare.py:57-60)
+    // row 0 boundary (textSeqCompare.py:57-60); BoundaryGapExtend = -1
     var j = 0
     while (j < m) {
-      matPrev(j) = bge * j
-      xPrev(j) = bge * j
-      yPrev(j) = NegInfL
+      r(0)(j) = -j
+      r(1)(j) = -j
+      r(2)(j) = NI
       j += 1
     }
-
-    val gox = scoring.gapOpenX.toLong; val gex = scoring.gapExtendX.toLong
-    val goy = scoring.gapOpenY.toLong; val gey = scoring.gapExtendY.toLong
-    val goxGex = gox + gex; val goyGey = goy + gey
-    val matchS = scoring.matchScore.toLong; val mismatchS = scoring.mismatch.toLong
 
     var cells = 0L
     var i = 1
@@ -703,74 +753,127 @@ object NeedlemanWunsch {
       val ci = center(i)
       val jLo = math.max(1, ci - band)
       val jHi = math.min(m - 1, ci + band)
-      val rowOff = i * width - (ci - band)
-      val ti = transcript.charAt(i - 1)
+      val cur = (i & 1) * 3
+      val prev = 3 - cur
+      val matPrev = r(prev); val xPrev = r(prev + 1); val yPrev = r(prev + 2)
 
       // col 0 boundary (textSeqCompare.py:53-56)
-      matCur(0) = bge * i
-      xCur(0) = NegInfL
-      yCur(0) = bge * i
+      r(cur)(0) = -i
+      r(cur + 1)(0) = NI
+      r(cur + 2)(0) = -i
 
       if (i > 1) {
+        // poison prev-row cells read this row ([jLo-1, jHi]) that the
+        // previous row did not write ({0} ∪ [pLo, pHi] are valid)
         val pLo = lo(i - 1)
         val pHi = hi(i - 1)
         var jj = math.max(1, jLo - 1)
-        while (jj < pLo) { matPrev(jj) = NegInfL; xPrev(jj) = NegInfL; yPrev(jj) = NegInfL; jj += 1 }
+        while (jj < pLo) { matPrev(jj) = NI; xPrev(jj) = NI; yPrev(jj) = NI; jj += 1 }
         jj = math.max(pHi + 1, math.max(1, jLo - 1))
-        while (jj <= jHi) { matPrev(jj) = NegInfL; xPrev(jj) = NegInfL; yPrev(jj) = NegInfL; jj += 1 }
+        while (jj <= jHi) { matPrev(jj) = NI; xPrev(jj) = NI; yPrev(jj) = NI; jj += 1 }
       }
-      if (jLo - 1 >= 1) { matCur(jLo - 1) = NegInfL; xCur(jLo - 1) = NegInfL; yCur(jLo - 1) = NegInfL }
+      // the previous row one column right, so pass A reads it at index j
+      val len = jHi - jLo + 1
+      System.arraycopy(matPrev, jLo - 1, r(6), jLo, len)
+      System.arraycopy(xPrev, jLo - 1, r(7), jLo, len)
+      System.arraycopy(yPrev, jLo - 1, r(8), jLo, len)
 
-      // absorption: NegInfL + cost stays NegInfL, mirroring -1e100 + cost
-      @inline def add(base: Long, cost: Long): Long =
-        if (base == NegInfL) NegInfL else base + cost
-
-      // carried registers (optimization round 7): each iteration used to
-      // reload 6 values it had already read — prev-row (j-1) is last
-      // iteration's prev-row (j), and cur-row (j-1) is last iteration's
-      // own output. Carrying them cuts the loop to 3 fresh array loads
-      // per cell; candidate ORDER and comparisons are untouched, so the
-      // fill is bit-identical (pinned by the property/differential
-      // suites and the BandSweep tool).
-      var pmJ1 = matPrev(jLo - 1); var pxJ1 = xPrev(jLo - 1); var pyJ1 = yPrev(jLo - 1)
-      var cmJ1 = matCur(jLo - 1); var cxJ1 = xCur(jLo - 1); var cyJ1 = yCur(jLo - 1)
-      j = jLo
-      while (j <= jHi) {
-        val msc = if (ti == ocr(j - 1)) matchS else mismatchS
-
-        var mBest = 0; var mVal = pmJ1
-        if (pxJ1 > mVal) { mBest = 1; mVal = pxJ1 }
-        if (pyJ1 > mVal) { mBest = 2; mVal = pyJ1 }
-        val mOut = add(mVal, msc)
-
-        val y0 = add(cmJ1, goyGey)
-        val y1 = add(cxJ1, goyGey)
-        val y2 = add(cyJ1, gey)
-        var yBest = 0; var yVal = y0
-        if (y1 > yVal) { yBest = 1; yVal = y1 }
-        if (y2 > yVal) { yBest = 2; yVal = y2 }
-
-        val pm = matPrev(j); val px = xPrev(j); val py = yPrev(j)
-        val x0 = add(pm, goxGex)
-        val x1 = add(px, gex)
-        val x2 = add(py, goxGex)
-        var xBest = 0; var xVal = x0
-        if (x1 > xVal) { xBest = 1; xVal = x1 }
-        if (x2 > xVal) { xBest = 2; xVal = x2 }
-
-        matCur(j) = mOut; yCur(j) = yVal; xCur(j) = xVal
-        ptrs(rowOff + j) = (mBest | (xBest << 2) | (yBest << 4)).toByte
-        pmJ1 = pm; pxJ1 = px; pyJ1 = py
-        cmJ1 = mOut; cxJ1 = xVal; cyJ1 = yVal
-        j += 1
-      }
-      cells += jHi - jLo + 1
-
-      val tm = matPrev; matPrev = matCur; matCur = tm
-      val tx = xPrev; xPrev = xCur; xCur = tx
-      val ty = yPrev; yPrev = yCur; yCur = ty
+      passA(r, oc, prev, jLo, jHi, transcript.charAt(i - 1), scoring)
+      passB(r, cur, ptrs, i * width - (ci - band), jLo, jHi, i, scoring)
+      cells += len
       i += 1
     }
     cells
+  }
+
+  /** Pass A of [[fillBandInt]] over columns [jLo, jHi] of one row: reads the
+    * previous row (`r(prev..prev+2)`, its shifted copy in `r(6..8)`) and
+    * writes mat and x of the row, A into `r(9)` and the pointer bits (mat in
+    * 0-1, x in 2-3, A's in 4) into `r(10)`. A method of its own: compiled
+    * inside the row loop of [[fillBandInt]], C2 left this loop scalar (the
+    * whole fill measured about 3× slower).
+    */
+  private def passA(
+      r: Array[Array[Int]],
+      oc: Array[Int],
+      prev: Int,
+      jLo: Int,
+      jHi: Int,
+      ti: Int,
+      scoring: Scoring): Unit = {
+    val matPrev = r(prev); val xPrev = r(prev + 1); val yPrev = r(prev + 2)
+    val matCur = r(3 - prev); val xCur = r(4 - prev)
+    val sm = r(6); val sx = r(7); val sy = r(8); val aRow = r(9); val bits = r(10)
+    val gex = scoring.gapExtendX.toInt
+    val goxGex = (scoring.gapOpenX + scoring.gapExtendX).toInt
+    val goyGey = (scoring.gapOpenY + scoring.gapExtendY).toInt
+    val matchS = scoring.matchScore.toInt
+    val mmDelta = scoring.mismatch.toInt - matchS
+    var j = jLo
+    while (j <= jHi) {
+      val msc = matchS + (mmDelta & nz(ti - oc(j)))
+
+      val m0 = sm(j); val m1 = sx(j); val m2 = sy(j)
+      var k = (m0 - m1) >> 31
+      var mVal = m0 + ((m1 - m0) & k)
+      var mBest = k & 1
+      k = (mVal - m2) >> 31
+      mVal += (m2 - mVal) & k
+      mBest += (2 - mBest) & k
+      val mOut = mVal + (msc & nz(mVal ^ NI))
+
+      val pm = matPrev(j); val px = xPrev(j); val py = yPrev(j)
+      val x0 = pm + (goxGex & nz(pm ^ NI))
+      val x1 = px + (gex & nz(px ^ NI))
+      val x2 = py + (goxGex & nz(py ^ NI))
+      k = (x0 - x1) >> 31
+      var xVal = x0 + ((x1 - x0) & k)
+      var xBest = k & 1
+      k = (xVal - x2) >> 31
+      xVal += (x2 - xVal) & k
+      xBest += (2 - xBest) & k
+
+      val y0 = mOut + (goyGey & nz(mOut ^ NI))
+      val y1 = xVal + (goyGey & nz(xVal ^ NI))
+      k = (y0 - y1) >> 31
+
+      matCur(j) = mOut; xCur(j) = xVal
+      aRow(j) = y0 + ((y1 - y0) & k)
+      bits(j) = mBest | (xBest << 2) | ((k & 1) << 4)
+      j += 1
+    }
+  }
+
+  /** Pass B of [[fillBandInt]]: the y chain of row i over [jLo, jHi], into
+    * `r(cur + 2)`, and the packed pointer bytes at `ptrs(rowOff + j)`. A
+    * plain `if` measured faster here than a branch-free select, and a method
+    * of its own faster than the same loop inside the row loop.
+    */
+  private def passB(
+      r: Array[Array[Int]],
+      cur: Int,
+      ptrs: Array[Byte],
+      rowOff: Int,
+      jLo: Int,
+      jHi: Int,
+      i: Int,
+      scoring: Scoring): Unit = {
+    val yCur = r(cur + 2); val aRow = r(9); val bits = r(10)
+    val gey = scoring.gapExtendY.toInt
+    // the left neighbour is col 0 (mat = y = -i, x = NI) or a cell outside
+    // the band (all NI)
+    var yVal = if (jLo == 1) -i else NI
+    var aVal = if (jLo == 1) -i + (scoring.gapOpenY + scoring.gapExtendY).toInt else NI
+    var aBit = 0 // A's pointer bit, already in the y field
+    var j = jLo
+    while (j <= jHi) {
+      val y2 = yVal + (gey & nz(yVal ^ NI))
+      val b = bits(j)
+      if (y2 > aVal) { yVal = y2; ptrs(rowOff + j) = ((b & 15) | 32).toByte }
+      else { yVal = aVal; ptrs(rowOff + j) = ((b & 15) | aBit).toByte }
+      yCur(j) = yVal
+      aVal = aRow(j); aBit = b & 16
+      j += 1
+    }
   }
 }

@@ -23,11 +23,12 @@ final case class Scoring(
   @inline def score(a: Char, b: Char): Double =
     if (a == b) matchScore else mismatch
 
-  /** All six parameters are whole numbers of sane magnitude — the gate for
-    * the integer-arithmetic DP fill (every reference scoring system is
-    * integral: the default, the 4/6-arity forms, the whole grid). The Long
-    * fill absorbs at its NegInf sentinel exactly like IEEE absorbs at
-    * -1e100, so outputs are identical — see NeedlemanWunsch.fillBandLong.
+  /** All six parameters are whole numbers of sane magnitude — the first
+    * gate for the Int DP fill (every reference scoring system is integral:
+    * the default, the 4/6-arity forms, the whole grid). The Int fill also
+    * needs the page's path scores to fit its bound, and absorbs at its
+    * NegInf sentinel exactly like IEEE absorbs at -1e100, so outputs are
+    * identical — see NeedlemanWunsch.intFillFits and fillBandInt.
     */
   val isIntegral: Boolean =
     Seq(matchScore, mismatch, gapOpenX, gapOpenY, gapExtendX, gapExtendY)

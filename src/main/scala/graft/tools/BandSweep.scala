@@ -7,7 +7,8 @@ import graft.align._
   * strings of at most 60 chars; then a realistic-length leg: 2,000 noisy
   * copies of 300–3,000 chars through the banded path with the default
   * scoring against the full matrix, counting the pages accepted from the
-  * single widest fill and the cells filled.
+  * single widest fill and the cells filled, and the same banded path with
+  * the Double fill forced against the Int fill it takes by default.
   *
   * `runMain graft.tools.BandSweep [casesPerShortLeg=5000] [agree=2]`
   */
@@ -81,6 +82,7 @@ object BandSweep {
     val widest = NeedlemanWunsch.DefaultInitialBand << NeedlemanWunsch.AgreementStreak
     val ws = new NeedlemanWunsch.Workspace
     var longFail = 0
+    var fillFail = 0
     var single = 0
     var cells = 0L
     var fullCells = 0L
@@ -93,6 +95,9 @@ object BandSweep {
       val r = NeedlemanWunsch.alignCharsBanded(t, noisy, ws = ws)
       val full = NeedlemanWunsch.alignCharsFull(t, noisy, Scoring.Default, ws)
       if (r.traAlign != full.traAlign || r.ocrAlign != full.ocrAlign) longFail += 1
+      if (r != NeedlemanWunsch.alignCharsBandedWith(t, noisy, Scoring.Default,
+          NeedlemanWunsch.DefaultInitialBand, ws, Int.MaxValue - 8L, forceDoubleFill = true))
+        fillFail += 1
       if (r.bandUsed == widest &&
           r.cellsFilled == NeedlemanWunsch.alignCharsWithBand(t, noisy, Scoring.Default, widest, ws).cells)
         single += 1
@@ -102,5 +107,6 @@ object BandSweep {
     println(s"realistic-long-300-3000-default: $longFail/$longCases disagree vs full matrix; " +
       s"$single/$longCases accepted from the single widest fill (band $widest); " +
       s"banded cells $cells, full-matrix cells $fullCells")
+    println(s"realistic-long-300-3000-default: $fillFail/$longCases disagree, Int fill vs Double fill")
   }
 }

@@ -53,22 +53,50 @@ object AlignmentPropertiesSpec extends Properties("alignment") {
       r.traAlign == ta.mkString && r.ocrAlign == oa.mkString
     }
 
-  // the integer-ALU fill (production path for every integral scoring) must
-  // equal the Double fill bit-for-bit on identical inputs — the NegInfL
-  // absorption branch mirrors IEEE absorption at -1e100 exactly
+  // the gate's signs widened: positive gap opens and extends, mismatch >= 0
+  // and match <= 0 reach the absorption and tie cases the default signs miss
+  private val wideScoringGen: Gen[Scoring] = for {
+    m <- Gen.chooseNum(-6, 12)
+    mm <- Gen.chooseNum(-12, 6)
+    gox <- Gen.chooseNum(-9, 4)
+    goy <- Gen.chooseNum(-9, 4)
+    gex <- Gen.chooseNum(-5, 3)
+    gey <- Gen.chooseNum(-5, 3)
+  } yield Scoring(m, mm, gox, goy, gex, gey)
+
+  private def doubleFill(a: String, b: String, sc: Scoring, band: Int): AlignResult =
+    NeedlemanWunsch.alignCharsBandedWith(a, b, sc, band, new NeedlemanWunsch.Workspace,
+      Int.MaxValue - 8L, forceDoubleFill = true)
+
+  // the Int fill (production path for every integral scoring within its
+  // bound) must equal the Double fill bit-for-bit on identical inputs — the
+  // NI absorption masks mirror IEEE absorption at -1e100 exactly
   property("integer fill == double fill (identical inputs, all scorings)") =
-    forAll(strGen, strGen, scoringGen, Gen.oneOf(16, 24, 64)) {
+    forAll(strGen, strGen, Gen.oneOf(scoringGen, wideScoringGen), Gen.oneOf(16, 24, 64)) {
       (a: String, b: String, sc: Scoring, band: Int) =>
-        val long = NeedlemanWunsch.alignCharsBanded(a, b, sc, band)
-        val dbl =
-          try {
-            NeedlemanWunsch.forceDoubleFill = true
-            NeedlemanWunsch.alignCharsBanded(a, b, sc, band)
-          } finally NeedlemanWunsch.forceDoubleFill = false
-        (long.traAlign == dbl.traAlign && long.ocrAlign == dbl.ocrAlign &&
-          long.bandUsed == dbl.bandUsed) :|
-          s"long=(${long.traAlign},${long.ocrAlign}) dbl=(${dbl.traAlign},${dbl.ocrAlign})"
+        val int = NeedlemanWunsch.alignCharsBanded(a, b, sc, band)
+        val dbl = doubleFill(a, b, sc, band)
+        (int.traAlign == dbl.traAlign && int.ocrAlign == dbl.ocrAlign &&
+          int.bandUsed == dbl.bandUsed) :|
+          s"int=(${int.traAlign},${int.ocrAlign}) dbl=(${dbl.traAlign},${dbl.ocrAlign})"
     }
+
+  // C = 2^20 puts the bound (n+m)·C < 2^28 at n+m = 256 (sentinels
+  // included): 100 transcript chars against 153 stream chars take the Int
+  // fill, against 154 the Double fill; both sides equal the Double fill
+  property("Int bound: the dispatch picks Int below it, Double at it") = Prop.delay {
+    val sc = Scoring(1 << 20, -(1 << 20), -(1 << 19), -(1 << 19), -(1 << 19), -(1 << 19))
+    val rng = new scala.util.Random(7)
+    def text(len: Int) = Seq.fill(len)("abcde "(rng.nextInt(6))).mkString
+    val a = text(100)
+    Prop.all(Seq(153 -> true, 154 -> false).map { case (len, int) =>
+      val b = text(len)
+      val got = NeedlemanWunsch.alignCharsBanded(a, b, sc, 16)
+      (NeedlemanWunsch.intFillFits(sc, a.length + 1, b.length + 1) == int) :|
+        s"stream $len: Int fill expected $int" &&
+      (got == doubleFill(a, b, sc, 16)) :| s"stream $len: $got"
+    }: _*)
+  }
 
   // non-integral scorings take the Double fill natively: self-consistency
   // banded == full (the token anchor only accepts the same Double arithmetic)

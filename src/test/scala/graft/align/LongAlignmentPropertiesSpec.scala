@@ -14,7 +14,7 @@ object LongAlignmentPropertiesSpec extends Properties("alignment.long") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withInitialSeed(org.scalacheck.rng.Seed(20261017L)).withMinSuccessfulTests(60)
 
-  import NeedlemanWunsch.{AgreementStreak, MinBand, Workspace, alignCharsWithBand}
+  import NeedlemanWunsch.{AgreementStreak, Fill, MinBand, Workspace, alignCharsWithBand}
 
   final case class Case(a: String, b: String, sc: Scoring, band: Int, maxPtrCells: Long) {
     override def toString: String =
@@ -132,8 +132,9 @@ object LongAlignmentPropertiesSpec extends Properties("alignment.long") {
     throw new IllegalStateException("unreachable")
   }
 
-  private def banded(c: Case): AlignResult =
-    NeedlemanWunsch.alignCharsBanded(c.a, c.b, c.sc, c.band, maxPtrCells = c.maxPtrCells)
+  private def banded(c: Case, forceDoubleFill: Boolean = false): AlignResult =
+    NeedlemanWunsch.alignCharsBandedWith(c.a, c.b, c.sc, c.band, new Workspace, c.maxPtrCells,
+      forceDoubleFill)
 
   // (a) the lemma of alignCharsBanded, checked directly on both ends of the
   // proven range, their neighbours and bands a sixth of the range apart
@@ -165,17 +166,65 @@ object LongAlignmentPropertiesSpec extends Properties("alignment.long") {
       (got.cellsFilled <= want.cellsFilled) :| s"cells ${got.cellsFilled} > ${want.cellsFilled}"
     }
 
+  /** The scorings of [[caseGen]] plus integral ones with the gate's signs
+    * widened: positive gap opens and extends, mismatch ≥ 0, match ≤ 0.
+    */
+  private val wideCaseGen: Gen[Case] = for {
+    c <- caseGen
+    wide <- Gen.oneOf(false, true)
+    m <- Gen.chooseNum(-6, 12)
+    mm <- Gen.chooseNum(-12, 6)
+    gox <- Gen.chooseNum(-9, 4)
+    goy <- Gen.chooseNum(-9, 4)
+    gex <- Gen.chooseNum(-5, 3)
+    gey <- Gen.chooseNum(-5, 3)
+  } yield if (wide) c.copy(sc = Scoring(m, mm, gox, goy, gex, gey)) else c
+
   // (c) the integer fill equals the double fill on long inputs too
   property("integer fill == double fill (long inputs)") =
-    forAll(caseGen) { c =>
-      val long = banded(c)
-      val dbl =
-        try {
-          NeedlemanWunsch.forceDoubleFill = true
-          banded(c)
-        } finally NeedlemanWunsch.forceDoubleFill = false
-      (long == dbl) :| s"long=$long dbl=$dbl"
+    forAll(wideCaseGen) { c =>
+      val int = banded(c)
+      val dbl = banded(c, forceDoubleFill = true)
+      (int == dbl) :| s"int=$int dbl=$dbl"
     }
+
+  /** One fill's result and its in-band pointer bytes. */
+  private def fillWithPtrs(c: Case, band: Int, forceDoubleFill: Boolean): (Fill, Seq[Byte]) = {
+    val ws = new Workspace
+    val f = alignCharsWithBand(c.a, c.b, c.sc, band, ws, forceDoubleFill)
+    (f, ws.ptrs.take((c.a.length + 1) * (2 * band + 1)).toSeq)
+  }
+
+  private def textOf(len: Int, seed: Long): String = {
+    val rng = new scala.util.Random(seed)
+    Seq.fill(len)("aeioudmnst "(rng.nextInt(11))).mkString
+  }
+
+  // 40 chars against 4,000 at band 16: the centre line climbs 100 columns a
+  // row, so no band row touches the one before it and every state past row
+  // 1 has only NegInf candidates — the absorption ties alone decide the
+  // pointers, compared here byte for byte
+  property("integer fill == double fill: steep slope, band rows do not touch") = Prop.delay {
+    val a = textOf(40, 1)
+    val b = textOf(4000, 2)
+    Prop.all(Seq(Scoring.Default, Scoring(-2, 3, 2, -3, 1, 2), Scoring(5, 0, 3, 4, -2, 3))
+      .flatMap(sc => Seq(16, 64, 128).map(band => Case(a, b, sc, band, Int.MaxValue - 8L)))
+      .map { c =>
+        (fillWithPtrs(c, c.band, false) == fillWithPtrs(c, c.band, true)) :| s"fill $c" &&
+        (banded(c) == banded(c, forceDoubleFill = true)) :| s"banded $c"
+      }: _*)
+  }
+
+  // far past the Int bound ((n+m)·C ≈ 2^32.3 with C = 2^20) the dispatch
+  // takes the Double fill; an Int fill there would wrap (2,460 matches
+  // alone score 2^31.3)
+  property("large scoring beyond the Int bound takes the double fill") = Prop.delay {
+    val a = textOf(2500, 3)
+    val sc = Scoring(1 << 20, -(1 << 20), -(1 << 19), -(1 << 19), -(1 << 19), -(1 << 19))
+    val c = Case(a, a.take(1200) + textOf(40, 4) + a.drop(1260), sc, 16, Int.MaxValue - 8L)
+    (banded(c) == banded(c, forceDoubleFill = true)) :| s"banded $c" &&
+    !NeedlemanWunsch.intFillFits(sc, a.length + 1, c.b.length + 1) :| "Int fill chosen"
+  }
 
   // The corner clause needs rare inputs (a search of 150,000 pairs with
   // trailing gap runs found three), so it gets a fixed case: band 64's
