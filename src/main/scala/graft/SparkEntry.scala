@@ -209,12 +209,6 @@ object SparkEntry {
     }.toDF("url", "html")
   }
 
-  /** Session-memoized link-edge table shared by the five link-graph
-    * queries: each would otherwise re-synthesize and re-parse every page
-    * (the typed-lambda plans are never `sameResult`-equal, so the
-    * CacheRegistry's plan dedupe can't share them). Keyed by
-    * (applicationId, sfDir), same convention as the dedup-cluster memo.
-    */
   /** The RobotsGen fixture as a (host, robots_txt) table — 12 tiny rows
     * (host 11 publishes none; its urls take the allowed-by-default path).
     */
@@ -274,33 +268,14 @@ object SparkEntry {
   private def httpWarcGzArchives(s: SparkSession, dir: String): DataFrame =
     httpWarcArchives(s, dir, gzip = true)
 
-  private val linkEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def linkEdgesFor(s: SparkSession, dir: String): DataFrame =
-    refreshMemo(linkEdgeCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ =>
-        graft.ops.LinkGraph.edges(linkPages(s, dir))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
-
-  /** Keep a session-memoized persisted DataFrame actually CACHED across the
-    * whole bench sweep (optimization round 7): the two session memos
-    * (aligned table, link edges) are deliberately EXEMPT from
-    * CacheRegistry's bounded FIFO — the sort-child persists
-    * ([[cacheSortChild]]) register 1–2 entries per query pass, so a
-    * registered memo is evicted long before its alphabetically-distant
-    * consumers run and every later consumer silently recomputes the full
-    * upstream (the probe showed the link parse re-running per graph
-    * query, and the align kernel re-running per q_mei_* pass). The memos
-    * are session-lifetime by design, two frames of vertex/span scale —
-    * exactly what the registry's bound exists to protect, not to evict.
-    * The re-persist guard keeps them resilient if anything else
-    * unpersists them.
+  /** Link-edge table shared by the link-graph and crawl queries: each
+    * would otherwise re-synthesize and re-parse every page (the
+    * typed-lambda plans are never `sameResult`-equal, so the
+    * CacheRegistry's plan dedupe can't share them).
     */
-  private def refreshMemo(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df
-  }
+  private def linkEdgesFor(s: SparkSession, dir: String): DataFrame =
+    SessionMemo.persisted(s, "link_edges", dir)(
+      graft.ops.LinkGraph.edges(linkPages(s, dir)))
 
   /** Fan a below-core-parallelism frame out to the session's cores
     * (optimization round 7): the fixture parquet is ONE unsplittable row
@@ -326,24 +301,18 @@ object SparkEntry {
     graft.ops.CacheRegistry.register(
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Session-memoized SALTED aligned table shared by the five alignment
-    * consumers (q_align_spans, q_align_metrics, q_doc_json, q_mei_assign,
-    * q_mei_xml): `align()` creates fresh accumulators per call, so every
-    * call's typed plan is unique and neither the CacheManager nor
-    * CacheRegistry's plan dedupe can ever share kernel output across calls
-    * — the round-7 stage probe showed every consumer PASS re-running the
-    * full kernel (7 s executor CPU each) despite the persisted spans.
-    * Same memo convention as linkEdgesFor; the flagship bench leg times
+  /** Salted aligned table shared by the five alignment consumers
+    * (q_align_spans, q_align_metrics, q_doc_json, q_mei_assign, q_mei_xml):
+    * `align()` creates fresh accumulators per call, so every call's typed
+    * plan is unique and neither the CacheManager nor CacheRegistry's plan
+    * dedupe can share kernel output across calls — without the memo every
+    * consumer pass re-runs the full kernel. The flagship bench leg times
     * `AlignJob.align` directly and never touches this memo.
     */
-  private val alignedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def alignedFor(s: SparkSession, dir: String): DataFrame =
-    refreshMemo(alignedCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ =>
-        AlignJob.align(AlignJob.synthPages(s, dir),
-          saltPartitions = s.sparkContext.defaultParallelism).toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
+    SessionMemo.persisted(s, "aligned", dir)(
+      AlignJob.align(AlignJob.synthPages(s, dir),
+        saltPartitions = s.sparkContext.defaultParallelism).toDF())
 
   private def rmTree(p: String): Unit = {
     val path = java.nio.file.Paths.get(p)
@@ -431,79 +400,64 @@ object SparkEntry {
     d.unionAll(mutated)
   }
 
-  /** Session-memoized near-dup cluster table (shared by q_dedup_clusters
-    * and q_dedup_survivors): `Dedup.nearDupClusters` returns a projection
-    * of an eagerly CHECKPOINTED label table, whose plan is a fresh
-    * LogicalRDD every call — the CacheRegistry's plan-identity dedupe (how
-    * q_mei_assign/q_mei_xml share spans) cannot see through it, so without
-    * this memo each consumer would re-run the full minhash+simhash pair
-    * pipelines. Keyed by (applicationId, sfDir); the checkpointed blocks it
-    * pins are label-table-sized (pairs, not corpus).
+  /** Near-dup cluster table shared by q_dedup_clusters and
+    * q_dedup_survivors: `Dedup.nearDupClusters` returns a projection of an
+    * eagerly CHECKPOINTED label table, whose plan is a fresh LogicalRDD
+    * every call — CacheRegistry's plan-identity dedupe cannot see through
+    * it, so without the memo each consumer would re-run the full
+    * minhash+simhash pair pipelines. Not persisted: the checkpointed blocks
+    * it pins are label-table-sized (pairs, not corpus).
     */
-  private val dedupClusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def nearDupClustersFor(s: SparkSession, dir: String): DataFrame =
-    dedupClusterCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ => {
-        val corpus = docsWithNearDups(s, dir)
-        val pairs = Dedup.minhashNearDups(corpus, threshold = 0.5)
-          .select(col("doc_a"), col("doc_b"))
-          .unionAll(Dedup.simhashNearDups(corpus, keyChunks = 2)
-            .select(col("doc_a"), col("doc_b")))
-        Dedup.nearDupClusters(pairs)
-      })
+    SessionMemo(s, "near_dup_clusters", dir) {
+      val corpus = docsWithNearDups(s, dir)
+      val pairs = Dedup.minhashNearDups(corpus, threshold = 0.5)
+        .select(col("doc_a"), col("doc_b"))
+        .unionAll(Dedup.simhashNearDups(corpus, keyChunks = 2)
+          .select(col("doc_a"), col("doc_b")))
+      Dedup.nearDupClusters(pairs)
+    }
 
-  /** Session-memoized trained BPE merge list (shared by q_bpe_encode and
-    * q_tokenizer_pipeline): `Bpe.train` dispatches small vocabs to the
-    * exact incremental local path (one word-frequency job + collect) whose
-    * result is 10 immutable rows — without this memo each consumer re-runs
-    * the training (q_bpe_train itself still calls the op directly: it IS
-    * the row under test). Keyed by (applicationId, sfDir).
+  /** Trained unigram vocabulary for q_unigram_encode, collected into a
+    * local frame (q_unigram_train still calls the op directly: it IS the
+    * row under test).
     */
-  private val unigramCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def trainedUnigramFor(s: SparkSession, dir: String): DataFrame =
-    unigramCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ => {
-        val rows = graft.ops.Unigram.train(docs(s, dir)).collect().toSeq
-        import s.implicits._
-        rows.map(r => (r.getInt(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toDF("rank", "piece", "count", "lnprob")
-      })
+    SessionMemo(s, "unigram", dir) {
+      val rows = graft.ops.Unigram.train(docs(s, dir)).collect().toSeq
+      import s.implicits._
+      rows.map(r => (r.getInt(0), r.getString(1), r.getLong(2),
+        r.getDouble(3))).toDF("rank", "piece", "count", "lnprob")
+    }
 
-  // q_harmonic and q_crawl_budget share one exact-harmonic computation
-  // (the bounded local BFS is deterministic — same cache discipline as
-  // trainedMergesFor)
-  private val harmonicCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Double)]]()
+  /** Exact harmonic centrality shared by q_harmonic and q_crawl_budget:
+    * the bounded local BFS is deterministic, so its collected rows are
+    * memoized and turned back into a frame on each call.
+    */
   private def harmonicFor(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // unlike the model-scale tokenizer caches, this payload is
-    // vertex-scale — bound the ENTRY COUNT so a long-lived JVM cycling
-    // apps/dirs can't accumulate tables forever
-    if (harmonicCache.size > 4) harmonicCache.clear()
-    harmonicCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ =>
-        graft.ops.Centrality.harmonicExact(linkEdgesFor(s, dir))
-          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq)
+    SessionMemo(s, "harmonic", dir)(
+      graft.ops.Centrality.harmonicExact(linkEdgesFor(s, dir))
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq)
       .toDF("url", "harmonic")
   }
 
-  private val wordpieceModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.ops.Wordpiece.Model]()
+  /** Trained WordPiece model for q_wordpiece_encode. */
   private def trainedWordpieceFor(s: SparkSession, dir: String): graft.ops.Wordpiece.Model =
-    wordpieceModelCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ =>
-        graft.ops.Wordpiece.model(docs(s, dir), numMerges = 10, minSymCount = 2L))
+    SessionMemo(s, "wordpiece", dir)(
+      graft.ops.Wordpiece.model(docs(s, dir), numMerges = 10, minSymCount = 2L))
 
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
+  /** Trained BPE merge list shared by q_bpe_encode, q_tokenizer_pipeline
+    * and q_pipeline: `Bpe.train` dispatches small vocabs to the
+    * exact incremental local path (one word-frequency job + collect) whose
+    * result is 10 immutable rows (q_bpe_train itself still calls the op
+    * directly: it IS the row under test).
+    */
   private def trainedMergesFor(s: SparkSession, dir: String): Seq[(String, String)] =
-    bpeMergeCache.computeIfAbsent(
-      s.sparkContext.applicationId + "|" + dir, _ =>
-        graft.ops.Bpe.train(docs(s, dir), numMerges = 10)
-          .orderBy(col("merge_rank"))
-          .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
+    SessionMemo(s, "bpe_merges", dir)(
+      graft.ops.Bpe.train(docs(s, dir), numMerges = 10)
+        .orderBy(col("merge_rank"))
+        .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
 
   /** Deterministic url synthesis for the domain ops: the corpus table has
     * no url column, so derive one from source + doc_id (subdomain rotates
@@ -771,13 +725,10 @@ object SparkEntry {
     * pins `spark.sql.shuffle.partitions` tasks per consumer stage
     * regardless of data size — the iterative graph loops paid 32—64 fixed
     * tasks per round at any SF. Scale-adaptive by construction (AQE
-    * derives the count from bytes, not a constant); `GRAFT_TUNE=0` opts
-    * out.
+    * derives the count from bytes, not a constant).
     */
   private def applySessionTuning(s: SparkSession): Unit =
-    if (!sys.env.get("GRAFT_TUNE").contains("0")) {
-      s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    }
+    s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
 
   /** Persist the child of a query's final GLOBAL SORT (optimization round
     * 7, guide §5 caching): `orderBy` executes its child TWICE — once for
