@@ -13,17 +13,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   */
 object ScalingBench {
 
-  def makeSession(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Pages replicated k× with distinct urls/seeds — a bigger deterministic
     * corpus so per-run timing noise stays small.
     */
@@ -54,15 +43,15 @@ object ScalingBench {
 
     // warmup in a throwaway high-parallelism session (JIT the kernel so the
     // first measured run isn't penalized; half the measured volume)
-    val warm = makeSession(4 * nCores)
+    val warm = LocalSession(4 * nCores)
     run(warm, sfDir, math.max(1, k / 2))
     warm.stop()
 
-    val sN = makeSession(nCores)
+    val sN = LocalSession(nCores)
     val (docs, secN) = run(sN, sfDir, k)
     sN.stop()
 
-    val s4N = makeSession(4 * nCores)
+    val s4N = LocalSession(4 * nCores)
     val (_, sec4N) = run(s4N, sfDir, k)
     s4N.stop()
 

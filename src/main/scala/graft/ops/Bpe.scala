@@ -145,13 +145,7 @@ object Bpe {
       val ok = accepted.isEmpty ||
         (!universe(merged) && !batchMerged(merged) && effC > newPairCap &&
           (linkBound == 0L || effC > nextOrigC))
-      if (!ok) {
-        if (sys.env.contains("GRAFT_BPE_DEBUG"))
-          System.err.println(s"[bpe] stop at ${accepted.length}: cand=($l,$r,$c) " +
-            s"linkBound=$linkBound effC=$effC nextOrig=$nextOrigC " +
-            s"inUniverse=${universe(merged) || batchMerged(merged)} cap=$newPairCap")
-        stop = true
-      }
+      if (!ok) stop = true
       else {
         // merged-merged adjacency caps vs every accepted merge (both
         // orders, plus self): new pair (m_i, m_j) needs an original

@@ -121,15 +121,6 @@ object Centrality {
   /** The exact-path edge cap (shared by every oracle kernel here). */
   private val ExactModeEdgeCap = 5000000L
 
-  /** Opt-in per-round wall-clock tracing for the iterative loops
-    * (GRAFT_GRAPH_VERBOSE=1) — dev diagnostic for the optimization
-    * rounds; never on in the bench.
-    */
-  private val Verbose = sys.env.get("GRAFT_GRAPH_VERBOSE").contains("1")
-  @inline private def trace(op: String, round: Int, t0: Long, extra: => String = ""): Unit =
-    if (Verbose)
-      System.err.println(f"[graph] $op round=$round ${(System.nanoTime() - t0) / 1e9}%.2fs $extra")
-
   /** Run an iterative loop body under a SCALE-DERIVED shuffle layout
     * (optimization round 7, guide §2.2 "fewer, larger partitions" + the
     * round brief's "derive partitioning from input size, never a local
@@ -600,20 +591,16 @@ object Centrality {
       // (a join + full shuffle aggregation) feeds BOTH sides — without
       // this the planner only reuses the agg's input exchange and the
       // aggregation itself runs twice per round (VERDICT r6 wrong #2)
-      val t0 = System.nanoTime()
       val nm = componentsNbrMin(und, labels).persist()
       val (next, nextFiles) = Lineage.truncateTracked(
         componentsJump(nm)
           .select(col("url"), col("component"),
             (col("component") =!= col("__prev")).as("__chg")))
       nm.unpersist()
-      trace("components.ckpt", iter, t0)
       // fixpoint certificate over the CHECKPOINTED state: no join, no
       // shuffle — isEmpty short-circuits at the first changed row, and
       // only the final (converged) round pays a full scan
-      val t1 = System.nanoTime()
       converged = next.filter(col("__chg")).isEmpty
-      trace("components.conv", iter, t1, s"converged=$converged")
       superseded.unpersist()
       Lineage.deleteCheckpointFiles(superseded, supersededFiles)
       labels = next.select(col("url"), col("component"))
@@ -643,18 +630,14 @@ object Centrality {
     var k = 0
     var fixed = false
     while (k < iters && !fixed) {
-      val t0 = System.nanoTime()
       val (truncated, created) = Lineage.truncateTracked(lpaRound(und, state))
-      trace("lpa.ckpt", k, t0)
       // synchronous LPA is deterministic, so a round with ZERO label
       // changes makes every remaining round a no-op: stopping here is
       // bit-identical to running all `iters` rounds. The check is a scan
       // of the just-checkpointed state (isEmpty short-circuits at the
       // first changed row) — no join, no shuffle. Oscillating graphs
       // simply never trip it and still run the full `iters`.
-      val t1 = System.nanoTime()
       fixed = truncated.filter(col("__chg")).isEmpty
-      trace("lpa.conv", k, t1, s"fixed=$fixed")
       Lineage.deleteCheckpointFiles(truncated, prevCk)
       prevCk = created
       state = truncated.select(col("url"), col("community"))
@@ -732,17 +715,13 @@ object Centrality {
     var t = 1
     var fixed = false
     while (t <= iters && !fixed) {
-      val t0 = System.nanoTime()
       val (truncated, created) =
         Lineage.truncateTracked(harmonicRound(simple, state, t))
-      trace("harmonic.ckpt", t, t0)
       // HyperBall sketches are monotone (register-wise max): a round where
       // NO vertex's registers changed is a fixpoint — every remaining
       // round's est − prev_est increment is 0.0 and the state is
       // bit-identical to running all `iters` rounds. Scan, no join.
-      val t1 = System.nanoTime()
       fixed = truncated.filter(col("__chg")).isEmpty
-      trace("harmonic.conv", t, t1, s"fixed=$fixed")
       Lineage.deleteCheckpointFiles(truncated, prevCk)
       prevCk = created
       state = truncated.select(col("url"), col("regs"), col("prev_est"), col("h"))

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.LocalSession
 import graft.ops.{Dedup, Packing, Sampling, TextOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Two-parallelism scaling evidence for the CURATION/TRAINING op families
@@ -27,14 +28,7 @@ object CurationScaleCheck {
     // kReal=400 on sf0.1 ≈ 2M docs
     val kReal = if (args.length > 2) args(2).toInt else k
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
 
     // ~120k distinct documents: each replica re-ids and gets a replica
     // marker token so exact-dup ops see a real (not degenerate) corpus.
@@ -143,7 +137,7 @@ object CurationScaleCheck {
       import spark.implicits._
       force(corpus.select(col("doc_id"), col("text")).as[(Long, String)]
         .map { case (id, t) =>
-          val c = graft.align.Markdown.convert(graft.SparkEntry.structuredHtml(id, t))
+          val c = graft.align.Markdown.convert(graft.catalog.IngestQueries.structuredHtml(id, t))
           (id, c.markdown.length, c.nBlocks)
         }.toDF("doc_id", "md_len", "n_blocks"))
     }

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{LocalSession, SparkEntry}
 import graft.pipeline.AlignJob
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump formatted physical plans of the flagship job and representative
@@ -13,10 +12,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(4)
 
     val sb = new java.lang.StringBuilder
     sb.append("# PLANS — formatted physical plans (generated by graft.tools.PlanDump)\n\n")

@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{LocalSession, SparkEntry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -24,14 +24,7 @@ object PlanSnap {
     val names = args.drop(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession(cpus.toInt)
     val outDir = Paths.get(
       sys.env.getOrElse("GRAFT_REPO_DIR", "/root/repo"), "plans", "r07")
     Files.createDirectories(outDir)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSession
 
 /** Dev diagnostic: time individual SparkEntry queries (cold, then warm
   * reruns) without paying for the whole Bench sweep.
@@ -14,14 +14,7 @@ object QueryTime {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("GRAFT_QT_RUNS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64L * 1024 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
     // experiment knob: GRAFT_QT_CONF="spark.sql.adaptive.enabled=false,..."
     sys.env.get("GRAFT_QT_CONF").foreach(_.split(',').filter(_.contains("="))
       .foreach { kv =>

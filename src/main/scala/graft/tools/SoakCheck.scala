@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.ScalingBench
+import graft.{LocalSession, ScalingBench}
 
 /** Sustained-volume soak: the flagship align job over a k×-replicated corpus
   * in one job at local[32] — memory-stability and throughput evidence for
@@ -10,7 +10,7 @@ object SoakCheck {
   def main(args: Array[String]): Unit = {
     val k = if (args.nonEmpty) args(0).toInt else 64
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val spark = ScalingBench.makeSession(32)
+    val spark = LocalSession(32)
     ScalingBench.run(spark, sfDir, 1) // warm
     val (docs, sec) = ScalingBench.run(spark, sfDir, k)
     // measure the LIVE set, not accumulated garbage: without a collection

@@ -86,4 +86,22 @@ class Round4ShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("sort_array"),
       s"serializer must receive a pre-sorted array:\n${plan.take(3000)}")
   }
+
+  test("q_kn_perplexity and q_markdown sort a cached child: the kernel runs once") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    Seq("q_kn_perplexity", "q_markdown").foreach { name =>
+      val plan = graft.SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.inputPlan
+          case p => p
+        }
+      val sorts = plan.collect { case s: SortExec if s.global => s }
+      assert(sorts.size == 1, s"$name: expected one global sort:\n$plan")
+      val leaves = sorts.head.child.collectLeaves()
+      assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[InMemoryTableScanExec]),
+        s"$name: the global sort must read only an InMemoryRelation:\n$plan")
+    }
+  }
 }

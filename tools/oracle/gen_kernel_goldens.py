@@ -793,7 +793,7 @@ def main():
            "fp": [g.fingerprint(t) for t in docs.text.tolist()]})
 
     # ---- q_stratified_sample (hash-gate quota sampling; mirrors
-    #      graft.ops.Sampling.stratifiedSample with SparkEntry's quotas) ----
+    #      graft.ops.Sampling.stratifiedSample with graft.catalog.RelationalQueries' quotas) ----
     quotas = {"en": 0.25, "zh": 0.5, "de": 1.0}
     # threshold mirror of Sampling.stratifiedSample: floor(q*1e6 + 0.5)
     thresholds = {k: int(math.floor(q * 1e6 + 0.5)) for k, q in quotas.items()}
@@ -804,7 +804,7 @@ def main():
           {"doc_id": [x[0] for x in strows], "lang": [x[1] for x in strows]})
 
     # ---- q_domain_sample (domain-keyed hash-gate quota sampling; mirrors
-    #      SparkEntry.docsWithIntlUrls + the PSL-aware
+    #      graft.catalog.CrawlQueries.docsWithIntlUrls + the PSL-aware
     #      Domains.registeredDomain + the same Sampling gate keyed on
     #      registered domain). The suffix matching here is an INDEPENDENT
     #      implementation (longest endswith over the suffix table, not the

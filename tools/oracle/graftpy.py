@@ -557,7 +557,7 @@ def top_ngram_char_fraction(text, n):
 
 
 def reflow_for_repetition(text):
-    """Mirror of SparkEntry.reflowForRepetition (repetition fixture synth):
+    """Mirror of graft.catalog.TextQueries.reflowForRepetition (repetition fixture synth):
     6-token lines, 3-line paragraphs, every 4th line repeats its
     predecessor, every 5th paragraph repeats its predecessor."""
     toks = [t for t in text.split(" ") if t]
@@ -684,7 +684,7 @@ def mc_extract(html):
 
 
 def boilerplate_html(doc_id, text):
-    """Mirror of SparkEntry.boilerplateHtml — the main-content fixture."""
+    """Mirror of graft.catalog.IngestQueries.boilerplateHtml — the main-content fixture."""
     toks = [w for w in (text or "").split(" ") if w]
     paras = [" ".join(toks[i:i + 12]) for i in range(0, len(toks), 12)]
     parts = [
@@ -997,7 +997,7 @@ def mdx_convert(html):
 
 
 def mdx_structured_html(doc_id, text):
-    """Mirror of SparkEntry.structuredHtml — the Markdown/table fixture."""
+    """Mirror of graft.catalog.IngestQueries.structuredHtml — the Markdown/table fixture."""
     toks = [w for w in (text or "").split(" ") if w]
 
     def tk(i):
@@ -1141,7 +1141,7 @@ def lm_score(text, u, b, ctx):
 
 # ---- mojibake fixture + clean-room repair (q_fix_encoding) ----------------
 # Corruption is a SHARED deterministic convention with
-# SparkEntry.mojibakeText; the repair mirrors graft.ops.Mojibake's spec
+# graft.catalog.IngestQueries.mojibakeText; the repair mirrors graft.ops.Mojibake's spec
 # (strict latin1->utf8 round-trip, lead-byte guard, <=2 passes)
 # independently in Python.
 
@@ -1484,7 +1484,7 @@ def lg_pagerank(edge_rows, iters=20, damping=0.85):
 
 
 # ---------------- Scripts (writing-system mix) -----------------------------
-# Clean-room mirror of graft/ops/Scripts.scala + SparkEntry.scriptText.
+# Clean-room mirror of graft/ops/Scripts.scala + graft.catalog.TextQueries.scriptText.
 
 SC_BASES = {"zh": (0x4E00, 26), "es": (0x0430, 26),
             "de": (0x03B1, 25), "fr": (0x0627, 26)}
@@ -1923,7 +1923,7 @@ def bm25_idf(n, df):
 
 def bm25_query_terms(text):
     """Fixture convention: first 3 distinct >=5-char tokens, appearance
-    order (SparkEntry.bm25Queries)."""
+    order (graft.catalog.DedupQueries.bm25Queries)."""
     seen = []
     for w in (text or "").split(" "):
         if len(w) >= 5 and w not in seen and len(seen) < 3:
@@ -1983,7 +1983,7 @@ def bm25_topk(doc_items, query_items, k=10):
 
 
 # ---------------- Sentences -----------------------------------------------
-# Shared fixture convention (SparkEntry.sentenceizeText) + clean-room
+# Shared fixture convention (graft.catalog.TextQueries.sentenceizeText) + clean-room
 # mirror of graft/ops/Sentences.scala's pinned boundary spec.
 
 SENT_ABBREV = {"mr", "mrs", "ms", "dr", "prof", "st", "vs", "etc", "eg",
@@ -2101,7 +2101,7 @@ def sent_split(text):
 
 
 # ---------------- WARC --------------------------------------------------
-# Shared archive-fixture convention (SparkEntry.warcArchives) + clean-room
+# Shared archive-fixture convention (graft.catalog.IngestQueries.warcArchives) + clean-room
 # mirror of graft/ops/Warc.scala's pinned byte-level parse spec.
 
 import datetime as _dt
@@ -2938,7 +2938,7 @@ FD_HREF_RE = re.compile(r"\bhref[ \t\n\r\f]*=[ \t\n\r\f]*(\"([^\"]*)\"|'([^']*)'
 
 
 def fd_xml_for(doc_id, text):
-    """Mirror of SparkEntry.feedXml — the RSS/Atom fixture."""
+    """Mirror of graft.catalog.IngestQueries.feedXml — the RSS/Atom fixture."""
     toks = [w for w in (text or "").split(" ") if w]
 
     def tk(i):
