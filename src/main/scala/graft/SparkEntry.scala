@@ -214,15 +214,19 @@ object SparkEntry {
     s"$base/$own"
   }
 
-  /** The harness of the streaming batch-equivalence queries: run `stream`
-    * to completion (AvailableNow) into `$tmp/out` under 4 shuffle
-    * partitions, then read back what its sink wrote. Semantics are
-    * partition-count-independent (see `withShufflePartitions`).
+  /** The harness of the streaming batch-equivalence queries: build
+    * `stream` on a clone of `s` with 4 shuffle partitions
+    * ([[org.apache.spark.sql.GraftSqlBridge.withConf]]; `s`'s own conf is
+    * not written), run it to completion (AvailableNow) into `$tmp/out`,
+    * then read back on `s` what its sink wrote. A stateful stream keeps one
+    * state store per shuffle partition, and the count binds at stream start
+    * (it is frozen into the fresh checkpoint), so 4 sizes only this run;
+    * results are partition-count-independent.
     */
   private[graft] def drainStream(s: SparkSession, tmp: String)(
-      stream: => DataFrame): DataFrame = {
-    StreamingJobs.withShufflePartitions(s, 4) {
-      StreamingJobs.runAvailableNow(stream, s"$tmp/out")
+      stream: SparkSession => DataFrame): DataFrame = {
+    org.apache.spark.sql.GraftSqlBridge.withConf(s, "spark.sql.shuffle.partitions" -> "4") { c =>
+      StreamingJobs.runAvailableNow(stream(c), s"$tmp/out")
     }
     s.read.parquet(s"$tmp/out/data")
   }

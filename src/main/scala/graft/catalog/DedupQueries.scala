@@ -142,8 +142,8 @@ object DedupQueries {
       docsWithExactDups(s, dir)
         .withColumn("ts", lit("2026-01-01 00:00:00").cast("timestamp"))
         .write.parquet(s"$tmp/docs")
-      drainStream(s, tmp)(
-        graft.streaming.StreamingJobs.dedupDocsStream(s, s"$tmp/docs",
+      drainStream(s, tmp)(c =>
+        graft.streaming.StreamingJobs.dedupDocsStream(c, s"$tmp/docs",
           horizon = "3650 days"))
     },
 
@@ -304,9 +304,9 @@ object DedupQueries {
       val tmp = scratchDir(s, "incr_stream")
       val prior = docs(s, dir).select(col("doc_id"), col("text"))
       newerCrawl(prior).write.parquet(s"$tmp/newer")
-      drainStream(s, tmp)(
+      drainStream(s, tmp)(c =>
         graft.streaming.StreamingJobs.incrementalDedupStream(
-          s, s"$tmp/newer", prior))
+          c, s"$tmp/newer", prior))
         .select(col("doc_id"))
         .orderBy(col("doc_id"))
     },
@@ -403,9 +403,9 @@ object DedupQueries {
       val tmp = scratchDir(s, "decontam_stream")
       docs(s, dir).select(col("doc_id"), col("text"))
         .write.parquet(s"$tmp/training")
-      drainStream(s, tmp)(
+      drainStream(s, tmp)(c =>
         graft.streaming.StreamingJobs.decontaminateStream(
-          s, s"$tmp/training", decontamEvalCorpus(s, dir), threshold = 0.5))
+          c, s"$tmp/training", decontamEvalCorpus(s, dir), threshold = 0.5))
         .select(col("doc_id"))
         .orderBy(col("doc_id"))
     },

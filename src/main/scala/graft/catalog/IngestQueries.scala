@@ -311,8 +311,8 @@ object IngestQueries {
         .map { case (id, t) => (id, structuredHtml(id, t)) }
         .toDF("doc_id", "html")
         .write.parquet(s"$tmp/pages")
-      drainStream(s, tmp)(
-        graft.streaming.StreamingJobs.markdownStream(s, s"$tmp/pages"))
+      drainStream(s, tmp)(c =>
+        graft.streaming.StreamingJobs.markdownStream(c, s"$tmp/pages"))
         .orderBy(col("doc_id"))
     },
 
@@ -515,8 +515,8 @@ object IngestQueries {
     Query("q_ingest_stream", golden("q_warc_charset")) { (s, dir) =>
       val tmp = scratchDir(s, "ingest_stream")
       charsetArchives(s, dir).write.parquet(s"$tmp/archives")
-      drainStream(s, tmp)(
-        graft.streaming.StreamingJobs.ingestStream(s, s"$tmp/archives"))
+      drainStream(s, tmp)(c =>
+        graft.streaming.StreamingJobs.ingestStream(c, s"$tmp/archives"))
         .orderBy(col("archive_id"), col("rec_offset"))
     },
 

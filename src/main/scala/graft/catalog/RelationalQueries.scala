@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft.SparkEntry.{docs, tbl, fanOut, scratchDir, drainStream}
 import graft.pipeline.Functions
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -264,16 +264,18 @@ object RelationalQueries {
       val tmp = scratchDir(s, "sessionize_stream")
       val src = tbl(s, dir, "events")
       src.coalesce(1).write.parquet(s"$tmp/events")
-      val stream = s.readStream.schema(src.schema).parquet(s"$tmp/events")
-      drainStream(s, tmp)(
-        graft.streaming.StreamingJobs
-          .sessionizeStream(stream, watermarkDelay = "3650 days").toDF())
+      drainStream(s, tmp)(c =>
+        graft.streaming.StreamingJobs.sessionizeStream(
+          c.readStream.schema(src.schema).parquet(s"$tmp/events"),
+          watermarkDelay = "3650 days").toDF())
         .select(col("user_id"), col("session_start_us"),
           col("session_end_us"), col("n_events"))
     },
 
     // watermarked tumbling-window aggregation, Complete mode to a memory
-    // sink: the full window table equals the batch aggregation
+    // sink: the full window table equals the batch aggregation. The stream
+    // runs on a 4-partition clone of `s` (the state stores' count, as in
+    // `drainStream`), and the table is re-homed to `s`
     Query("q_window_stream",
       "SELECT epoch_us(time_bucket(INTERVAL '1 minute', ts)) AS window_start_us, " +
         "event_type, count(*) AS n_events, " +
@@ -282,11 +284,12 @@ object RelationalQueries {
       val tmp = scratchDir(s, "window_stream")
       val src = tbl(s, dir, "events")
       src.write.parquet(s"$tmp/events")
-      val stream = s.readStream.schema(src.schema).parquet(s"$tmp/events")
-      graft.streaming.StreamingJobs.withShufflePartitions(s, 4) {
-        graft.streaming.StreamingJobs.runCompleteToMemory(
-          graft.streaming.StreamingJobs.eventWindowStats(stream),
+      GraftSqlBridge.withConf(s, "spark.sql.shuffle.partitions" -> "4") { c =>
+        val window = graft.streaming.StreamingJobs.runCompleteToMemory(
+          graft.streaming.StreamingJobs.eventWindowStats(
+            c.readStream.schema(src.schema).parquet(s"$tmp/events")),
           "graft_window_stream")
+        GraftSqlBridge.ofRows(s, window.queryExecution.analyzed)
       }
     },
 
@@ -322,8 +325,8 @@ object RelationalQueries {
       val tmp = scratchDir(s, "asof_stream")
       val ev = tbl(s, dir, "events")
       asofProbes(ev).write.mode("overwrite").parquet(s"$tmp/probes")
-      drainStream(s, tmp)(
-        graft.streaming.StreamingJobs.asofStream(s, s"$tmp/probes",
+      drainStream(s, tmp)(c =>
+        graft.streaming.StreamingJobs.asofStream(c, s"$tmp/probes",
           asofSnaps(ev)))
         .orderBy(col("event_id"))
     },

@@ -313,9 +313,9 @@ object TextQueries {
       val tmp = scratchDir(s, "blocklist_stream")
       docs(s, dir).select(col("doc_id"), col("text"))
         .write.parquet(s"$tmp/docs")
-      drainStream(s, tmp)(
+      drainStream(s, tmp)(c =>
         graft.streaming.StreamingJobs.blocklistStream(
-          s, s"$tmp/docs", BlocklistPhrases, maxMatches = 2))
+          c, s"$tmp/docs", BlocklistPhrases, maxMatches = 2))
         .orderBy(col("doc_id"))
     },
 

@@ -2,7 +2,7 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, GraftSqlBridge}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
@@ -136,24 +136,23 @@ object Centrality {
     * parallelism and the body runs UNCHANGED (AQE on, its skew handling
     * intact) — the dispatch is data-driven, same discipline as the
     * smallInputThreshold windows.
+    *
+    * The small-state overrides live in a session clone
+    * ([[org.apache.spark.sql.GraftSqlBridge.withConf]]), never in the
+    * caller's conf: `loop` gets the edges re-homed into the clone, and its
+    * result is re-homed to the caller's session.
     */
-  private def withLoopShuffleLayout[T](
-      spark: org.apache.spark.sql.SparkSession, stateRows: Long)(body: => T): T = {
+  private[graft] def withLoopShuffleLayout(edgesDf: DataFrame, stateRows: Long)(
+      loop: DataFrame => DataFrame): DataFrame = {
+    val spark = edgesDf.sparkSession
     val targetRowsPerPartition = 2000000L
     val derived = math.max(1L, (stateRows + targetRowsPerPartition - 1) / targetRowsPerPartition)
-    if (derived >= spark.sparkContext.defaultParallelism) body
-    else {
-      val kAqe = "spark.sql.adaptive.enabled"
-      val kPart = "spark.sql.shuffle.partitions"
-      val prevAqe = spark.conf.get(kAqe)
-      val prevPart = spark.conf.get(kPart)
-      spark.conf.set(kAqe, "false")
-      spark.conf.set(kPart, derived.toString)
-      try body
-      finally {
-        spark.conf.set(kAqe, prevAqe)
-        spark.conf.set(kPart, prevPart)
-      }
+    if (derived >= spark.sparkContext.defaultParallelism) loop(edgesDf)
+    else GraftSqlBridge.withConf(spark,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> derived.toString) { clone =>
+      val out = loop(GraftSqlBridge.ofRows(clone, edgesDf.queryExecution.analyzed))
+      GraftSqlBridge.ofRows(spark, out.queryExecution.analyzed)
     }
   }
 
@@ -574,8 +573,8 @@ object Centrality {
     // the edge count drives the loop's shuffle layout, and the undirected
     // view must be BUILT (and cached) inside the scope so its physical
     // partitioning matches the rounds that consume it
-    withLoopShuffleLayout(edgesDf.sparkSession, 2L * edgesDf.count()) {
-    val und = undirectedView(edgesDf)
+    withLoopShuffleLayout(edgesDf, 2L * edgesDf.count()) { edges =>
+    val und = undirectedView(edges)
     // distinct here (not in the view): lpa counts multiplicity, WCC
     // must not
     val vertices = und.select(col("v").as("url")).distinct()
@@ -622,8 +621,8 @@ object Centrality {
     */
   def lpa(edgesDf: DataFrame, iters: Int = 10): DataFrame = {
     require(iters >= 1, s"lpa: iters must be >= 1, got $iters")
-    withLoopShuffleLayout(edgesDf.sparkSession, 2L * edgesDf.count()) {
-    val und = undirectedView(edgesDf)
+    withLoopShuffleLayout(edgesDf, 2L * edgesDf.count()) { edges =>
+    val und = undirectedView(edges)
     var state = und.select(col("v").as("url")).distinct()
       .select(col("url"), col("url").as("community"))
     var prevCk: Seq[org.apache.hadoop.fs.Path] = Seq.empty
@@ -694,9 +693,9 @@ object Centrality {
     val spark = edgesDf.sparkSession
     import spark.implicits._
 
-    withLoopShuffleLayout(spark, edgesDf.count()) {
+    withLoopShuffleLayout(edgesDf, edgesDf.count()) { edges =>
     val simple = CacheRegistry.register(
-      edgesDf.select(col("src"), col("dst")).distinct()
+      edges.select(col("src"), col("dst")).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val initUdf = udf((u: String) => initRegisters(u))
     val estUdf = udf((r: Array[Byte]) => estimate(r))
@@ -766,13 +765,6 @@ object Centrality {
         (col("__h") + (col("est") - col("__pe")) / lit(t.toDouble)).as("h"),
         (col("regs") =!= col("__pregs")).as("__chg"))
   }
-
-  /** Plan-evidence accessors (PlanSnap reconstructs the round-6 round
-    * frames for the `_before` artifacts; the kernels are private).
-    */
-  private[graft] def regMaxUdaf = udaf(new RegMax)
-  private[graft] def initRegistersUdf = udf((u: String) => initRegisters(u))
-  private[graft] def estimateUdf = udf((r: Array[Byte]) => estimate(r))
 
   /** The first HyperBall round's plan over the given edges — PlanDump's
     * plan-shape evidence entry point (mirrors [[lpaRoundPlan]]).

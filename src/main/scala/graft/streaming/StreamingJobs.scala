@@ -395,24 +395,6 @@ object StreamingJobs {
         col("__hit._1").as("snap_id"), col("__hit._2").as("snap_value"))
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily overridden
-    * — the state-store sizing knob for the STATEFUL equivalence harnesses
-    * (VERDICT r3 wrong #2): a stateful stream instantiates one state store
-    * per shuffle partition, and the session default (32) costs ~32
-    * checkpointed HDFS-state instances for a 10k-row test batch. The
-    * override binds at STREAM START (the partition count is frozen into the
-    * fresh checkpoint), so it sizes only the harness run; results are
-    * partition-count-independent (groupByKey semantics), and a production
-    * deployment keeps its own count — state scales with open keys, not with
-    * this knob.
-    */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
   /** Streaming form of the full ingest head: archive blobs arrive as a
     * stream and each micro-batch runs the SAME record-split +
     * charset-decode kernel as the batch op ([[graft.ops.Warc

@@ -15,12 +15,6 @@ object QueryTime {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("GRAFT_QT_RUNS", "2").toInt
     val spark = LocalSession(cpus.toInt)
-    // experiment knob: GRAFT_QT_CONF="spark.sql.adaptive.enabled=false,..."
-    sys.env.get("GRAFT_QT_CONF").foreach(_.split(',').filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
     for (name <- args) {
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to runs).map { _ =>

@@ -1,8 +1,10 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 class CentralitySpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -162,6 +164,53 @@ class CentralitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(dist === exact)
   }
 
+  // ---- the loops' layout overrides stay off the caller's session ----
+
+  import CentralitySpec.{AqeKey, PartKey}
+
+  test("components: the caller's conf keeps its own AQE and partitions while the loop runs") {
+    import spark.implicits._
+    // a filter UDF reads the CALLER's conf each time the loop scans the
+    // edges (local mode: the tasks share this JVM)
+    CentralitySpec.caller = spark
+    CentralitySpec.seen.clear()
+    val probe = udf { (_: String) =>
+      val c = CentralitySpec.caller.conf
+      CentralitySpec.seen.add((c.get(AqeKey), c.get(PartKey)))
+      true
+    }
+    val edges = Seq(("a2", "a1"), ("a3", "a2"), ("b1", "b2"), ("b3", "b2"))
+      .toDF("src", "dst").filter(probe(col("src")))
+    val dist = Centrality.components(edges).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val exact = Centrality.componentsExact(edges).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(dist === exact)
+    assert(!CentralitySpec.seen.isEmpty)
+    assert(CentralitySpec.seen.asScala.toSet === Set(("true", "4")))
+  }
+
+  test("withLoopShuffleLayout: large state runs on the caller's session, small state on an AQE-off clone") {
+    import spark.implicits._
+    val edges = Seq(("a", "b")).toDF("src", "dst")
+    // (ran on the caller's session, AQE, shuffle partitions) as the loop sees them
+    def layoutFor(stateRows: Long): (Boolean, String, String) = {
+      var seen: (Boolean, String, String) = null
+      val out = Centrality.withLoopShuffleLayout(edges, stateRows) { e =>
+        val s = e.sparkSession
+        seen = (s eq spark, s.conf.get(AqeKey), s.conf.get(PartKey))
+        e.select(col("src"))
+      }
+      assert(out.sparkSession eq spark)
+      assert(out.as[String].collect().toSeq === Seq("a"))
+      seen
+    }
+    val parallelism = spark.sparkContext.defaultParallelism
+    assert(layoutFor(2000000L * parallelism) === ((true, "true", "4")))
+    assert(layoutFor(1L) === ((false, "false", "1")))
+    assert((spark.conf.get(AqeKey), spark.conf.get(PartKey)) === (("true", "4")))
+  }
+
   test("harmonicHll reach_est approaches component size on a cycle") {
     import spark.implicits._
     val n = 6
@@ -173,4 +222,12 @@ class CentralitySpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(est > n * 0.7 && est < n * 1.3, s"${r.getString(0)}: $est")
     }
   }
+}
+
+object CentralitySpec {
+  val AqeKey = "spark.sql.adaptive.enabled"
+  val PartKey = "spark.sql.shuffle.partitions"
+  /** The session whose conf the probe UDF reads, and what it read. */
+  @volatile var caller: SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
 }

@@ -2,12 +2,13 @@ package graft.streaming
 
 import graft.pipeline.{AlignJob, Page, PageGen}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, countDistinct}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.functions.{col, countDistinct, udf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.util.Comparator
+import scala.jdk.CollectionConverters._
 
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -64,9 +65,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val probes = ev.select(col("event_id"), col("user_id"), col("ts"))
     probes.write.parquet(s"$base/probes")
 
-    StreamingJobs.withShufflePartitions(spark, 4) {
+    GraftSqlBridge.withConf(spark, "spark.sql.shuffle.partitions" -> "4") { c =>
       StreamingJobs.runAvailableNow(
-        StreamingJobs.asofStream(spark, s"$base/probes", snaps), s"$base/out")
+        StreamingJobs.asofStream(c, s"$base/probes", snaps), s"$base/out")
     }
     val got = spark.read.parquet(s"$base/out/data")
       .select("event_id", "snap_id", "snap_value")
@@ -82,6 +83,35 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("drainStream starts its stream on a 4-partition clone; the caller's conf is not written") {
+    import StreamingSpec.PartKey
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_drain_stream"
+    rmTree(base)
+    spark.range(20).selectExpr("id AS doc_id").write.parquet(s"$base/in")
+    // the probe reads the CALLER's partition count while the stream runs
+    // (local mode: the tasks share this JVM)
+    StreamingSpec.caller = spark
+    StreamingSpec.seen.clear()
+    val probe = udf { (_: Long) =>
+      StreamingSpec.seen.add(StreamingSpec.caller.conf.get(PartKey)); true
+    }
+    spark.conf.set(PartKey, "3")
+    try {
+      val out = graft.SparkEntry.drainStream(spark, base)(c =>
+        c.readStream.schema("doc_id LONG").parquet(s"$base/in")
+          .filter(probe(col("doc_id"))))
+      assert(out.sparkSession eq spark)
+      assert(out.count() === 20)
+      // the offset log records the conf the stream started under
+      val offsets = new String(
+        Files.readAllBytes(Paths.get(s"$base/out/checkpoint/offsets/0")), "UTF-8")
+      assert(offsets.contains("\"" + PartKey + "\":\"4\""), offsets)
+      assert(spark.conf.get(PartKey) === "3")
+      assert(!StreamingSpec.seen.isEmpty)
+      assert(StreamingSpec.seen.asScala.toSet === Set("3"))
+    } finally spark.conf.set(PartKey, "4")
+  }
+
   test("decontaminateStream == batch decontaminate drop; oversized eval fails loudly") {
     import spark.implicits._
     val base = s"${System.getProperty("java.io.tmpdir")}/graft_decontam_stream"
@@ -91,14 +121,14 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     training.write.parquet(s"$base/training")
     val evalSet = training.filter(col("doc_id") % 9 === 0)
       .select(col("doc_id") + 5000000L as "doc_id", col("text"))
-    val streamed = StreamingJobs.withShufflePartitions(spark, 4) {
+    GraftSqlBridge.withConf(spark, "spark.sql.shuffle.partitions" -> "4") { c =>
       StreamingJobs.runAvailableNow(
         StreamingJobs.decontaminateStream(
-          spark, s"$base/training", evalSet, threshold = 0.5),
+          c, s"$base/training", evalSet, threshold = 0.5),
         s"$base/out")
-      spark.read.parquet(s"$base/out/data").select("doc_id")
-        .as[Long].collect().toSet
     }
+    val streamed = spark.read.parquet(s"$base/out/data").select("doc_id")
+      .as[Long].collect().toSet
     val batch = graft.ops.Dedup
       .decontaminate(training, evalSet, threshold = 0.5)
       .select("doc_id").as[Long].collect().toSet
@@ -275,4 +305,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mismatches === 0)
     rmTree(base)
   }
+}
+
+object StreamingSpec {
+  val PartKey = "spark.sql.shuffle.partitions"
+  /** The session whose conf the probe UDF reads, and what it read. */
+  @volatile var caller: SparkSession = _
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
