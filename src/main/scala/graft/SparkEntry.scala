@@ -216,16 +216,16 @@ object SparkEntry {
 
   /** The harness of the streaming batch-equivalence queries: build
     * `stream` on a clone of `s` with 4 shuffle partitions
-    * ([[org.apache.spark.sql.GraftSqlBridge.withConf]]; `s`'s own conf is
-    * not written), run it to completion (AvailableNow) into `$tmp/out`,
-    * then read back on `s` what its sink wrote. A stateful stream keeps one
-    * state store per shuffle partition, and the count binds at stream start
-    * (it is frozen into the fresh checkpoint), so 4 sizes only this run;
-    * results are partition-count-independent.
+    * ([[org.apache.spark.sql.GraftSqlBridge.withStreamConf]]; `s`'s own
+    * conf is not written), run it to completion (AvailableNow) into
+    * `$tmp/out`, then read back on `s` what its sink wrote. A stateful
+    * stream keeps one state store per shuffle partition, and the count
+    * binds at stream start (it is frozen into the fresh checkpoint), so 4
+    * sizes only this run; results are partition-count-independent.
     */
   private[graft] def drainStream(s: SparkSession, tmp: String)(
       stream: SparkSession => DataFrame): DataFrame = {
-    org.apache.spark.sql.GraftSqlBridge.withConf(s, "spark.sql.shuffle.partitions" -> "4") { c =>
+    org.apache.spark.sql.GraftSqlBridge.withStreamConf(s, "spark.sql.shuffle.partitions" -> "4") { c =>
       StreamingJobs.runAvailableNow(stream(c), s"$tmp/out")
     }
     s.read.parquet(s"$tmp/out/data")

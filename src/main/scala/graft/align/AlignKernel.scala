@@ -69,27 +69,27 @@ object AlignKernel {
     }
   }
 
-  /** Align one page under SEVERAL scoring systems: the page is cleaned and
-    * extracted ONCE; only the DP + projection re-run per system. Used by the
-    * evaluation queries, which need a GT and a candidate alignment of the
-    * same page (VERDICT r1: don't synthesize + extract the corpus twice).
+  /** Align one page under SEVERAL scoring systems, one result per system in
+    * order: the page is cleaned and extracted ONCE; only the DP + projection
+    * re-run per system. Used by the evaluation query, which needs a GT and
+    * a candidate alignment of the same page (VERDICT r1: don't synthesize +
+    * extract the corpus twice).
     */
   def processMulti(
       transcriptRaw: String,
       html: Array[Byte],
-      systems: Seq[(String, Scoring)],
+      systems: Seq[Scoring],
       ws: NeedlemanWunsch.Workspace = new NeedlemanWunsch.Workspace,
-      sylCache: Syllabify.Cache = new Syllabify.Cache): Seq[(String, KernelResult)] =
+      sylCache: Syllabify.Cache = new Syllabify.Cache): Seq[KernelResult] =
     try {
       val (transcript, extracted, note) = prep(transcriptRaw, html)
-      systems.map { case (name, sc) =>
-        name -> processStream(transcript, extracted, sc, note = note, ws = ws, sylCache = sylCache)
-      }
+      systems.map(sc =>
+        processStream(transcript, extracted, sc, note = note, ws = ws, sylCache = sylCache))
     } catch {
       case e: Exception =>
         val r = KernelResult(Vector.empty, "", "", 0, 0, 0, 0L,
           s"kernel: ${e.getClass.getSimpleName}: ${e.getMessage}")
-        systems.map { case (name, _) => name -> r }
+        systems.map(_ => r)
     }
 
   /** Kernel from a pre-cleaned transcript and an extracted box stream —

@@ -93,18 +93,15 @@ object AlignQueries {
     //      ground truth on the SAME noisy stream (the reference's try_params
     //      shape: fixed GT boxes, varying seq_align_params) ----
     Query("q_eval_alignment") { (s, dir) =>
-      val pages = AlignJob.synthPages(s, dir)
-      val salt = s.sparkContext.defaultParallelism
-      // ONE kernel pass produces both span systems (pages are synthesized +
-      // extracted once), then ONE url shuffle scores them — no persist, no
-      // candidate-pair theta-join (VERDICT r1 #6). The relational
-      // EvalJob.evaluate form is exercised (and oracle-checked) by
-      // q_eval_gtxml; both forms are asserted row-identical in tests.
-      val both = AlignJob.spansMulti(pages,
-        Seq("gt" -> graft.align.Scoring.Default,
-          "pred" -> graft.align.Scoring.symmetric(10, -5, -7, -7)),
-        saltPartitions = salt)
-      EvalJob.evaluateGrouped(both, "gt", "pred").orderBy(col("url"))
+      // ONE kernel pass aligns each page under both scorings and scores
+      // it in the same task: no span rows leave the task, no url shuffle.
+      // The relational EvalJob.evaluate form is exercised (and
+      // oracle-checked) by q_eval_gtxml; both forms are asserted
+      // row-identical in tests.
+      AlignJob.evaluate(AlignJob.synthPages(s, dir), graft.align.Scoring.Default,
+        graft.align.Scoring.symmetric(10, -5, -7, -7),
+        saltPartitions = s.sparkContext.defaultParallelism)
+        .orderBy(col("url"))
     },
 
     // ---- O45 MEI enrichment (writeToMEI.py:41-145): neume→syllable

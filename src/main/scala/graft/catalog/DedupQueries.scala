@@ -107,6 +107,23 @@ object DedupQueries {
           .otherwise(lit("")),
         col("source"), lit("-site.org/p/"), col("doc_id").cast("string")))
 
+  /** The embeddings plus a planted near-identical copy of every 20th
+    * vector (id + 1,000,000, each component moved by a seeded ±0.005):
+    * the shared input of the embedding near-dup and SemDedup queries.
+    */
+  private def embeddingsWithPerturbed(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val e = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val perturbed = e.filter(col("vec_id") % 20 === 0)
+      .as[(Long, Seq[Float])]
+      .map { case (id, v) =>
+        val rng = new PageGen.Rng(id ^ 0x3141592653L)
+        (id + 1000000L,
+          v.map(x => x + (rng.nextDouble().toFloat - 0.5f) * 0.01f))
+      }.toDF("vec_id", "embedding")
+    e.unionAll(perturbed)
+  }
+
   val all: Seq[Query] = Seq(
     // ---- exact dedup over union with planted duplicates ----
     Query("q_dedup_exact",
@@ -763,16 +780,7 @@ object DedupQueries {
 
     // ---- embedding-cosine near-dup pairs (planted perturbed copies) ----
     Query("q_embed_near_dups") { (s, dir) =>
-      import s.implicits._
-      val e = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val perturbed = e.filter(col("vec_id") % 20 === 0)
-        .as[(Long, Seq[Float])]
-        .map { case (id, v) =>
-          val rng = new PageGen.Rng(id ^ 0x3141592653L)
-          (id + 1000000L,
-            v.map(x => x + (rng.nextDouble().toFloat - 0.5f) * 0.01f))
-        }.toDF("vec_id", "embedding")
-      Similarity.embeddingNearDups(e.unionAll(perturbed), threshold = 0.95)
+      Similarity.embeddingNearDups(embeddingsWithPerturbed(s, dir), threshold = 0.95)
         .orderBy(col("vec_a"), col("vec_b"))
     },
 
@@ -780,16 +788,7 @@ object DedupQueries {
     //      perturbed union as q_embed_near_dups: planted near-identical
     //      pairs must co-cluster and prune to their min-id keeper ----
     Query("q_semdedup") { (s, dir) =>
-      import s.implicits._
-      val e = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val perturbed = e.filter(col("vec_id") % 20 === 0)
-        .as[(Long, Seq[Float])]
-        .map { case (id, v) =>
-          val rng = new PageGen.Rng(id ^ 0x3141592653L)
-          (id + 1000000L,
-            v.map(x => x + (rng.nextDouble().toFloat - 0.5f) * 0.01f))
-        }.toDF("vec_id", "embedding")
-      Similarity.semDedup(e.unionAll(perturbed), threshold = 0.95)
+      Similarity.semDedup(embeddingsWithPerturbed(s, dir), threshold = 0.95)
         .orderBy(col("vec_id"))
     },
 
@@ -798,16 +797,7 @@ object DedupQueries {
     //      binds (the 10^12-row extension: two small codebooks express
     //      k1·k2 cells with MB-scale broadcasts) ----
     Query("q_semdedup_hier") { (s, dir) =>
-      import s.implicits._
-      val e = tbl(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val perturbed = e.filter(col("vec_id") % 20 === 0)
-        .as[(Long, Seq[Float])]
-        .map { case (id, v) =>
-          val rng = new PageGen.Rng(id ^ 0x3141592653L)
-          (id + 1000000L,
-            v.map(x => x + (rng.nextDouble().toFloat - 0.5f) * 0.01f))
-        }.toDF("vec_id", "embedding")
-      Similarity.semDedupHier(e.unionAll(perturbed), threshold = 0.95,
+      Similarity.semDedupHier(embeddingsWithPerturbed(s, dir), threshold = 0.95,
         k1 = 6, k2 = 5)
         .orderBy(col("vec_id"))
     },

@@ -284,7 +284,7 @@ object RelationalQueries {
       val tmp = scratchDir(s, "window_stream")
       val src = tbl(s, dir, "events")
       src.write.parquet(s"$tmp/events")
-      GraftSqlBridge.withConf(s, "spark.sql.shuffle.partitions" -> "4") { c =>
+      GraftSqlBridge.withStreamConf(s, "spark.sql.shuffle.partitions" -> "4") { c =>
         val window = graft.streaming.StreamingJobs.runCompleteToMemory(
           graft.streaming.StreamingJobs.eventWindowStats(
             c.readStream.schema(src.schema).parquet(s"$tmp/events")),

@@ -55,10 +55,8 @@ import org.apache.spark.sql.types._
   * state (distinct words as symbol arrays × freq) is Heaps'-law small
   * relative to the corpus and is re-segmented map-side by the batch-merge
   * UDF. Each round's state is EAGERLY checkpointed via
-  * [[Lineage.truncateTracked]] (without truncation round k recomputes all
-  * k-1 prior merge UDFs — O(K²) work — and the plan grows without bound),
-  * and the superseded round's checkpoint files are deleted once the next
-  * round materializes.
+  * [[Lineage.truncate]] (without truncation round k recomputes all
+  * k-1 prior merge UDFs — O(K²) work — and the plan grows without bound).
   *
   * Output: (merge_rank, left, right, merged, pair_count) — one row per
   * merge, in training order; pair_count is the count at that merge's OWN
@@ -536,7 +534,7 @@ object Bpe {
     val parts = math.max(1L, math.min(
       spark.sparkContext.defaultParallelism.toLong,
       vocabSize / 100000L + 1L)).toInt
-    var (syms, symsFiles) = Lineage.truncateTracked(wf.repartition(parts))
+    var syms = Lineage.truncate(wf.repartition(parts))
     wf.unpersist()
 
     // conservative symbol universe for batch rule 2: initial alphabet
@@ -689,20 +687,14 @@ object Bpe {
             cur
           })
           val superseded = syms
-          val supersededFiles = symsFiles
-          val (next, nextFiles) =
-            Lineage.truncateTracked(syms.select(col("freq"), mergeUdf(col("syms")).as("syms")))
-          syms = next
-          symsFiles = nextFiles
+          syms = Lineage.truncate(syms.select(col("freq"), mergeUdf(col("syms")).as("syms")))
           superseded.unpersist()
-          Lineage.deleteCheckpointFiles(superseded, supersededFiles)
         }
       }
       if (m > 1) pc.unpersist()
     }
     lastTrainRounds = rounds
     syms.unpersist()
-    Lineage.deleteCheckpointFiles(syms, symsFiles)
     spark.createDataFrame(
       spark.sparkContext.parallelize(merges.toSeq, 1), TrainSchema)
   }

@@ -618,11 +618,8 @@ object Dedup {
     */
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
     // eager lineage truncation: reliable on a cluster, local on a single
-    // box; each round deletes the SUPERSEDED round's checkpoint files once
-    // its successor has materialized (Lineage scaladoc — cleanCheckpoints
-    // defaults off, so K rounds of dead state would otherwise sit on disk
-    // for the session lifetime)
-    val (edges, edgeFiles) = Lineage.truncateTracked(pairs
+    // box ([[Lineage]])
+    val edges = Lineage.truncate(pairs
       .select(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
       .unionAll(pairs
         .select(col("doc_b").cast("long").as("src"), col("doc_a").cast("long").as("dst")))
@@ -633,7 +630,7 @@ object Dedup {
       if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
     }
 
-    var (labels, labelFiles) = Lineage.truncateTracked(
+    var labels = Lineage.truncate(
       edges.select(col("src").as("doc_id"))
         .distinct()
         .withColumn("label", col("doc_id")))
@@ -642,8 +639,7 @@ object Dedup {
     var converged = false
     while (!converged && iter < maxIters) {
       val superseded = labels
-      val supersededFiles = labelFiles
-      val (next, nextFiles) = Lineage.truncateTracked(
+      val next = Lineage.truncate(
         edges.join(labels, edges("src") === labels("doc_id"))
           .select(edges("dst").as("doc_id"), labels("label"))
           .unionAll(labels.select(col("doc_id"), col("label")))
@@ -651,18 +647,15 @@ object Dedup {
           .agg(min(col("label")).as("label")))
       val nextSum = labelSum(next)
       superseded.unpersist()
-      Lineage.deleteCheckpointFiles(superseded, supersededFiles)
       labels = next
-      labelFiles = nextFiles
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       iter += 1
     }
     // the edge table — the loop's LARGEST pinned dataset — is dead once the
     // labels converge; only the (pairs-sized) final label table stays
-    // materialized for consumers (its checkpoint files stay with it)
+    // materialized for consumers
     edges.unpersist()
-    Lineage.deleteCheckpointFiles(edges, edgeFiles)
     labels.select(col("doc_id"), col("label").as("canonical_doc_id"))
   }
 

@@ -22,67 +22,6 @@ object Domains {
     */
   def host(url: Column): Column = parse_url(url, lit("HOST"))
 
-  /** Built-in multi-label public suffixes (VERDICT r4 missing #1): the
-    * high-traffic second-level registry suffixes from the public suffix
-    * list (publicsuffix.org — public data), covering the ccTLDs where
-    * "last two labels" mis-keys a crawl (.co.uk, .com.au, .ac.jp, …).
-    * This is deliberately a SUBSET: the full PSL is ~9k rules and ships as
-    * a data file in production — [[registeredDomain]] takes the table as a
-    * parameter precisely so the full list is a drop-in data swap, no code
-    * change. Single-label TLDs need no entry (the fallback handles them).
-    */
-  val DefaultMultiLabelSuffixes: Seq[String] = Seq(
-    // UK / Ireland
-    "co.uk", "org.uk", "me.uk", "net.uk", "ac.uk", "gov.uk", "nhs.uk",
-    "sch.uk", "plc.uk", "ltd.uk",
-    // Australia / New Zealand
-    "com.au", "net.au", "org.au", "edu.au", "gov.au", "asn.au", "id.au",
-    "co.nz", "net.nz", "org.nz", "govt.nz", "ac.nz", "geek.nz", "maori.nz",
-    // Japan / Korea / Taiwan / Hong Kong
-    "co.jp", "ne.jp", "or.jp", "ac.jp", "go.jp", "ad.jp", "ed.jp", "gr.jp",
-    "lg.jp", "co.kr", "ne.kr", "or.kr", "go.kr", "ac.kr", "re.kr", "pe.kr",
-    "com.tw", "net.tw", "org.tw", "edu.tw", "gov.tw", "idv.tw",
-    "com.hk", "net.hk", "org.hk", "edu.hk", "gov.hk", "idv.hk",
-    // South / Southeast Asia
-    "co.in", "net.in", "org.in", "firm.in", "gen.in", "ind.in", "ac.in",
-    "edu.in", "gov.in", "res.in", "nic.in",
-    "com.sg", "net.sg", "org.sg", "edu.sg", "gov.sg", "per.sg",
-    "com.my", "net.my", "org.my", "edu.my", "gov.my",
-    "co.id", "or.id", "ac.id", "go.id", "web.id", "sch.id",
-    "co.th", "in.th", "or.th", "ac.th", "go.th",
-    "com.ph", "net.ph", "org.ph", "edu.ph", "gov.ph",
-    "com.vn", "net.vn", "org.vn", "edu.vn", "gov.vn", "ac.vn",
-    "com.pk", "net.pk", "org.pk", "edu.pk", "gov.pk",
-    "com.bd", "net.bd", "org.bd", "edu.bd", "gov.bd", "ac.bd",
-    // Americas
-    "com.br", "net.br", "org.br", "gov.br", "edu.br", "art.br", "blog.br",
-    "com.mx", "net.mx", "org.mx", "gob.mx", "edu.mx",
-    "com.ar", "net.ar", "org.ar", "edu.ar", "gob.ar", "gov.ar", "int.ar",
-    "com.co", "net.co", "org.co", "edu.co", "gov.co", "nom.co",
-    "com.pe", "net.pe", "org.pe", "edu.pe", "gob.pe", "nom.pe",
-    "com.ve", "net.ve", "org.ve", "edu.ve", "gob.ve", "web.ve",
-    "com.ec", "net.ec", "org.ec", "edu.ec", "gob.ec",
-    "com.uy", "net.uy", "org.uy", "edu.uy", "gub.uy",
-    "co.cr", "or.cr", "ac.cr", "go.cr",
-    // Africa / Middle East
-    "co.za", "net.za", "org.za", "gov.za", "ac.za", "web.za", "edu.za",
-    "com.ng", "net.ng", "org.ng", "edu.ng", "gov.ng", "sch.ng",
-    "co.ke", "or.ke", "ne.ke", "go.ke", "ac.ke", "sc.ke",
-    "com.eg", "net.eg", "org.eg", "edu.eg", "gov.eg", "sci.eg",
-    "com.sa", "net.sa", "org.sa", "edu.sa", "gov.sa", "med.sa", "sch.sa",
-    "com.tr", "net.tr", "org.tr", "edu.tr", "gov.tr", "av.tr", "bel.tr",
-    "co.il", "net.il", "org.il", "ac.il", "gov.il", "muni.il", "idf.il",
-    "com.ua", "net.ua", "org.ua", "edu.ua", "gov.ua", "in.ua",
-    // Europe (multi-label registries)
-    "com.pl", "net.pl", "org.pl", "edu.pl", "gov.pl", "waw.pl", "wroc.pl",
-    "com.ru", "net.ru", "org.ru", "msk.ru", "spb.ru",
-    "com.gr", "net.gr", "org.gr", "edu.gr", "gov.gr",
-    "com.pt", "net.pt", "org.pt", "edu.pt", "gov.pt", "int.pt",
-    "com.ro", "org.ro", "tm.ro", "nt.ro", "www.ro",
-    "co.at", "or.at", "ac.at", "gv.at", "priv.at",
-    "com.cn", "net.cn", "org.cn", "gov.cn", "edu.cn", "ac.cn", "ah.cn",
-    "bj.cn", "sh.cn", "gd.cn")
-
   /** Parsed public suffix list (VERDICT r5 missing #1): the three rule
     * kinds of the official format.
     *
@@ -217,12 +156,6 @@ object Domains {
       when(e =!= "", e).otherwise(base)
     }
   }
-
-  /** Legacy form over a plain multi-label suffix table (no wildcard or
-    * exception rules) — kept for callers that inject their own subset.
-    */
-  def registeredDomain(url: Column, suffixes: Seq[String]): Column =
-    registeredDomain(url, Psl(suffixes, Nil, Nil))
 
   /** Per-registered-domain corpus statistics: document count, whitespace
     * token count, char count. The mixing-policy input table. `n_tokens`

@@ -12,57 +12,15 @@ import org.apache.spark.sql.DataFrame
   * 2^k × base by round k — the driver OOMs during analysis long before any
   * data moves. Only a checkpoint (fresh LogicalRDD) cuts the plan.
   *
-  * Checkpoint-file hygiene: `spark.cleaner.referenceTracking
-  * .cleanCheckpoints` defaults to false, so each round's RELIABLE
-  * checkpoint files would otherwise accumulate on disk for the session
-  * lifetime (K rounds of superseded state). [[truncateTracked]] therefore
-  * reports the rdd-* directories a checkpoint created, and the driver loop
-  * deletes the superseded round's files via [[deleteCheckpointFiles]] AFTER
-  * the next round has materialized (eager=true — by the time the call
-  * returns, nothing reads the superseded files again).
-  *
-  * The created-files diff assumes one checkpointing loop at a time per
-  * session (true for the driver loops here, which are single-threaded);
-  * concurrent checkpointers could cross-attribute a directory. The cost of
-  * that worst case is a recompute from the persisted upstream, not a wrong
-  * result — and only when two iterative ops interleave rounds in one
-  * session.
+  * Reliable checkpoint files belong to Spark's context cleaner: a
+  * deployment that sets a checkpoint dir and wants each superseded round's
+  * files removed sets `spark.cleaner.referenceTracking.cleanCheckpoints`.
+  * Local checkpoint blocks are freed by the loops' `unpersist`.
   */
 private[graft] object Lineage {
 
-  /** Truncate lineage eagerly; returns the truncated frame plus the
-    * checkpoint directories the call created ([[Seq.empty]] on the
-    * localCheckpoint path — block-manager blocks are freed by unpersist).
-    */
-  def truncateTracked(df: DataFrame): (DataFrame, Seq[org.apache.hadoop.fs.Path]) = {
-    val sc = df.sparkSession.sparkContext
-    sc.getCheckpointDir match {
-      case Some(dir) =>
-        val path = new org.apache.hadoop.fs.Path(dir)
-        val fs = path.getFileSystem(sc.hadoopConfiguration)
-        def listing(): Set[String] =
-          if (!fs.exists(path)) Set.empty
-          else fs.listStatus(path).map(_.getPath.toString).toSet
-        val before = listing()
-        val out = df.checkpoint(eager = true)
-        val created = (listing() -- before).toSeq.sorted.map(new org.apache.hadoop.fs.Path(_))
-        (out, created)
-      case None =>
-        (df.localCheckpoint(eager = true), Seq.empty)
-    }
-  }
-
-  /** Best-effort recursive delete of superseded checkpoint directories (a
-    * failed delete must never fail the algorithm that has already moved on).
-    */
-  def deleteCheckpointFiles(df: DataFrame, paths: Seq[org.apache.hadoop.fs.Path]): Unit = {
-    if (paths.isEmpty) return
-    val sc = df.sparkSession.sparkContext
-    paths.foreach { p =>
-      try {
-        val fs = p.getFileSystem(sc.hadoopConfiguration)
-        fs.delete(p, true)
-      } catch { case _: Exception => () }
-    }
-  }
+  /** `df` with its lineage cut, materialized before the call returns. */
+  def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
 }

@@ -365,7 +365,7 @@ object LinkGraph {
     * mass folded into the round's plan as a broadcast 1-row agg (one
     * action per round, no driver collect), each round's rank frame
     * lineage-truncated ([[Lineage]]) so the logical plan stays O(1)
-    * instead of 2^k, superseded checkpoint files deleted one round later.
+    * instead of 2^k.
     * Same algorithm, ULP-level run-to-run wobble documented.
     */
   def pagerank(
@@ -416,7 +416,6 @@ object LinkGraph {
     vDeg.count()
 
     var ranks = vDeg.select(col("url"), lit(1.0 / nD).as("rank"))
-    var prevCk: Seq[org.apache.hadoop.fs.Path] = Seq.empty
     var round = 0
     while (round < iters) {
       val withDeg = ranks.join(vDeg, Seq("url"))
@@ -443,15 +442,9 @@ object LinkGraph {
           (lit(base) + lit(damping) *
             (coalesce(col("contrib_sum"), lit(0.0)) + col("__dm") / lit(nD)))
             .as("rank"))
-      val (truncated, created) = Lineage.truncateTracked(next)
-      Lineage.deleteCheckpointFiles(truncated, prevCk)
-      prevCk = created
-      ranks = truncated
+      ranks = Lineage.truncate(next)
       round += 1
     }
-    // the FINAL round's checkpoint files back the returned frame — they
-    // stay (same convention as Dedup's cluster loop: files live with the
-    // materialized result, the session checkpoint dir bounds their life)
     ranks
   }
 

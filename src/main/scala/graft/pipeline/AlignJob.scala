@@ -97,16 +97,18 @@ object AlignJob {
     }
   }
 
-  /** Flat spans under SEVERAL scoring systems in ONE kernel pass:
-    * (system, url, seq, syl, ulx, uly, lrx, lry). Pages are scanned,
-    * synthesized and HTML-extracted once; only the DP re-runs per system —
-    * the evaluation queries' shape (GT scoring vs candidate scoring of the
-    * same corpus) without aligning the corpus twice.
+  /** Per-page evaluation of the `pred` scoring's spans against the `gt`
+    * scoring's spans of the same page, scored in the kernel task: (url,
+    * mean_iou, mean_range_iou, n_gt_spans) by [[EvalJob.docMeans]] — the
+    * values of [[EvalJob.evaluate]] over the two systems' [[spans]]. Each
+    * page is extracted once and only the DP runs per scoring; no shuffle
+    * after the layout. A page with no GT spans emits no row.
     */
-  def spansMulti(
+  def evaluate(
       pages: Dataset[Page],
-      systems: Seq[(String, Scoring)],
-      saltPartitions: Int = 0): DataFrame = {
+      gt: Scoring,
+      pred: Scoring,
+      saltPartitions: Int): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
 
@@ -114,14 +116,12 @@ object AlignJob {
       val ws = new graft.align.NeedlemanWunsch.Workspace
       val sylCache = new Syllabify.Cache
       it.flatMap { p =>
-        AlignKernel.processMulti(p.text, p.html, systems, ws, sylCache).iterator.flatMap {
-          case (system, r) =>
-            r.spans.iterator.zipWithIndex.map { case (s, i) =>
-              (system, p.url, i, s.syl, s.ulx, s.uly, s.lrx, s.lry)
-            }
+        val rs = AlignKernel.processMulti(p.text, p.html, Seq(gt, pred), ws, sylCache)
+        EvalJob.docMeans(rs(0).spans, rs(1).spans).map { case (iou, rangeIou, n) =>
+          (p.url, iou, rangeIou, n)
         }
       }
-    }.toDF("system", "url", "seq", "syl", "ulx", "uly", "lrx", "lry")
+    }.toDF("url", "mean_iou", "mean_range_iou", "n_gt_spans")
   }
 
   /** Pages per partition that [[layout]] places by estimated cost. */

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import graft.align.{AlignKernel, BBox, Scoring}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import graft.align.{AlignKernel, BBox, Scoring, SylBox}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -12,6 +12,8 @@ import org.apache.spark.sql.expressions.Window
   * (`x.syl in box.syl or box.syl in x.syl`), the max-intersection candidate
   * wins (FIRST max in prediction order — `ints.index(max(ints))`), scored by
   * bbox IOU and char-range IOU (the black-area analogue), averaged per doc.
+  * [[scoreDoc]] is the same rule over one page's span lists, for a task
+  * that holds both span systems of a page ([[AlignJob.evaluate]]).
   */
 object EvalJob {
 
@@ -115,60 +117,43 @@ object EvalJob {
         (expr("aggregate(xs, 0.0D, (a, x) -> a + x.range_iou)") / size(col("xs"))).as("mean_range_iou"),
         size(col("xs")).as("n_gt_spans"))
 
-  /** One-shuffle evaluation of two span systems over the same corpus.
-    *
-    * Input: the [[AlignJob.spansMulti]] table (system, url, seq, syl, ulx,
-    * uly, lrx, lry). Per-document span counts are bounded (a page has a
-    * bounded syllable count), so grouping a document's two span sets into
-    * one task and scoring them in a typed pass is the cheaper plan than the
-    * url-equi theta-join: ONE hash shuffle of the flat span rows replaces
-    * the candidate-pair shuffle (~|gt|·|pred| rows per document) plus two
-    * window shuffles. Row-for-row identical to
-    * `evaluate(gt, pred)` — same collapse, same first-max argmax, same
-    * fold order (asserted in tests and by the shared golden oracle).
+  /** The per-document rule of [[evaluatePerSpan]] over one page's spans,
+    * the typed form that runs inside a kernel task (gt_seq = index in
+    * `gt`, prediction order = order in `pred`): one (gt_seq, iou,
+    * range_iou) per collapsed GT span, in collapse order (first occurrence
+    * of each syllable text; the LAST span with that text is scored).
+    * Candidates are substring matches either way; the best is the FIRST
+    * max of intersection area in prediction order; both scores are 0
+    * unless that intersection is > 0.
     */
-  def evaluateGrouped(both: DataFrame, gtSystem: String, predSystem: String): DataFrame = {
-    val spark = both.sparkSession
-    import spark.implicits._
-    both.select(col("system"), col("url"), col("seq"), col("syl"),
-        col("ulx"), col("uly"), col("lrx"), col("lry"))
-      .as[(String, String, Int, String, Int, Int, Int, Int)]
-      .groupByKey(_._2)
-      .flatMapGroups { (url, it) =>
-        val rows = it.toArray
-        def spansOf(sys: String): Array[(Int, String, Int, Int, Int, Int)] =
-          rows.iterator.filter(_._1 == sys)
-            .map(r => (r._3, r._4, r._5, r._6, r._7, r._8))
-            .toArray.sortBy(_._1)
-        val gt = spansOf(gtSystem)
-        val pred = spansOf(predSystem)
-        if (gt.isEmpty) Iterator.empty
-        else {
-          // dict collapse: last GT span per syllable text
-          val byText = new scala.collection.mutable.LinkedHashMap[String, (Int, String, Int, Int, Int, Int)]
-          gt.foreach(g => byText.put(g._2, g))
-          val perSpan = byText.valuesIterator.map { g =>
-            val cands = pred.filter(p => g._2.contains(p._2) || p._2.contains(g._2))
-            if (cands.isEmpty) (g._1, 0.0, 0.0)
-            else {
-              // first max in pred (seq) order == (inter desc, p_seq asc)
-              val best = cands.maxBy(p =>
-                BBox.intersectArea(g._3, g._4, g._5, g._6, p._3, p._4, p._5, p._6))
-              val inter = BBox.intersectArea(g._3, g._4, g._5, g._6,
-                best._3, best._4, best._5, best._6)
-              if (inter > 0)
-                (g._1,
-                  BBox.iou(g._3, g._4, g._5, g._6, best._3, best._4, best._5, best._6),
-                  BBox.rangeIou(g._3, g._5, best._3, best._5))
-              else (g._1, 0.0, 0.0)
-            }
-          }.toArray.sortBy(_._1) // fold in ascending gt_seq order, like evaluate()
-          var si = 0.0; var sr = 0.0
-          perSpan.foreach { case (_, i, r) => si += i; sr += r }
-          Iterator.single((url, si / perSpan.length, sr / perSpan.length, perSpan.length))
-        }
+  def scoreDoc(gt: IndexedSeq[SylBox], pred: IndexedSeq[SylBox]): IndexedSeq[(Int, Double, Double)] = {
+    val lastByText = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    gt.indices.foreach(i => lastByText.put(gt(i).syl, i))
+    lastByText.valuesIterator.map { i =>
+      val g = gt(i)
+      def inter(p: SylBox): Long =
+        BBox.intersectArea(g.ulx, g.uly, g.lrx, g.lry, p.ulx, p.uly, p.lrx, p.lry)
+      val cands = pred.filter(p => g.syl.contains(p.syl) || p.syl.contains(g.syl))
+      if (cands.isEmpty) (i, 0.0, 0.0)
+      else {
+        val p = cands.maxBy(inter) // the first of equal maxima
+        if (inter(p) > 0)
+          (i, BBox.iou(g.ulx, g.uly, g.lrx, g.lry, p.ulx, p.uly, p.lrx, p.lry),
+            BBox.rangeIou(g.ulx, g.lrx, p.ulx, p.lrx))
+        else (i, 0.0, 0.0)
       }
-      .toDF("url", "mean_iou", "mean_range_iou", "n_gt_spans")
+    }.toIndexedSeq
+  }
+
+  /** [[evaluate]]'s row for one page, without the url: (mean_iou,
+    * mean_range_iou, n_gt_spans), [[scoreDoc]]'s scores folded in
+    * ascending gt_seq order; None when the page has no GT spans.
+    */
+  def docMeans(gt: IndexedSeq[SylBox], pred: IndexedSeq[SylBox]): Option[(Double, Double, Int)] = {
+    val perSpan = scoreDoc(gt, pred).sortBy(_._1)
+    val n = perSpan.length
+    if (n == 0) None
+    else Some((perSpan.foldLeft(0.0)(_ + _._2) / n, perSpan.foldLeft(0.0)(_ + _._3) / n, n))
   }
 
   /** Scoring-parameter grid search (evaluate_text_alignment.py:178-198,
@@ -215,29 +200,9 @@ object EvalJob {
         val scores = fixturesB.value.zip(gtB.value).map { case ((tra, noisy), gtSpans) =>
           val stream = noisy.zipWithIndex.map { case (c, k) => graft.align.CharBox.at(c, k) }.toVector
           val pred = AlignKernel.processStream(tra, stream, sc).spans
-          // same dict-keyed collapse as evaluate(): last GT span per
-          // syllable text wins (evaluate_text_alignment.py:119-129);
-          // key order pinned to first occurrence so the double mean is
-          // deterministic (hash-map order would wobble the last ulp)
-          val byText = new scala.collection.mutable.LinkedHashMap[String, graft.align.SylBox]
-          gtSpans.foreach(sp => byText.put(sp.syl, sp))
-          val gtCollapsed = byText.valuesIterator.toVector
-          if (gtCollapsed.isEmpty) 1.0
-          else {
-            val perGt = gtCollapsed.map { g =>
-              val cands = pred.filter(p => g.syl.contains(p.syl) || p.syl.contains(g.syl))
-              if (cands.isEmpty) 0.0
-              else {
-                val best = cands.maxBy(p =>
-                  BBox.intersectArea(g.ulx, g.uly, g.lrx, g.lry, p.ulx, p.uly, p.lrx, p.lry))
-                if (BBox.intersectArea(g.ulx, g.uly, g.lrx, g.lry,
-                    best.ulx, best.uly, best.lrx, best.lry) > 0)
-                  BBox.rangeIou(g.ulx, g.lrx, best.ulx, best.lrx)
-                else 0.0
-              }
-            }
-            perGt.sum / perGt.length
-          }
+          // range IOU summed in collapse order; an empty GT agrees fully
+          val perGt = scoreDoc(gtSpans, pred).map(_._3)
+          if (perGt.isEmpty) 1.0 else perGt.sum / perGt.length
         }
         (m, mm, gox, goy, gex, gey, scores.sum / scores.length)
       }

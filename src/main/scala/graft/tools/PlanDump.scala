@@ -73,8 +73,9 @@ object PlanDump {
       SparkEntry.queries("q_mei_assign")(spark, sfDir)
     }
     dump("q_eval_alignment (one-pass two-system eval)",
-      "Single object-kernel stage emits BOTH scoring systems' spans; one " +
-        "url hash shuffle feeds the bounded per-document scorer.") {
+      "Single object-kernel stage aligns each page under BOTH scoring " +
+        "systems and scores it in the same task; the only Exchanges are " +
+        "the kernel layout and the final sort.") {
       SparkEntry.queries("q_eval_alignment")(spark, sfDir)
     }
     dump("q_domain_stats (domain curation)",

@@ -31,4 +31,25 @@ object GraftSqlBridge {
     overrides.foreach { case (k, v) => clone.conf.set(k, v) }
     body(clone)
   }
+
+  /** [[withConf]] for a `body` that runs its streams to their end on the
+    * clone. Spark adds a `StreamingQueryListenerBus` to the context's
+    * listener bus for each session that starts a stream and never removes
+    * it; the clone's is removed once `body` returns, so repeated calls
+    * leave the context's listener count where it was.
+    */
+  def withStreamConf[T](s: SparkSession, overrides: (String, String)*)(
+      body: SparkSession => T): T =
+    withConf(s, overrides: _*) { c =>
+      try body(c)
+      finally c.sparkContext.listenerBus.removeListener(
+        StreamBusField.get(c.streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
+    }
+
+  /** `classic.StreamingQueryManager`'s private `listenerBus`. */
+  private lazy val StreamBusField = {
+    val f = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
+    f.setAccessible(true)
+    f
+  }
 }

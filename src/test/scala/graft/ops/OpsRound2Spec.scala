@@ -126,22 +126,39 @@ class OpsRound2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!pairs.exists { case (a, b) => a <= 3000 && b <= 3000 })
   }
 
-  test("evaluateGrouped is row-identical to the relational evaluate") {
+  test("in-task AlignJob.evaluate equals the relational evaluate") {
+    import graft.align.Scoring
     import graft.pipeline.{AlignJob, EvalJob}
     val pages = AlignJob.synthPages(spark, "/root/testdata/sf0.001")
-    val both = AlignJob.spansMulti(pages,
-      Seq("gt" -> graft.align.Scoring.Default,
-        "pred" -> graft.align.Scoring.symmetric(10, -5, -7, -7))).persist()
-    both.count()
-    val grouped = EvalJob.evaluateGrouped(both, "gt", "pred")
+    val pred = Scoring.symmetric(10, -5, -7, -7)
+    val inTask = AlignJob.evaluate(pages, Scoring.Default, pred,
+        saltPartitions = spark.sparkContext.defaultParallelism)
       .orderBy("url").collect().map(_.toSeq)
     val relational = EvalJob.evaluate(
-        both.filter(col("system") === "gt").drop("system"),
-        both.filter(col("system") === "pred").drop("system"))
+        AlignJob.spans(AlignJob.align(pages, Scoring.Default)),
+        AlignJob.spans(AlignJob.align(pages, pred)))
       .orderBy("url").collect().map(_.toSeq)
-    both.unpersist()
-    assert(grouped.length === relational.length)
-    grouped.zip(relational).foreach { case (g, r) => assert(g === r) }
+    assert(inTask.nonEmpty)
+    assert(inTask.length === relational.length)
+    inTask.zip(relational).foreach { case (t, r) => assert(t === r) }
+
+    // one page that binds each clause of the rule: GT "ab" repeats (the
+    // last one is scored), its two candidates tie on intersection area
+    // with different extents (the first in prediction order wins), and
+    // GT "cd"'s only candidate does not intersect it (scores 0)
+    import spark.implicits._
+    import graft.align.SylBox
+    val gt = Vector(SylBox("ab", 0, 0, 10, 10), SylBox("cd", 100, 0, 110, 10),
+      SylBox("ab", 200, 0, 210, 10))
+    val pr = Vector(SylBox("ab", 205, 0, 215, 10), SylBox("a", 205, 0, 225, 10),
+      SylBox("cd", 120, 0, 130, 10), SylBox("ab", 0, 0, 10, 10))
+    def df(spans: Vector[SylBox]) = spans.zipWithIndex
+      .map { case (b, i) => ("u", i, b.syl, b.ulx, b.uly, b.lrx, b.lry) }
+      .toDF("url", "seq", "syl", "ulx", "uly", "lrx", "lry")
+    val (iou, rangeIou, n) = EvalJob.docMeans(gt, pr).get
+    assert(Seq("u", iou, rangeIou, n) ===
+      EvalJob.evaluate(df(gt), df(pr)).collect().head.toSeq)
+    assert(n === 2 && iou === (1.0 / 3) / 2)
   }
 
   test("ANN recall vs brute force holds at two corpus sizes (corpus-scaled knobs)") {
@@ -308,12 +325,12 @@ class OpsRound2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rd("https://co.uk/") === "co.uk")
     // injectable table: an empty table IS the naive rule
     assert(Seq(Tuple1("https://www.example.co.uk/p")).toDF("u")
-      .select(Domains.registeredDomain(col("u"), Nil)).as[String]
+      .select(Domains.registeredDomain(col("u"), Domains.Psl(Nil, Nil, Nil))).as[String]
       .collect().head === "co.uk")
     // custom 3-label suffix outranks a 2-label one on the same host
     assert(Seq(Tuple1("https://x.school.act.edu.au/p")).toDF("u")
       .select(Domains.registeredDomain(col("u"),
-        Seq("edu.au", "act.edu.au"))).as[String]
+        Domains.Psl(Seq("edu.au", "act.edu.au"), Nil, Nil))).as[String]
       .collect().head === "school.act.edu.au")
   }
 

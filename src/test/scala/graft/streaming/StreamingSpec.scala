@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.pipeline.{AlignJob, Page, PageGen}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession, StreamBusCount}
 import org.apache.spark.sql.functions.{col, countDistinct, udf}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -110,6 +110,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!StreamingSpec.seen.isEmpty)
       assert(StreamingSpec.seen.asScala.toSet === Set("3"))
     } finally spark.conf.set(PartKey, "4")
+  }
+
+  test("drainStream leaves the context's streaming listener-bus count unchanged") {
+    val base = s"${System.getProperty("java.io.tmpdir")}/graft_drain_buses"
+    rmTree(base)
+    spark.range(5).selectExpr("id AS doc_id").write.parquet(s"$base/in")
+    val before = StreamBusCount(spark)
+    for (k <- 1 to 5) {
+      val out = graft.SparkEntry.drainStream(spark, s"$base/run$k")(c =>
+        c.readStream.schema("doc_id LONG").parquet(s"$base/in"))
+      assert(out.count() === 5)
+    }
+    assert(StreamBusCount(spark) === before)
+    rmTree(base)
   }
 
   test("decontaminateStream == batch decontaminate drop; oversized eval fails loudly") {
