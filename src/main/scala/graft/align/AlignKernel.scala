@@ -53,21 +53,16 @@ object AlignKernel {
     (transcript, extracted2, note)
   }
 
+  /** Align one page under one scoring system: [[processMulti]] with a
+    * single system (same error handling).
+    */
   def process(
       transcriptRaw: String,
       html: Array[Byte],
       scoring: Scoring = Scoring.Default,
-      initialBand: Int = NeedlemanWunsch.DefaultInitialBand,
       ws: NeedlemanWunsch.Workspace = new NeedlemanWunsch.Workspace,
-      sylCache: Syllabify.Cache = new Syllabify.Cache): KernelResult = {
-    try {
-      val (transcript, extracted, note) = prep(transcriptRaw, html)
-      processStream(transcript, extracted, scoring, initialBand, note, ws, sylCache)
-    } catch {
-      case e: Exception =>
-        KernelResult(Vector.empty, "", "", 0, 0, 0, 0L, s"kernel: ${e.getClass.getSimpleName}: ${e.getMessage}")
-    }
-  }
+      sylCache: Syllabify.Cache = new Syllabify.Cache): KernelResult =
+    processMulti(transcriptRaw, html, Seq(scoring), ws, sylCache).head
 
   /** Align one page under SEVERAL scoring systems, one result per system in
     * order: the page is cleaned and extracted ONCE; only the DP + projection
@@ -99,7 +94,6 @@ object AlignKernel {
       transcript: String,
       stream: IndexedSeq[CharBox],
       scoring: Scoring = Scoring.Default,
-      initialBand: Int = NeedlemanWunsch.DefaultInitialBand,
       note: String = "",
       ws: NeedlemanWunsch.Workspace = new NeedlemanWunsch.Workspace,
       sylCache: Syllabify.Cache = new Syllabify.Cache): KernelResult = {
@@ -113,7 +107,7 @@ object AlignKernel {
     }
 
     // alignment (textSeqCompare.py:13-177)
-    val ar = NeedlemanWunsch.alignChars(transcript, ocr, scoring, initialBand, ws)
+    val ar = NeedlemanWunsch.alignChars(transcript, ocr, scoring, ws)
 
     // syllabification of the *unaligned* transcript (alignToOCR.py:277),
     // memoized per kernel instance (pure function, Zipf vocabulary)

@@ -270,12 +270,11 @@ object NeedlemanWunsch {
       transcript: String,
       ocrStream: String,
       scoring: Scoring = Scoring.Default,
-      initialBand: Int = DefaultInitialBand,
       ws: Workspace = new Workspace): AlignResult =
     if (usesFullMatrix(transcript.length, ocrStream.length))
       alignCharsFull(transcript, ocrStream, scoring, ws)
     else
-      alignCharsBanded(transcript, ocrStream, scoring, initialBand, ws)
+      alignCharsBanded(transcript, ocrStream, scoring, DefaultInitialBand, ws)
 
   /** Full-matrix char alignment (band = m covers every column). */
   def alignCharsFull(

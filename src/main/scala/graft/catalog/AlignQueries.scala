@@ -3,8 +3,9 @@ package graft.catalog
 import graft.SparkEntry.{docs, tbl, fanOut, alignedFor, rmTree, scratchDir}
 import graft.catalog.Query.{RepoDir, golden}
 import graft.align.{CleanText, Syllabify}
-import graft.ops.Multimodal
+import graft.ops.{Multimodal, ScaleWindows}
 import graft.pipeline.{AlignJob, EvalJob, Functions, GtXml, MeiAssign, PageGen}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The alignment pipeline: the flagship spans and metrics, its streaming
@@ -13,6 +14,19 @@ import org.apache.spark.sql.functions._
   * Cantus transcript assembly.
   */
 object AlignQueries {
+
+  /** The DuckDB oracle of both per-folio assembly entries. */
+  private val FolioTextSql: String =
+    """WITH per_cust AS (
+      |  SELECT o_custkey, max(o_orderkey) AS last_okey,
+      |         string_agg(CAST(o_orderkey AS VARCHAR), ' '
+      |                    ORDER BY CAST(o_orderkey AS VARCHAR)) AS own_text
+      |  FROM orders GROUP BY o_custkey)
+      |SELECT o_custkey,
+      |  trim(concat_ws(' ',
+      |    CAST(lag(last_okey) OVER (ORDER BY o_custkey) AS VARCHAR),
+      |    own_text)) AS folio_text
+      |FROM per_cust""".stripMargin.replace("\n", " ")
 
   val all: Seq[Query] = Seq(
     // ---- flagship kernel pipeline (non-SQL; golden/differential-verified) ----
@@ -172,60 +186,14 @@ object AlignQueries {
     // ---- parse_cantus_csv composite: per-folio transcript assembly
     //      (filter→group→within-group sort→concat→lag of previous folio's
     //      last chant, parse_cantus_csv.py:81-126) over orders ----
-    Query("q_folio_text",
-      """WITH per_cust AS (
-         |  SELECT o_custkey, max(o_orderkey) AS last_okey,
-         |         string_agg(CAST(o_orderkey AS VARCHAR), ' '
-         |                    ORDER BY CAST(o_orderkey AS VARCHAR)) AS own_text
-         |  FROM orders GROUP BY o_custkey)
-         |SELECT o_custkey,
-         |  trim(concat_ws(' ',
-         |    CAST(lag(last_okey) OVER (ORDER BY o_custkey) AS VARCHAR),
-         |    own_text)) AS folio_text
-         |FROM per_cust""".stripMargin.replace("\n", " ")) { (s, dir) =>
-      val orders = tbl(s, dir, "orders")
-      val perCust = orders.groupBy(col("o_custkey"))
-        .agg(
-          max(col("o_orderkey")).as("last_okey"),
-          array_join(array_sort(collect_list(col("o_orderkey").cast("string"))), " ")
-            .as("own_text"))
-      graft.ops.ScaleWindows
-        // boundary-exchange global lag — no single-partition window
-        .withGlobalLag(perCust, "o_custkey", "last_okey", "prev_last")
-        .select(col("o_custkey"),
-          trim(concat_ws(" ", col("prev_last").cast("string"), col("own_text")))
-            .as("folio_text"))
-    },
+    Query("q_folio_text", FolioTextSql)(
+      folioText(ScaleWindows.SmallInputThreshold)),
 
     // ---- the SAME per-folio assembly with the boundary-exchange lag path
     //      FORCED (smallInputThreshold = 0): the code that ships for 100×
     //      is the code that is hash-checked (VERDICT r2 #2). Plan-asserted
     //      bucketed (no single-partition window) in ScaleShapeSpec. ----
-    Query("q_folio_text_scaled",
-      // identical semantics, forced boundary-exchange path on the Spark side
-      """WITH per_cust AS (
-         |  SELECT o_custkey, max(o_orderkey) AS last_okey,
-         |         string_agg(CAST(o_orderkey AS VARCHAR), ' '
-         |                    ORDER BY CAST(o_orderkey AS VARCHAR)) AS own_text
-         |  FROM orders GROUP BY o_custkey)
-         |SELECT o_custkey,
-         |  trim(concat_ws(' ',
-         |    CAST(lag(last_okey) OVER (ORDER BY o_custkey) AS VARCHAR),
-         |    own_text)) AS folio_text
-         |FROM per_cust""".stripMargin.replace("\n", " ")) { (s, dir) =>
-      val orders = tbl(s, dir, "orders")
-      val perCust = orders.groupBy(col("o_custkey"))
-        .agg(
-          max(col("o_orderkey")).as("last_okey"),
-          array_join(array_sort(collect_list(col("o_orderkey").cast("string"))), " ")
-            .as("own_text"))
-      graft.ops.ScaleWindows
-        .withGlobalLag(perCust, "o_custkey", "last_okey", "prev_last",
-          smallInputThreshold = 0)
-        .select(col("o_custkey"),
-          trim(concat_ws(" ", col("prev_last").cast("string"), col("own_text")))
-            .as("folio_text"))
-    },
+    Query("q_folio_text_scaled", FolioTextSql)(folioText(smallInputThreshold = 0L)),
 
     // ---- per-document JSON sink shape (to_JSON_dict, alignToOCR.py:333-351) ----
     Query("q_doc_json") { (s, dir) =>
@@ -253,4 +221,23 @@ object AlignQueries {
         .select(col("media_id"), col("kind"), col("n_bytes"), col("frames_sampled"))
     }
   )
+
+  /** Per-folio transcript assembly over orders: each customer's sorted
+    * order keys, prefixed with the previous customer's last order key via
+    * the boundary-exchange global lag (no single-partition window) above
+    * `smallInputThreshold` rows.
+    */
+  private def folioText(smallInputThreshold: Long)(s: SparkSession, dir: String): DataFrame = {
+    val perCust = tbl(s, dir, "orders").groupBy(col("o_custkey"))
+      .agg(
+        max(col("o_orderkey")).as("last_okey"),
+        array_join(array_sort(collect_list(col("o_orderkey").cast("string"))), " ")
+          .as("own_text"))
+    ScaleWindows
+      .withGlobalLag(perCust, "o_custkey", "last_okey", "prev_last",
+        smallInputThreshold = smallInputThreshold)
+      .select(col("o_custkey"),
+        trim(concat_ws(" ", col("prev_last").cast("string"), col("own_text")))
+          .as("folio_text"))
+  }
 }

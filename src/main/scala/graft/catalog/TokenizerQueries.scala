@@ -171,7 +171,7 @@ object TokenizerQueries {
 
     // ---- iterated BPE training (10 merges): one partial-combining
     //      shuffle + a TakeOrdered(1) argmax per round, state
-    //      checkpointed per round (the nearDupClusters lineage
+    //      checkpointed per round (the graph loops' lineage
     //      discipline); golden mirrors the whole loop ----
     Query("q_bpe_train")((s, dir) =>
       graft.ops.Bpe.train(docs(s, dir), numMerges = 10)

@@ -235,8 +235,10 @@ object Bpe {
   }
 
   /** Code-point lexicographic comparison — the order UTF8String's binary
-    * compare (Spark's string orderBy) implements; differs from
-    * String.compareTo (UTF-16 code units) for supplementary-plane chars.
+    * compare (Spark's string orderBy, DuckDB's collation) implements;
+    * differs from String.compareTo / Ordering[String] (UTF-16 code units)
+    * for supplementary-plane chars vs U+E000..U+FFFF. The one code-point
+    * order of the tokenizers and the graph kernels.
     */
   private[graft] def codePointCompare(a: String, b: String): Int = {
     var i = 0
@@ -256,8 +258,18 @@ object Bpe {
     * symbol — `w.map(_.toString)` would shear it into surrogate halves no
     * merge can ever match.
     */
-  private[graft] def codePointSyms(w: String): Seq[String] =
-    w.codePoints().toArray.map(cp => new String(Character.toChars(cp))).toSeq
+  private[graft] def codePointSyms(w: String): IndexedSeq[String] = {
+    val out = new Array[String](w.codePointCount(0, w.length))
+    var i = 0
+    var k = 0
+    while (i < w.length) {
+      val cp = w.codePointAt(i)
+      out(k) = new String(Character.toChars(cp))
+      i += Character.charCount(cp)
+      k += 1
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+  }
 
   /** Broadcast-side index for the exact-sequential encoder. Serializable;
     * the maps build once per broadcast deserialization.
@@ -331,7 +343,7 @@ object Bpe {
 
     /** Min-rank-first encoder (see class doc). */
     private def encodeFast(w: String): Seq[String] = {
-      var syms = codePointSyms(w)
+      var syms: Seq[String] = codePointSyms(w)
       if (syms.length < 2 || merges.isEmpty) return syms
       var done = false
       while (!done) {
@@ -367,7 +379,7 @@ object Bpe {
       * beyond smaller ranks, for which the symbol did not yet exist).
       */
     private[graft] def encodeIndexed(w: String): Seq[String] = {
-      var syms = codePointSyms(w)
+      var syms: Seq[String] = codePointSyms(w)
       if (syms.length < 2 || merges.isEmpty) return syms
       val present = new java.util.HashSet[String]()
       val cands = new java.util.TreeSet[Integer]()

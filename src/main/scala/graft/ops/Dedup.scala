@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -26,6 +26,19 @@ import org.apache.spark.sql.expressions.Window
   */
 object Dedup {
 
+  /** The exact-dedup key of a text: two independent 64-bit digests and
+    * its length, named `<prefix>h1`, `<prefix>h2`, `<prefix>len` — the one
+    * key of the batch and stream exact-dedup forms.
+    */
+  private[graft] def textKey(text: Column, prefix: String = ""): Seq[Column] = Seq(
+    xxhash64(text).as(prefix + "h1"),
+    xxhash64(text, lit(0x9e3779b97f4a7c15L)).as(prefix + "h2"),
+    length(text).as(prefix + "len"))
+
+  /** `df` with [[textKey]] of its `text` column appended. */
+  private[graft] def withTextKey(df: DataFrame): DataFrame =
+    df.select(col("*") +: textKey(col("text")): _*)
+
   /** Exact duplicate-group detection: shuffles two independent 64-bit
     * digests + length + doc_id only — never the full text (~60× less shuffle
     * volume at web scale). Two digests + length make a false group
@@ -35,10 +48,7 @@ object Dedup {
     */
   def exactDuplicateGroups(documents: DataFrame): DataFrame =
     documents
-      .select(col("doc_id"),
-        xxhash64(col("text")).as("h1"),
-        xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)).as("h2"),
-        length(col("text")).as("len"))
+      .select(col("doc_id") +: textKey(col("text")): _*)
       .groupBy(col("h1"), col("h2"), col("len"))
       .agg(min(col("doc_id")).as("canonical_doc_id"), count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
@@ -70,14 +80,8 @@ object Dedup {
     * trade by using the filter only to ROUTE rows, never to drop them.
     */
   def incrementalDedup(newDocs: DataFrame, priorDocs: DataFrame): DataFrame = {
-    val priorKeys = priorDocs.select(
-      xxhash64(col("text")).as("h1"),
-      xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)).as("h2"),
-      length(col("text")).as("len")).distinct()
-    newDocs
-      .withColumn("h1", xxhash64(col("text")))
-      .withColumn("h2", xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)))
-      .withColumn("len", length(col("text")))
+    val priorKeys = priorDocs.select(textKey(col("text")): _*).distinct()
+    withTextKey(newDocs)
       .join(priorKeys, Seq("h1", "h2", "len"), "left_anti")
       .drop("h1", "h2", "len")
   }
@@ -117,10 +121,7 @@ object Dedup {
       fpp: Double = 0.01): DataFrame = {
     require(expectedPriorDistinct > 0, "expectedPriorDistinct must be > 0")
     val priorKeys = CacheRegistry.register(
-      priorDocs.select(
-        xxhash64(col("text")).as("h1"),
-        xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)).as("h2"),
-        length(col("text")).as("len")).distinct()
+      priorDocs.select(textKey(col("text")): _*).distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // Spark's stat.bloomFilter NPEs on an EMPTY input (null agg buffer);
     // an empty prior corpus means "everything is new" — no filter, no join
@@ -128,10 +129,7 @@ object Dedup {
     val bloom = priorKeys.stat.bloomFilter("h1", expectedPriorDistinct, fpp)
     val bloomB = newDocs.sparkSession.sparkContext.broadcast(bloom)
     val mightContain = udf((h: Long) => bloomB.value.mightContainLong(h))
-    val keyedNew = newDocs
-      .withColumn("h1", xxhash64(col("text")))
-      .withColumn("h2", xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)))
-      .withColumn("len", length(col("text")))
+    val keyedNew = withTextKey(newDocs)
     val definiteNew = keyedNew.filter(!mightContain(col("h1")))
     val resolved = keyedNew.filter(mightContain(col("h1")))
       .join(priorKeys, Seq("h1", "h2", "len"), "left_anti")
@@ -161,20 +159,17 @@ object Dedup {
   def snapshotDiff(current: DataFrame, prior: DataFrame): DataFrame = {
     def keyed(df: DataFrame, side: String): DataFrame = df
       .filter(col("doc_id").isNotNull)
-      .select(col("doc_id"),
-        xxhash64(col("text")).as(s"__h1_$side"),
-        xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)).as(s"__h2_$side"),
-        length(col("text")).as(s"__len_$side"),
+      .select(Seq(col("doc_id")) ++ textKey(col("text"), s"__${side}_") ++ Seq(
         col("text").isNotNull.as(s"__real_$side"),
-        lit(true).as(s"__in_$side"))
+        lit(true).as(s"__in_$side")): _*)
     keyed(current, "c").join(keyed(prior, "p"), Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
         when(col("__in_p").isNull, lit("added"))
           .when(col("__in_c").isNull, lit("removed"))
           .when(col("__real_c") && col("__real_p") &&
-                col("__h1_c") === col("__h1_p") &&
-                col("__h2_c") === col("__h2_p") &&
-                col("__len_c") === col("__len_p"), lit("unchanged"))
+                col("__c_h1") === col("__p_h1") &&
+                col("__c_h2") === col("__p_h2") &&
+                col("__c_len") === col("__p_len"), lit("unchanged"))
           .otherwise(lit("changed")).as("status"))
   }
 
@@ -591,72 +586,30 @@ object Dedup {
     * embedding edges compose). Output: `(doc_id, canonical_doc_id)` — one
     * row per document that appears in ≥1 pair.
     *
-    * Algorithm: iterative min-label propagation. Labels start as self;
-    * each round every vertex takes the min of its own label and its
-    * neighbors' labels (one `edges ⋈ labels` + one `min` group-by — two
-    * bounded shuffles per round); fixpoint in ≤ diameter rounds, hard-capped
-    * at `maxIters` (near-dup components are overwhelmingly tiny — a giant
-    * component means a boilerplate corpus that should have been capped
-    * upstream; on hitting the cap the labels are still a valid REFINEMENT:
-    * every emitted group is genuinely connected, merely possibly split).
+    * Algorithm: [[Centrality.components]]' pointer-jumping min-label loop
+    * over the pairs as long `src`/`dst` edges, hard-capped at `maxIters`
+    * (near-dup components are overwhelmingly tiny — a giant component
+    * means a boilerplate corpus that should have been capped upstream; on
+    * hitting the cap the labels are still a valid REFINEMENT: every
+    * emitted group is genuinely connected, merely possibly split).
     *
-    * Scale shape: the edge set is never collected — the only driver-side
-    * value per round is ONE scalar (sum of labels, which strictly decreases
-    * while anything changes, so equality certifies the fixpoint without a
-    * self-join on the label table). Every round's label table is EAGERLY
-    * CHECKPOINTED, not merely persisted: `labels` appears twice in the next
-    * round's plan (join side + union side), so without lineage truncation
-    * the logical plan doubles per round on top of whatever produced the
-    * pairs (the full minhash+simhash pipelines here) — 2^k plan nodes by
-    * round k, which OOMs the DRIVER during analysis long before any data
-    * moves. Reliable `checkpoint()` when the session has a checkpoint dir
-    * (the cluster path — survives executor loss); `localCheckpoint`
-    * otherwise (single-box/test path). This is the same label-propagation
-    * shape the reference plays at micro scale when it merges duplicate
-    * elements under one leader (writeToMEI.py:104-114); here it runs
-    * relationally over 10^9-edge graphs.
+    * Scale shape: the pairs are EAGERLY CHECKPOINTED once before the loop
+    * ([[Lineage]]), so the loop's edge count and edge-view build never
+    * re-run whatever produced them (the full minhash+simhash pipelines
+    * here), and every round's label table is checkpointed too, so the
+    * result's lineage holds no pair plan. This is the same label
+    * propagation the reference plays at micro scale when it merges
+    * duplicate elements under one leader (writeToMEI.py:104-114); here it
+    * runs relationally over 10^9-edge graphs.
     */
   def nearDupClusters(pairs: DataFrame, maxIters: Int = 20): DataFrame = {
-    // eager lineage truncation: reliable on a cluster, local on a single
-    // box ([[Lineage]])
-    val edges = Lineage.truncate(pairs
-      .select(col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst"))
-      .unionAll(pairs
-        .select(col("doc_b").cast("long").as("src"), col("doc_a").cast("long").as("dst")))
-      .distinct())
-
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val r = df.agg(sum(col("label").cast("decimal(38,0)"))).collect()(0)
-      if (r.isNullAt(0)) java.math.BigDecimal.ZERO else r.getDecimal(0)
-    }
-
-    var labels = Lineage.truncate(
-      edges.select(col("src").as("doc_id"))
-        .distinct()
-        .withColumn("label", col("doc_id")))
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val superseded = labels
-      val next = Lineage.truncate(
-        edges.join(labels, edges("src") === labels("doc_id"))
-          .select(edges("dst").as("doc_id"), labels("label"))
-          .unionAll(labels.select(col("doc_id"), col("label")))
-          .groupBy(col("doc_id"))
-          .agg(min(col("label")).as("label")))
-      val nextSum = labelSum(next)
-      superseded.unpersist()
-      labels = next
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      iter += 1
-    }
-    // the edge table — the loop's LARGEST pinned dataset — is dead once the
-    // labels converge; only the (pairs-sized) final label table stays
-    // materialized for consumers
+    val edges = Lineage.truncate(pairs.select(
+      col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst")))
+    val (labels, _) = Centrality.componentLabels(edges, maxIters)
+    // the pair table is dead once the labels are checkpointed; only the
+    // (pairs-sized) final label table stays materialized for consumers
     edges.unpersist()
-    labels.select(col("doc_id"), col("label").as("canonical_doc_id"))
+    labels.select(col("url").as("doc_id"), col("component").as("canonical_doc_id"))
   }
 
   /** Drop near-duplicates: keep every document that is either untouched by

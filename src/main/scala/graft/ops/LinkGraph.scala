@@ -380,9 +380,7 @@ object LinkGraph {
     // edge cap (enforced, not documented): past it, use the production path
     val ExactModeEdgeCap = 5000000L
 
-    val simple = CacheRegistry.register(
-      edgesDf.select(col("src"), col("dst")).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val simple = Centrality.distinctEdges(edgesDf)
 
     if (exactFold) {
       val nEdges = simple.count()
@@ -398,10 +396,7 @@ object LinkGraph {
     val outDeg = CacheRegistry.register(
       simple.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val vertices = CacheRegistry.register(
-      simple.select(col("src").as("url"))
-        .union(simple.select(col("dst").as("url"))).distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val vertices = Centrality.vertexSet(simple)
 
     val n = vertices.count()
     if (n == 0L) return spark.emptyDataset[(String, Double)].toDF("url", "rank")

@@ -111,6 +111,11 @@ object ScaleWindows {
     }
   }
 
+  /** Row count at or below which the global windows run as one
+    * single-task window (see [[withGlobalLag]]).
+    */
+  val SmallInputThreshold: Long = 1000000L
+
   /** Adds `outCol` = global lag(valueCol, 1) over (ORDER BY keyCol), without
     * a single-partition window over data-scale rows. The global first row
     * gets null (standard lag semantics). Null `valueCol` values are handled
@@ -131,7 +136,7 @@ object ScaleWindows {
       numBuckets: Int = 0,
       sampleTarget: Int = 10000,
       persistInput: Boolean = true,
-      smallInputThreshold: Long = 1000000): DataFrame = {
+      smallInputThreshold: Long = SmallInputThreshold): DataFrame = {
     val bucketed = bucketedOrSmall(df, keyCol, numBuckets, sampleTarget,
         persistInput, smallInputThreshold) match {
       case Left((input, 0L)) =>
@@ -200,7 +205,7 @@ object ScaleWindows {
       numBuckets: Int = 0,
       sampleTarget: Int = 10000,
       persistInput: Boolean = true,
-      smallInputThreshold: Long = 1000000): DataFrame = {
+      smallInputThreshold: Long = SmallInputThreshold): DataFrame = {
     val v = coalesce(col(valueCol).cast("long"), lit(0L))
     val bucketed = bucketedOrSmall(df, keyCol, numBuckets, sampleTarget,
         persistInput, smallInputThreshold) match {

@@ -51,38 +51,11 @@ object Unigram {
 
   private def lnP(x: Double): Double = NgramLm.log2Portable(x) * Ln2
 
-  private[ops] def cps(w: String): IndexedSeq[String] = {
-    val out = IndexedSeq.newBuilder[String]
-    var i = 0
-    while (i < w.length) {
-      val cp = w.codePointAt(i)
-      out += new String(Character.toChars(cp))
-      i += Character.charCount(cp)
-    }
-    out.result()
-  }
-
-  /** Pinned code-point-order comparison (Spark/DuckDB collation — NOT
-    * Ordering[String]'s UTF-16 order, which diverges on astral cps).
-    */
-  private[ops] def cpCompare(a: String, b: String): Int = {
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i)
-      val cb = b.codePointAt(j)
-      if (ca != cb) return Integer.compare(ca, cb)
-      i += Character.charCount(ca)
-      j += Character.charCount(cb)
-    }
-    Integer.compare(a.length - i, b.length - j)
-  }
-
   private val countDescPieceAsc: Ordering[(String, Long)] =
     new Ordering[(String, Long)] {
       def compare(x: (String, Long), y: (String, Long)): Int = {
         val c = java.lang.Long.compare(y._2, x._2) // count DESC
-        if (c != 0) c else cpCompare(x._1, y._1) // piece ASC
+        if (c != 0) c else Bpe.codePointCompare(x._1, y._1) // piece ASC
       }
     }
 
@@ -94,7 +67,7 @@ object Unigram {
       maxPieceLen: Int): collection.mutable.HashMap[String, Long] = {
     val acc = collection.mutable.HashMap.empty[String, Long]
     words.foreach { case (w, f) =>
-      val sy = cps(w)
+      val sy = Bpe.codePointSyms(w)
       var i = 0
       while (i < sy.length) {
         var l = 1
@@ -119,7 +92,7 @@ object Unigram {
       scores: collection.Map[String, Double],
       maxPieceLen: Int,
       floorScore: Double): IndexedSeq[String] = {
-    val sy = cps(w)
+    val sy = Bpe.codePointSyms(w)
     val n = sy.length
     if (n == 0) return IndexedSeq.empty
     val best = Array.fill(n + 1)(Double.NegativeInfinity)
@@ -178,7 +151,7 @@ object Unigram {
       seedSize: Int,
       emRounds: Int): Model = {
     val sub = substringFreqs(words, maxPieceLen)
-    val (cpsAll, multi) = sub.toSeq.partition(kv => cps(kv._1).length == 1)
+    val (cpsAll, multi) = sub.toSeq.partition(kv => Bpe.codePointSyms(kv._1).length == 1)
     val seedMulti = multi.sorted(countDescPieceAsc)
       .take(math.max(0, seedSize - cpsAll.length))
     var counts = collection.mutable.HashMap.empty[String, Long]
@@ -202,12 +175,12 @@ object Unigram {
       }
       // single cps always survive (floor 1); zero-count multis drop
       counts.keysIterator.foreach { p =>
-        if (cps(p).length == 1 && !next.contains(p)) next.update(p, 1L)
+        if (Bpe.codePointSyms(p).length == 1 && !next.contains(p)) next.update(p, 1L)
       }
       counts = next
       r += 1
     }
-    val (cs, ms) = counts.toSeq.partition(kv => cps(kv._1).length == 1)
+    val (cs, ms) = counts.toSeq.partition(kv => Bpe.codePointSyms(kv._1).length == 1)
     val kept = (cs ++ ms.sorted(countDescPieceAsc)
       .take(math.max(0, vocabSize - cs.length)))
       .sorted(countDescPieceAsc)
@@ -279,7 +252,7 @@ object Unigram {
     val subs = words.flatMap { case (w, f) =>
       substringFreqs(Seq((w, f)), maxPieceLen).iterator
     }.groupByKey(_._1).mapValues(_._2).reduceGroups(_ + _)
-      .map { case (p, n) => (p, n, cps(p).length == 1) }
+      .map { case (p, n) => (p, n, Bpe.codePointSyms(p).length == 1) }
       .toDF("piece", "freq", "single")
     val singles = subs.filter(col("single"))
       .select(col("piece"), col("freq")).as[(String, Long)].collect()
@@ -309,12 +282,12 @@ object Unigram {
       val nextM = collection.mutable.HashMap.empty[String, Long]
       next.foreach { case (p, n) => nextM.update(p, n) }
       counts.keysIterator.foreach { p =>
-        if (cps(p).length == 1 && !nextM.contains(p)) nextM.update(p, 1L)
+        if (Bpe.codePointSyms(p).length == 1 && !nextM.contains(p)) nextM.update(p, 1L)
       }
       counts = nextM
       r += 1
     }
-    val (cs, ms) = counts.toSeq.partition(kv => cps(kv._1).length == 1)
+    val (cs, ms) = counts.toSeq.partition(kv => Bpe.codePointSyms(kv._1).length == 1)
     val kept = (cs ++ ms.sorted(countDescPieceAsc)
       .take(math.max(0, vocabSize - cs.length)))
       .sorted(countDescPieceAsc)
@@ -335,7 +308,7 @@ object Unigram {
     val pieces = trained.select(col("piece"), col("count"), col("lnprob"))
       .as[(String, Long, Double)].collect()
       .map { case (p, n, lp) => (p, n, lp) }.toIndexedSeq
-    val maxLen = pieces.iterator.map(p => cps(p._1).length)
+    val maxLen = pieces.iterator.map(p => Bpe.codePointSyms(p._1).length)
       .foldLeft(1)(math.max)
     val model = Model(pieces, maxLen)
     val mB = spark.sparkContext.broadcast(model)

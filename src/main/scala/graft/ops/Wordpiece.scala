@@ -63,21 +63,6 @@ object Wordpiece {
     out
   }
 
-  /** Code-point lexicographic order (same rationale as Bpe's tie-break:
-    * UTF8String binary order, not UTF-16 code-unit order).
-    */
-  private def cpLess(a: String, b: String): Boolean = {
-    var i = 0
-    var j = 0
-    while (i < a.length && j < b.length) {
-      val ca = a.codePointAt(i)
-      val cb = b.codePointAt(j)
-      if (ca != cb) return ca < cb
-      i += Character.charCount(ca)
-      j += Character.charCount(cb)
-    }
-    a.length - i < b.length - j
-  }
 
   /** Left-to-right non-overlapping merge application emitting the
     * WordPiece token directly (never the raw l+r concatenation — a
@@ -143,8 +128,8 @@ object Wordpiece {
       pc.foreach { case (p, n) =>
         val s = score(p, n)
         if (s > bestS ||
-            (s == bestS && (cpLess(p._1, best._1) ||
-              (p._1 == best._1 && cpLess(p._2, best._2))))) {
+            (s == bestS && (Bpe.codePointCompare(p._1, best._1) < 0 ||
+              (p._1 == best._1 && Bpe.codePointCompare(p._2, best._2) < 0)))) {
           best = p; bestN = n; bestS = s
         }
       }

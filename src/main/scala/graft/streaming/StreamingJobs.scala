@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Dedup
 import graft.pipeline.{AlignJob, Page}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -119,9 +120,9 @@ object StreamingJobs {
   }
 
   /** Streaming exact dedup over a page stream: keep the first row per text
-    * digest within the watermark horizon. The state key is the same two-
-    * digest+length triple as the batch `exactDuplicateGroups` (never the
-    * text), and `dropDuplicatesWithinWatermark` bounds state, with the
+    * digest within the watermark horizon. The state key is the batch
+    * `exactDuplicateGroups`' two-digest+length key, built by the same
+    * [[graft.ops.Dedup.textKey]] (never the text), and `dropDuplicatesWithinWatermark` bounds state, with the
     * standard watermark trades: a duplicate arriving after the horizon is
     * re-admitted, and ANY row (duplicate or not) whose event time has
     * fallen behind the watermark is dropped as late data. Unbounded-horizon
@@ -130,14 +131,11 @@ object StreamingJobs {
     */
   def dedupStream(spark: SparkSession, pagesDir: String, horizon: String = "10 minutes"): DataFrame = {
     import spark.implicits._
-    spark.readStream
+    Dedup.withTextKey(spark.readStream
       .schema(implicitly[org.apache.spark.sql.Encoder[Page]].schema)
       .parquet(pagesDir)
       .withColumn("warc_ts", col("warc_ts").cast("timestamp"))
-      .withWatermark("warc_ts", horizon)
-      .withColumn("h1", xxhash64(col("text")))
-      .withColumn("h2", xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)))
-      .withColumn("len", length(col("text")))
+      .withWatermark("warc_ts", horizon))
       .dropDuplicatesWithinWatermark("h1", "h2", "len")
       .select(col("url"), col("warc_ts"), col("text"), col("lang"))
   }
@@ -159,20 +157,18 @@ object StreamingJobs {
         col("event_type"), col("n_events"), col("min_value"), col("max_value"))
 
   /** Streaming exact dedup over a documents-shaped stream
-    * (doc_id, text, ts): same digest key as the batch
-    * [[graft.ops.Dedup.exactDuplicateGroups]], emitting the surviving text.
+    * (doc_id, text, ts): the digest key of the batch
+    * [[graft.ops.Dedup.exactDuplicateGroups]] ([[graft.ops.Dedup.textKey]]),
+    * emitting the surviving text.
     * Emitting only `text` keeps the output deterministic — WHICH duplicate
     * row survives depends on partition processing order, but duplicates
     * share their text by definition.
     */
   def dedupDocsStream(spark: SparkSession, docsDir: String, horizon: String = "10 minutes"): DataFrame =
-    spark.readStream
+    Dedup.withTextKey(spark.readStream
       .schema("doc_id LONG, text STRING, ts TIMESTAMP")
       .parquet(docsDir)
-      .withWatermark("ts", horizon)
-      .withColumn("h1", xxhash64(col("text")))
-      .withColumn("h2", xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)))
-      .withColumn("len", length(col("text")))
+      .withWatermark("ts", horizon))
       .dropDuplicatesWithinWatermark("h1", "h2", "len")
       .select(col("text"))
 
@@ -180,8 +176,9 @@ object StreamingJobs {
     * rolling-crawl ingest shape: new documents stream in, and any whose
     * content digest already exists in the prior corpus is dropped
     * mid-flight. The prior side is a static digest table (16 B + length
-    * per row, same two-independent-digest key as
-    * [[graft.ops.Dedup.incrementalDedup]]); the join is stream-static and
+    * per row, the two-independent-digest key of
+    * [[graft.ops.Dedup.incrementalDedup]], built by the same
+    * [[graft.ops.Dedup.textKey]]); the join is stream-static and
     * STATELESS — the prior is fixed, so unlike [[dedupDocsStream]] no
     * watermark state accumulates. Expressed as left_outer + null-marker
     * filter (the most widely supported stream-static shape, identical
@@ -191,18 +188,12 @@ object StreamingJobs {
     */
   def incrementalDedupStream(
       spark: SparkSession, newDocsDir: String, prior: DataFrame): DataFrame = {
-    val priorKeys = prior.select(
-        xxhash64(col("text")).as("h1"),
-        xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)).as("h2"),
-        length(col("text")).as("len"))
+    val priorKeys = prior.select(Dedup.textKey(col("text")): _*)
       .distinct()
       .withColumn("__seen", lit(1))
-    spark.readStream
+    Dedup.withTextKey(spark.readStream
       .schema("doc_id LONG, text STRING")
-      .parquet(newDocsDir)
-      .withColumn("h1", xxhash64(col("text")))
-      .withColumn("h2", xxhash64(col("text"), lit(0x9e3779b97f4a7c15L)))
-      .withColumn("len", length(col("text")))
+      .parquet(newDocsDir))
       .join(priorKeys, Seq("h1", "h2", "len"), "left_outer")
       .filter(col("__seen").isNull)
       .select(col("doc_id"), col("text"))
@@ -239,7 +230,6 @@ object StreamingJobs {
       shingleN: Int = 3,
       maxEvalDocs: Long = 1000000L,
       maxBucketSide: Int = 1000): DataFrame = {
-    import graft.ops.Dedup
     val numPerm = bands * rowsPerBand
     require(maxEvalDocs > 0 && maxEvalDocs < Int.MaxValue,
       s"maxEvalDocs must be in (0, Int.MaxValue): $maxEvalDocs — the bound " +

@@ -44,36 +44,3 @@ object KernelBench {
     println(f"cells=$cells cells/s=${cells / alignSec / 1e6}%.1fM docs/s(full)=${docs.length / fullSec}%.1f")
   }
 }
-
-/** Stage-level drill-down for AlignKernel.process. */
-object KernelBenchStages {
-  def main(args: Array[String]): Unit = {
-    val words = Array("alleluia", "dominus", "gloria", "sanctus", "benedictus",
-      "meus", "dixit", "batch", "stream", "window", "table", "filter")
-    val rng = new java.util.Random(7)
-    val docs = (0 until 200).map { i =>
-      val t = Array.fill(80 + rng.nextInt(40))(words(rng.nextInt(words.length))).mkString(" ")
-      (t, PageGen.noisyRender(t, i.toLong))
-    }
-    val streams = docs.map { case (_, n) =>
-      n.zipWithIndex.map { case (c, k) => CharBox.at(c, k) }.toVector }
-
-    def time[A](f: => A): Double = { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-    // warmup
-    for (_ <- 0 until 2; i <- 0 until 50) AlignKernel.processStream(docs(i)._1, streams(i))
-
-    val tExpand = time { streams.foreach(Abbrev.expand) }
-    val expanded = streams.map(Abbrev.expand)
-    val ocrs = expanded.map(_.iterator.map(_.ch).mkString)
-    val tAlign = time { docs.zip(ocrs).foreach { case ((t, _), o) => NeedlemanWunsch.alignChars(t, o) } }
-    val aligns = docs.zip(ocrs).map { case ((t, _), o) => NeedlemanWunsch.alignChars(t, o) }
-    val tSyl = time { docs.foreach { case (t, _) => Syllabify.syllabifyText(t) } }
-    val syls = docs.map { case (t, _) => Syllabify.syllabifyText(t) }
-    val tGaps = time { expanded.zip(aligns).foreach { case (e, a) => SpanProject.insertGaps(e, a.ocrAlign) } }
-    val gapped = expanded.zip(aligns).map { case (e, a) => SpanProject.insertGaps(e, a.ocrAlign) }
-    val tProj = time {
-      syls.indices.foreach(i => SpanProject.projectSyllables(syls(i), aligns(i).traAlign, gapped(i)))
-    }
-    println(f"expand=$tExpand%.3f align=$tAlign%.3f syl=$tSyl%.3f gaps=$tGaps%.3f project=$tProj%.3f")
-  }
-}

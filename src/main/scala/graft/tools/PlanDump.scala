@@ -87,8 +87,8 @@ object PlanDump {
     dump("q_dedup_clusters (cluster resolution result)",
       "The emitted plan is Project over a CHECKPOINTED label table " +
         "(LogicalRDD leaves only — asserted in DedupClusterSpec): the " +
-        "iterative min-label propagation ran 2 bounded shuffles per round " +
-        "with eager lineage truncation, so no downstream consumer can " +
+        "pointer-jumping WCC loop (Centrality.components') ran with eager " +
+        "per-round lineage truncation, so no downstream consumer can " +
         "re-trigger the pair pipelines.") {
       SparkEntry.queries("q_dedup_clusters")(spark, sfDir)
     }

@@ -62,6 +62,15 @@ class DedupClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(0L) === 0L)
   }
 
+  test("pointer jumping resolves a 64-id increasing path well inside the cap") {
+    // one-hop propagation would need 63 rounds (id 63 still at 53 after
+    // 10); each pointer jump doubles the distance a label has travelled,
+    // so the fixpoint lands in 7 rounds
+    val pairs = (0L until 63L).map(i => (i, i + 1))
+    val got = clustersOf(pairs, maxIters = 10)
+    assert(got === (0L to 63L).map(_ -> 0L).toMap)
+  }
+
   test("survivors = untouched docs + one canonical per component") {
     import spark.implicits._
     val docs = (0L until 10L).map(i => (i, s"text$i")).toDF("doc_id", "text")
