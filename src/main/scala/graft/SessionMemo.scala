@@ -25,9 +25,9 @@ import org.apache.spark.storage.StorageLevel
   * thread pool.
   *
   * Memoized frames are exempt from [[graft.ops.CacheRegistry]]'s bounded
-  * FIFO: the sort-child persists register 1–2 entries per query, so a
-  * registered memo would be evicted long before its later consumers run,
-  * and each would silently recompute the full upstream.
+  * FIFO: the operators' own persists register entries query after query,
+  * so a registered memo would be evicted long before its later consumers
+  * run, and each would silently recompute the full upstream.
   */
 private[graft] object SessionMemo {
   private var owner: SparkContext = _

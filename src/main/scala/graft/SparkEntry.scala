@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * carrying its name, its oracle and its builder, grouped by family under
   * `graft.catalog`. `queries` and `oracleSql` are both derived from it.
   * This object keeps what several families share: the fixture readers,
-  * the session memos of the shared intermediates, the scratch-dir and
-  * streaming harnesses, and the query-entry wrapper.
+  * the session memos of the shared intermediates, and the scratch-dir and
+  * streaming harnesses. Each query runs the plan its builder wrote.
   */
 object SparkEntry {
 
@@ -25,16 +25,9 @@ object SparkEntry {
       TokenizerQueries.all ++ DedupQueries.all ++ CrawlQueries.all ++
       RelationalQueries.all
 
-  /** Every query by name, wrapped with [[applySessionTuning]] and
-    * [[cacheSortChild]].
-    */
+  /** Every query by name. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map { q =>
-      q.name -> ((s: SparkSession, dir: String) => {
-        applySessionTuning(s)
-        cacheSortChild(s, q.build(s, dir))
-      })
-    }.toMap
+    catalog.map(q => q.name -> q.build).toMap
 
   /** Every query's oracle by name (DuckDB SQL; see [[graft.catalog.Query]]). */
   val oracleSql: Map[String, String] =
@@ -155,10 +148,10 @@ object SparkEntry {
 
   /** Salted aligned table shared by the five alignment consumers
     * (q_align_spans, q_align_metrics, q_doc_json, q_mei_assign, q_mei_xml):
-    * `align()` creates fresh accumulators per call, so every call's typed
-    * plan is unique and neither the CacheManager nor CacheRegistry's plan
-    * dedupe can share kernel output across calls — without the memo every
-    * consumer pass re-runs the full kernel. The flagship bench leg times
+    * `align()` builds a fresh kernel closure per call, so every call's
+    * typed plan is unique and neither the CacheManager nor CacheRegistry's
+    * plan dedupe can share kernel output across calls — without the memo
+    * every consumer pass re-runs the full kernel. The flagship bench leg times
     * `AlignJob.align` directly and never touches this memo.
     */
   private[graft] def alignedFor(s: SparkSession, dir: String): DataFrame =
@@ -320,46 +313,4 @@ object SparkEntry {
       graft.ops.Bpe.train(docs(s, dir), numMerges = 10)
         .orderBy(col("merge_rank"))
         .collect().map(r => (r.getString(1), r.getString(2))).toSeq)
-
-  /** Session-level tuning applied once at query entry (optimization round
-    * 7, guide §2.2/§9): `canChangeCachedPlanOutputPartitioning=true` lets
-    * AQE right-size the output partitioning of cached/checkpointed plans
-    * from their MEASURED byte size (it is off by default in Spark 4 only
-    * to keep cached output partitioning stable for downstream exchange
-    * reuse, which no query here relies on). Without it every cached frame
-    * pins `spark.sql.shuffle.partitions` tasks per consumer stage
-    * regardless of data size — the iterative graph loops paid 32—64 fixed
-    * tasks per round at any SF. Scale-adaptive by construction (AQE
-    * derives the count from bytes, not a constant).
-    */
-  private def applySessionTuning(s: SparkSession): Unit =
-    s.conf.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-
-  /** Persist the child of a query's final GLOBAL SORT (optimization round
-    * 7, guide §5 caching): `orderBy` executes its child TWICE — once for
-    * the range partitioner's sampling job and once for the sort exchange
-    * itself — so everything a query computes above its last shuffle runs
-    * double. Rewriting `Sort(child)` to `Sort(persist(child))` halves that
-    * for every non-trivial query without touching any query's definition
-    * (the persist is semantically transparent; the CORRECTNESS hash is
-    * over sorted rows either way). The guard skips trivial children
-    * (plain scans / checkpoint reads / filters+projections), where a
-    * cache write would cost more than the second pass.
-    */
-  private def cacheSortChild(s: SparkSession, df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.{logical => L}
-    df.queryExecution.analyzed match {
-      case srt: L.Sort if srt.global && srt.child.exists {
-            case _: L.Join | _: L.Aggregate | _: L.Window | _: L.Generate |
-                _: L.SerializeFromObject => true
-            case _ => false
-          } =>
-        val cached = graft.ops.CacheRegistry.register(
-          org.apache.spark.sql.GraftSqlBridge.ofRows(s, srt.child)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        org.apache.spark.sql.GraftSqlBridge.ofRows(
-          s, srt.withNewChildren(Seq(cached.queryExecution.analyzed)))
-      case _ => df
-    }
-  }
 }

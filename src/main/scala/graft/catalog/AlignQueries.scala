@@ -3,10 +3,11 @@ package graft.catalog
 import graft.SparkEntry.{docs, tbl, fanOut, alignedFor, rmTree, scratchDir}
 import graft.catalog.Query.{RepoDir, golden}
 import graft.align.{CleanText, Syllabify}
-import graft.ops.{Multimodal, ScaleWindows}
+import graft.ops.{CacheRegistry, Multimodal, ScaleWindows}
 import graft.pipeline.{AlignJob, EvalJob, Functions, GtXml, MeiAssign, PageGen}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The alignment pipeline: the flagship spans and metrics, its streaming
   * and resumable twins, text extraction and syllabification, evaluation
@@ -111,11 +112,14 @@ object AlignQueries {
       // it in the same task: no span rows leave the task, no url shuffle.
       // The relational EvalJob.evaluate form is exercised (and
       // oracle-checked) by q_eval_gtxml; both forms are asserted
-      // row-identical in tests.
-      AlignJob.evaluate(AlignJob.synthPages(s, dir), graft.align.Scoring.Default,
-        graft.align.Scoring.symmetric(10, -5, -7, -7),
-        saltPartitions = s.sparkContext.defaultParallelism)
-        .orderBy(col("url"))
+      // row-identical in tests. Persisted under the sort: the range
+      // partitioner's sampling job would otherwise re-run the kernel.
+      val scored = CacheRegistry.register(
+        AlignJob.evaluate(AlignJob.synthPages(s, dir), graft.align.Scoring.Default,
+          graft.align.Scoring.symmetric(10, -5, -7, -7),
+          saltPartitions = s.sparkContext.defaultParallelism)
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      scored.orderBy(col("url"))
     },
 
     // ---- O45 MEI enrichment (writeToMEI.py:41-145): neume→syllable
@@ -127,7 +131,7 @@ object AlignQueries {
       // session-memoized aligned table (alignedFor) keeps the kernel
       // computed once for this AND the other four alignment consumers
       // (round 7: the old per-query persist never cache-hit across calls
-      // because align()'s accumulators make each plan unique)
+      // because align()'s kernel closure makes each plan unique)
       val spans = AlignJob.spansDf(alignedFor(s, dir))
       MeiAssign.assign(MeiAssign.synthNeumes(spans), spans, medLineSpacing = 1.0)
     },
@@ -137,7 +141,7 @@ object AlignQueries {
     //      ElementTree's serialization of the reference-edited tree ----
     Query("q_mei_xml") { (s, dir) =>
       val spans = AlignJob.spansDf(alignedFor(s, dir))
-      val neumes = graft.ops.CacheRegistry.register(
+      val neumes = CacheRegistry.register(
         MeiAssign.synthNeumes(spans).persist())
       MeiAssign.serializeXml(neumes,
         MeiAssign.assign(neumes, spans, medLineSpacing = 1.0))

@@ -2,8 +2,10 @@ package graft.catalog
 
 import graft.SparkEntry.{docs, httpWarcArchives, linkEdgesFor, harmonicFor}
 import graft.catalog.Query.{GoldenDir, golden}
+import graft.ops.CacheRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The link graph and the crawl: edges, rankings, components and label
   * propagation over the LinkGen fixture, robots and sitemaps, frontier and
@@ -148,9 +150,9 @@ object CrawlQueries {
          |     (SELECT count(*) AS c FROM e GROUP BY dst)) AS max_in_degree"""
         .stripMargin) { (s, dir) =>
       // persisted: SIX aggregate subtrees consume the deduped edge frame
-      val e = graft.ops.CacheRegistry.register(
+      val e = CacheRegistry.register(
         linkEdgesFor(s, dir).select(col("src"), col("dst")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          .persist(StorageLevel.MEMORY_AND_DISK))
       // count(when(...)), not sum(when(...)): sum over zero rows is NULL
       // where the DuckDB oracle's count(*) is 0 — empty-graph parity
       val base = e.agg(count(lit(1)).as("n_edges"),
@@ -501,9 +503,13 @@ object CrawlQueries {
       val block = Seq("src2-site.org", "src7-site.co.uk", "src4-site.com.au",
           "src5-site.ac.jp", "src6-site.xx.ck", "www.ck")
         .toDF("domain")
-      graft.ops.Domains.filterByDomain(docsWithIntlUrls(s, dir), block)
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
+      // persisted under the sort: the range partitioner's sampling job
+      // would otherwise re-run the url synthesis and the domain parse
+      val kept = CacheRegistry.register(
+        graft.ops.Domains.filterByDomain(docsWithIntlUrls(s, dir), block)
+          .select(col("doc_id"))
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      kept.orderBy(col("doc_id"))
     },
 
     // ---- per-registered-domain corpus statistics (the mixing-policy

@@ -2,8 +2,10 @@ package graft.catalog
 
 import graft.SparkEntry.{docs, writeFixtureRecord, httpWarcArchives, fanOut, scratchDir, drainStream}
 import graft.catalog.Query.{GoldenDir, golden}
+import graft.ops.CacheRegistry
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Ingest: mojibake repair, main-content, Markdown and table extraction,
   * head metadata, charset sniffing, PDF and format routing, WARC/WET/WAT
@@ -278,12 +280,15 @@ object IngestQueries {
     //      Python mirror ----
     Query("q_main_content") { (s, dir) =>
       import s.implicits._
-      fanOut(s, docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
-        .map { case (id, text) =>
-          val e = graft.align.MainContent.extract(boilerplateHtml(id, text))
-          (id, e.content, e.nBlocks, e.nKept, e.removedChars)
-        }.toDF("doc_id", "content", "n_blocks", "n_kept", "removed_chars")
-        .orderBy(col("doc_id"))
+      // persisted under the sort, as in q_markdown
+      val extracted = CacheRegistry.register(
+        fanOut(s, docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
+          .map { case (id, text) =>
+            val e = graft.align.MainContent.extract(boilerplateHtml(id, text))
+            (id, e.content, e.nBlocks, e.nKept, e.removedChars)
+          }.toDF("doc_id", "content", "n_blocks", "n_kept", "removed_chars")
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      extracted.orderBy(col("doc_id"))
     },
 
     // ---- HTML→Markdown structured extraction (FineWeb/Dolma-style):
@@ -293,13 +298,17 @@ object IngestQueries {
     //      clean-room Python mirror (graftpy.mdx_convert) ----
     Query("q_markdown") { (s, dir) =>
       import s.implicits._
-      fanOut(s, docs(s, dir).select(col("doc_id"), col("text")))
-        .as[(Long, String)]
-        .map { case (id, text) =>
-          val c = graft.align.Markdown.convert(structuredHtml(id, text))
-          (id, c.markdown, c.nBlocks)
-        }.toDF("doc_id", "markdown", "n_blocks")
-        .orderBy(col("doc_id"))
+      // persisted under the sort: the range partitioner's sampling job
+      // would otherwise re-run the converter
+      val converted = CacheRegistry.register(
+        fanOut(s, docs(s, dir).select(col("doc_id"), col("text")))
+          .as[(Long, String)]
+          .map { case (id, text) =>
+            val c = graft.align.Markdown.convert(structuredHtml(id, text))
+            (id, c.markdown, c.nBlocks)
+          }.toDF("doc_id", "markdown", "n_blocks")
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      converted.orderBy(col("doc_id"))
     },
 
     // ---- streaming form of q_markdown (SHARED golden, anti-drift: the
@@ -322,12 +331,15 @@ object IngestQueries {
     //      q_markdown (one kernel, two consumers) ----
     Query("q_html_tables") { (s, dir) =>
       import s.implicits._
-      fanOut(s, docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
-        .flatMap { case (id, text) =>
-          graft.align.Markdown.convert(structuredHtml(id, text)).tables
-            .map(c => (id, c.tableIdx, c.rowIdx, c.colIdx, c.isHeader, c.text))
-        }.toDF("doc_id", "table_idx", "row_idx", "col_idx", "is_header", "cell")
-        .orderBy(col("doc_id"), col("table_idx"), col("row_idx"), col("col_idx"))
+      // persisted under the sort, as in q_markdown
+      val cells = CacheRegistry.register(
+        fanOut(s, docs(s, dir).select(col("doc_id"), col("text"))).as[(Long, String)]
+          .flatMap { case (id, text) =>
+            graft.align.Markdown.convert(structuredHtml(id, text)).tables
+              .map(c => (id, c.tableIdx, c.rowIdx, c.colIdx, c.isHeader, c.text))
+          }.toDF("doc_id", "table_idx", "row_idx", "col_idx", "is_header", "cell")
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      cells.orderBy(col("doc_id"), col("table_idx"), col("row_idx"), col("col_idx"))
     },
 
     // ---- head-metadata extraction (title / description / og:title /
@@ -344,7 +356,11 @@ object IngestQueries {
             graft.pipeline.MetaGen.pageHtml(id, t)
               .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }.toDF("url", "html")
-      graft.ops.HtmlMeta.headMeta(pages).orderBy(col("url"))
+      // persisted under the sort: the range partitioner's sampling job
+      // would otherwise re-run the page synthesis and the head parse
+      val meta = CacheRegistry.register(
+        graft.ops.HtmlMeta.headMeta(pages).persist(StorageLevel.MEMORY_AND_DISK))
+      meta.orderBy(col("url"))
     },
 
     // ---- charset sniff + decode (WHATWG-subset: BOM, meta charset,
@@ -375,7 +391,10 @@ object IngestQueries {
         .map { case (id, t) =>
           (id, graft.pipeline.PdfGen.pdfBytes(id, t))
         }.toDF("doc_id", "pdf")
-      graft.ops.Pdf.pdfText(payloads).orderBy(col("doc_id"))
+      // persisted under the sort, as in q_extract_route
+      val extracted = CacheRegistry.register(
+        graft.ops.Pdf.pdfText(payloads).persist(StorageLevel.MEMORY_AND_DISK))
+      extracted.orderBy(col("doc_id"))
     },
 
     // ---- format-dispatch extraction: magic-byte routing between the
@@ -394,15 +413,22 @@ object IngestQueries {
             else graft.pipeline.CharsetGen.payload(id, t)
           (id, b)
         }.toDF("doc_id", "payload")
-      graft.ops.Pdf.extractAny(payloads).orderBy(col("doc_id"))
+      // persisted under the sort: the range partitioner's sampling job
+      // would otherwise re-run the payload synthesis and the extraction
+      val extracted = CacheRegistry.register(
+        graft.ops.Pdf.extractAny(payloads).persist(StorageLevel.MEMORY_AND_DISK))
+      extracted.orderBy(col("doc_id"))
     },
 
     // ---- WARC archive → record split → page-text extraction (the
     //      archive-ingest head of the extraction pipeline; parser
     //      mirrored clean-room over the shared archive convention) ----
-    Query("q_warc_records")((s, dir) =>
-      graft.ops.Warc.records(warcArchives(s, dir))
-        .orderBy(col("archive_id"), col("rec_offset"))),
+    Query("q_warc_records") { (s, dir) =>
+      // persisted under the sort, as in q_warc_gz
+      val records = CacheRegistry.register(
+        graft.ops.Warc.records(warcArchives(s, dir)).persist(StorageLevel.MEMORY_AND_DISK))
+      records.orderBy(col("archive_id"), col("rec_offset"))
+    },
 
     // ---- the same records through the .warc.gz member-per-record path
     //      (Common Crawl layout): gzip member split (RFC 1952 headers,
@@ -411,9 +437,13 @@ object IngestQueries {
     //      and must equal q_warc_records' rows exactly ----
     // generated through the mirror's own gzip-member path; row-equal to
     // q_warc_records by construction (the generator asserts it)
-    Query("q_warc_gz")((s, dir) =>
-      graft.ops.Warc.recordsGz(warcGzArchives(s, dir))
-        .orderBy(col("archive_id"), col("rec_offset"))),
+    Query("q_warc_gz") { (s, dir) =>
+      // persisted under the sort: the range partitioner's sampling job
+      // would otherwise re-run the archive synthesis and the parse
+      val records = CacheRegistry.register(
+        graft.ops.Warc.recordsGz(warcGzArchives(s, dir)).persist(StorageLevel.MEMORY_AND_DISK))
+      records.orderBy(col("archive_id"), col("rec_offset"))
+    },
 
     // ---- CDX index generation (the crawl-index artifact that makes a
     //      petabyte of archives random-accessible): SURT urlkey, SHA-1
@@ -442,9 +472,13 @@ object IngestQueries {
     //      VERBATIM (anti-drift: the gz path must change nothing) ----
     // the gz ingest composition must change NOTHING vs the plain path:
     // shares q_warc_http's golden verbatim (anti-drift)
-    Query("q_ingest_gz_http", golden("q_warc_http"))((s, dir) =>
-      graft.ops.Warc.recordsHttpGz(httpWarcGzArchives(s, dir))
-        .orderBy(col("archive_id"), col("rec_offset"))),
+    Query("q_ingest_gz_http", golden("q_warc_http")) { (s, dir) =>
+      // persisted under the sort, as in q_warc_gz
+      val records = CacheRegistry.register(
+        graft.ops.Warc.recordsHttpGz(httpWarcGzArchives(s, dir))
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      records.orderBy(col("archive_id"), col("rec_offset"))
+    },
 
     // ---- WET generation (the extracted-text distribution format):
     //      record split + extraction + conversion-record serialization

@@ -2,8 +2,9 @@ package graft.catalog
 
 import graft.SparkEntry.{docs, fanOut, trainedUnigramFor, trainedWordpieceFor, trainedMergesFor}
 import graft.catalog.Query.GoldenDir
-import graft.ops.TextOps
+import graft.ops.{CacheRegistry, TextOps}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Tokenizers, language models and training-data packing: n-gram and
   * Kneser-Ney perplexity, the quality classifier, BPE, WordPiece and
@@ -59,8 +60,11 @@ object TokenizerQueries {
     Query("q_kn_perplexity") { (s, dir) =>
       val d = docs(s, dir)
       val model = graft.ops.NgramLm.trainKn(d.filter(col("doc_id") % 7 === 0))
-      graft.ops.NgramLm.scoreKn(fanOut(s, d), model)
-        .orderBy(col("doc_id"))
+      // persisted under the sort: the range partitioner's sampling job
+      // would otherwise re-run the scoring kernel
+      val scored = CacheRegistry.register(
+        graft.ops.NgramLm.scoreKn(fanOut(s, d), model).persist(StorageLevel.MEMORY_AND_DISK))
+      scored.orderBy(col("doc_id"))
     },
 
     // ---- fasttext-style hashed linear quality classifier (stateless
@@ -213,10 +217,13 @@ object TokenizerQueries {
     // ---- Unigram encode (train → encode round trip): max-likelihood
     //      Viterbi segmentation per word against the broadcast vocab,
     //      identity fallback for unseen code points ----
-    Query("q_unigram_encode")((s, dir) =>
-      graft.ops.Unigram.encodeCounts(fanOut(s, docs(s, dir)),
-        trainedUnigramFor(s, dir))
-        .orderBy(col("doc_id"))),
+    Query("q_unigram_encode") { (s, dir) =>
+      // persisted under the sort, as in q_kn_perplexity
+      val encoded = CacheRegistry.register(
+        graft.ops.Unigram.encodeCounts(fanOut(s, docs(s, dir)), trainedUnigramFor(s, dir))
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      encoded.orderBy(col("doc_id"))
+    },
 
     // ---- tokenizer-aware packing pipeline (composition row): train BPE
     //      -> encode the corpus -> chunk-index by PIECES (not whitespace

@@ -15,12 +15,10 @@ private[graft] object CacheRegistry {
   // one other in-flight query's registrations — FIFO eviction of an entry a
   // still-unexecuted downstream plan needs is CORRECT (Spark recomputes) but
   // a perf cliff; the headroom makes it require 4+ interleaved operators.
-  // Optimization round 7: briefly raised to 64 to protect the session
-  // memos from the sort-child churn, then restored once the memos became
-  // registry-EXEMPT (graft.SessionMemo) — registered entries are now
-  // only needed within one query's bench passes, and every live cache
-  // entry lengthens CacheManager's per-QueryExecution sameResult sweep,
-  // a per-query planning tax across all 167 queries.
+  // The session memos are registry-EXEMPT (graft.SessionMemo), so
+  // registered entries are only needed within one query's passes, and
+  // every live cache entry lengthens CacheManager's per-QueryExecution
+  // sameResult sweep, a per-query planning tax across all 167 queries.
   private val MaxEntries = 16
   private val entries = new java.util.ArrayDeque[DataFrame]()
 
@@ -44,6 +42,19 @@ private[graft] object CacheRegistry {
     entries.addLast(df)
     while (entries.size > MaxEntries) release(entries.removeFirst())
     df
+  }
+
+  /** Release every registered frame whose plan reads `input`'s plan: for
+    * an operator done with an input it built (a fresh checkpoint), so no
+    * later query can hit a frame cached over it.
+    */
+  def releaseReading(input: DataFrame): Unit = entries.synchronized {
+    val plan = input.queryExecution.analyzed
+    val it = entries.iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (e.queryExecution.analyzed.exists(_.sameResult(plan))) { it.remove(); release(e) }
+    }
   }
 
   /** Unpersist, ignoring failures. Spark keeps a stopped context's

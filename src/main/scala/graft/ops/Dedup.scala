@@ -606,8 +606,11 @@ object Dedup {
     val edges = Lineage.truncate(pairs.select(
       col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst")))
     val (labels, _) = Centrality.componentLabels(edges, maxIters)
-    // the pair table is dead once the labels are checkpointed; only the
-    // (pairs-sized) final label table stays materialized for consumers
+    // the pair table and the loop frames cached over it (its distinct
+    // edges and undirected view) are dead once the labels are
+    // checkpointed; only the (pairs-sized) final label table stays
+    // materialized for consumers
+    CacheRegistry.releaseReading(edges)
     edges.unpersist()
     labels.select(col("url").as("doc_id"), col("component").as("canonical_doc_id"))
   }

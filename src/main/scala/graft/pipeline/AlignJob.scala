@@ -66,9 +66,6 @@ object AlignJob {
     val spark = pages.sparkSession
     import spark.implicits._
 
-    val cellsAcc = spark.sparkContext.longAccumulator("graft.align.cellsFilled")
-    val docsAcc = spark.sparkContext.longAccumulator("graft.align.docsAligned")
-
     layout(pages, saltPartitions).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       // one reusable DP workspace + syllable memo per partition: no
@@ -77,8 +74,6 @@ object AlignJob {
       val sylCache = new Syllabify.Cache
       it.map { p =>
         val r = AlignKernel.process(p.text, p.html, scoring, ws = ws, sylCache = sylCache)
-        cellsAcc.add(r.cellsFilled)
-        docsAcc.add(1)
         AlignedDoc(
           url = p.url,
           n_spans = r.spans.length,
@@ -177,7 +172,7 @@ object AlignJob {
   def spans(aligned: Dataset[AlignedDoc]): DataFrame = spansDf(aligned.toDF())
 
   /** [[spans]] over an untyped aligned table (the session-memoized cached
-    * form — the typed plan's accumulator closures make every align() call
+    * form — the typed plan's kernel closure makes every align() call
     * plan-unique, so sharing kernel output across queries requires sharing
     * the DataFrame itself).
     */

@@ -1,9 +1,11 @@
 package graft.pipeline
 
 import graft.align.{AlignKernel, BBox, Scoring, SylBox}
+import graft.ops.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.storage.StorageLevel
 
 /** Alignment evaluation — the reference's metrics layer
   * (evaluate_text_alignment.py:109-131, SURVEY.md O40–O44) re-expressed
@@ -193,7 +195,9 @@ object EvalJob {
       goy <- gapOpensY; gex <- gapExtendsX; gey <- gapExtendsY
     } yield (m, mm, gox, goy, gex, gey)
 
-    grid.toDS()
+    // persisted under the sort: the range partitioner's sampling job would
+    // otherwise re-run the kernel over the grid
+    val scored = CacheRegistry.register(grid.toDS()
       .repartition(spark.sparkContext.defaultParallelism)
       .map { case (m, mm, gox, goy, gex, gey) =>
         val sc = Scoring(m, mm, gox, goy, gex, gey)
@@ -208,7 +212,8 @@ object EvalJob {
       }
       .toDF("match", "mismatch", "gap_open_x", "gap_open_y",
         "gap_extend_x", "gap_extend_y", "mean_score")
-      .orderBy(col("mean_score"), col("match"), col("mismatch"),
+      .persist(StorageLevel.MEMORY_AND_DISK))
+    scored.orderBy(col("mean_score"), col("match"), col("mismatch"),
         col("gap_open_x"), col("gap_open_y"), col("gap_extend_x"), col("gap_extend_y"))
   }
 }

@@ -71,6 +71,26 @@ class DedupClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got === (0L to 63L).map(_ -> 0L).toMap)
   }
 
+  test("a call leaves no loop frame cached: only checkpoints stay persisted") {
+    import spark.implicits._
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    // cached frames only: the rounds' local checkpoints (the label table
+    // among them) are freed by the context cleaner when collected, so
+    // their count depends on GC timing
+    def cached = spark.sparkContext.getPersistentRDDs.values.filterNot(_.isCheckpointed)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // start from an empty cache: a frame the call leaves cached then shows
+    // as an entry, however many the earlier cases left registered
+    spark.catalog.clearCache()
+    val registered = CacheRegistry.size
+    val got = Dedup.nearDupClusters(pairs, maxIters = 10)
+    assert(cacheManager.isEmpty, "the call left frames cached")
+    assert(cached.isEmpty, cached.map(_.toDebugString).mkString("\n"))
+    assert(CacheRegistry.size === registered)
+    assert(got.count() === 64L)
+  }
+
   test("survivors = untouched docs + one canonical per component") {
     import spark.implicits._
     val docs = (0L until 10L).map(i => (i, s"text$i")).toDF("doc_id", "text")
@@ -89,8 +109,8 @@ class DedupClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // every leaf of the optimized plan must be a checkpointed-RDD scan —
     // the upstream pair plan (at scale: the full minhash+simhash pipelines)
     // is gone from the lineage, so no consumer action can re-trigger it,
-    // and the only driver-side materialization inside the loop was the
-    // 1-row label-sum scalar
+    // and the loop's only driver-side read is its convergence check, a
+    // scan of each round's checkpointed `__chg` column
     val leaves = got.queryExecution.optimizedPlan.collectLeaves()
     assert(leaves.nonEmpty)
     leaves.foreach { l =>
