@@ -700,13 +700,13 @@ object Bpe {
           })
           val superseded = syms
           syms = Lineage.truncate(syms.select(col("freq"), mergeUdf(col("syms")).as("syms")))
-          superseded.unpersist()
+          Lineage.release(superseded)
         }
       }
       if (m > 1) pc.unpersist()
     }
     lastTrainRounds = rounds
-    syms.unpersist()
+    Lineage.release(syms)
     spark.createDataFrame(
       spark.sparkContext.parallelize(merges.toSeq, 1), TrainSchema)
   }

@@ -611,7 +611,7 @@ object Dedup {
     // checkpointed; only the (pairs-sized) final label table stays
     // materialized for consumers
     CacheRegistry.releaseReading(edges)
-    edges.unpersist()
+    Lineage.release(edges)
     labels.select(col("url").as("doc_id"), col("component").as("canonical_doc_id"))
   }
 

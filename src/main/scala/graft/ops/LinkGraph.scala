@@ -363,9 +363,9 @@ object LinkGraph {
     * distributed loop — plain partial-aggregating `sum`s (no per-vertex
     * list, hot in-degrees never materialize in one task), the dangling
     * mass folded into the round's plan as a broadcast 1-row agg (one
-    * action per round, no driver collect), each round's rank frame
-    * lineage-truncated ([[Lineage]]) so the logical plan stays O(1)
-    * instead of 2^k.
+    * action per round, no driver collect), `iters` rounds of
+    * [[Lineage.fixpoint]] (no `__chg`, so no early stop), each rank frame
+    * lineage-truncated so the logical plan stays O(1) instead of 2^k.
     * Same algorithm, ULP-level run-to-run wobble documented.
     */
   def pagerank(
@@ -410,9 +410,8 @@ object LinkGraph {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     vDeg.count()
 
-    var ranks = vDeg.select(col("url"), lit(1.0 / nD).as("rank"))
-    var round = 0
-    while (round < iters) {
+    val start = vDeg.select(col("url"), lit(1.0 / nD).as("rank"))
+    Lineage.fixpoint(start, iters) { (ranks, _) =>
       val withDeg = ranks.join(vDeg, Seq("url"))
       // dangling mass as a 1-ROW AGG cross-joined back in (broadcast):
       // the whole round is ONE plan / ONE action (the eager checkpoint) —
@@ -430,17 +429,14 @@ object LinkGraph {
         .select(col("src"), col("dst"), col("contrib"))
       val inbound =
         contribs.groupBy(col("dst")).agg(sum(col("contrib")).as("contrib_sum"))
-      val next = vertices
+      vertices
         .join(inbound.withColumnRenamed("dst", "url"), Seq("url"), "left")
         .crossJoin(broadcast(dmDf))
         .select(col("url"),
           (lit(base) + lit(damping) *
             (coalesce(col("contrib_sum"), lit(0.0)) + col("__dm") / lit(nD)))
             .as("rank"))
-      ranks = Lineage.truncate(next)
-      round += 1
-    }
-    ranks
+    }._1
   }
 
   /** The exact-mode kernel: K damped iterations over a collected simple

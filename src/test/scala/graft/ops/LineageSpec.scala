@@ -1,0 +1,124 @@
+package graft.ops
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The graph loops' round driver: `Lineage.fixpoint` stops at the first
+  * round that changes nothing or at its cap, and frees every superseded
+  * round's checkpoint; `Lineage.release` frees only a checkpoint the frame
+  * reads through projections, nothing else.
+  */
+class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  override def afterAll(): Unit = spark.stop()
+
+  /** The RDD behind a frame's checkpoint leaf. */
+  private def checkpointRdd(df: DataFrame): RDD[_] =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }.get
+
+  private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Eight rows with x = 0 and a round x' = min(x + 1, 3): rounds 1–3
+    * change every row, round 4 none. `seen` keeps a strong reference to
+    * every state the round receives, with its round number, so only an
+    * explicit release (not GC) can drop their checkpoints.
+    */
+  private final class Counting {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Int)]
+    val start: DataFrame =
+      Lineage.truncate(spark.range(8).select(col("id"), lit(0L).as("x")))
+    def round(state: DataFrame, t: Int): DataFrame = {
+      seen += state -> t
+      state.select(col("id"), least(col("x") + 1L, lit(3L)).as("x"),
+        (col("x") < 3L).as("__chg"))
+    }
+    def run(maxRounds: Int): (DataFrame, Boolean) =
+      Lineage.fixpoint(start, maxRounds)(round)
+  }
+
+  private def xs(df: DataFrame): Set[Long] =
+    df.select(col("x")).collect().map(_.getLong(0)).toSet
+
+  test("fixpoint releases every superseded round's checkpoint and keeps the final one") {
+    val loop = new Counting
+    val (out, converged) = loop.run(10)
+    assert(converged)
+    assert(loop.seen.size === 4)
+    val live = persistentIds
+    assert(live.contains(checkpointRdd(out).id), "the final state's checkpoint was freed")
+    loop.seen.foreach { case (state, t) =>
+      assert(!live.contains(checkpointRdd(state).id),
+        s"the checkpoint of the state round $t read is still persisted")
+    }
+    assert(out.columns.toSeq === Seq("id", "x"))
+    assert(xs(out) === Set(3L))
+  }
+
+  test("fixpoint stops at the first unchanged round, or after exactly maxRounds") {
+    val converging = new Counting
+    val (fixed, c1) = converging.run(10)
+    assert(c1)
+    assert(converging.seen.map(_._2).toSeq === Seq(1, 2, 3, 4))
+    assert(xs(fixed) === Set(3L))
+
+    // round 3 reaches x = 3 but only round 4 certifies it
+    val capped = new Counting
+    val (last, c2) = capped.run(3)
+    assert(!c2)
+    assert(capped.seen.map(_._2).toSeq === Seq(1, 2, 3))
+    assert(xs(last) === Set(3L))
+
+    val short = new Counting
+    val (early, c3) = short.run(2)
+    assert(!c3)
+    assert(short.seen.size === 2)
+    assert(xs(early) === Set(2L))
+  }
+
+  test("release leaves a persisted frame over a checkpoint and a non-checkpoint state alone") {
+    val ck = Lineage.truncate(spark.range(10).select(col("id"), (col("id") * 2L).as("y")))
+    // persisted, not yet materialized: it still reads the checkpoint
+    val projected = ck.select(col("id"), col("y")).persist()
+    val aggregated = ck.groupBy((col("id") % 2L).as("k")).agg(sum(col("y")).as("s")).persist()
+    // a start state over a cached frame, like hits' and pagerank's
+    val vertices = spark.range(5).select(col("id").as("url")).distinct().persist()
+    vertices.count()
+    val start = vertices.select(col("url"), lit(1.0).as("rank"))
+
+    val before = persistentIds
+    assert(before.contains(checkpointRdd(ck).id))
+    Seq(projected, aggregated, start).foreach(Lineage.release)
+    assert(persistentIds === before)
+    assert(projected.count() === 10L)
+    assert(aggregated.count() === 2L)
+    assert(ck.count() === 10L)
+    assert(start.count() === 5L)
+    Seq(projected, aggregated, vertices).foreach(_.unpersist())
+  }
+
+  test("a released checkpoint is freed, and reading it again fails loudly") {
+    val ck = Lineage.truncate(spark.range(10).toDF("id"))
+    val state = ck.select(col("id"))
+    val id = checkpointRdd(ck).id
+    assert(persistentIds.contains(id))
+    Lineage.release(state)
+    assert(!persistentIds.contains(id))
+    val err = intercept[Exception](ck.count())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("Checkpoint block")), err)
+  }
+}
