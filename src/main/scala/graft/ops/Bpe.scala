@@ -253,6 +253,9 @@ object Bpe {
     Integer.compare(a.length - i, b.length - j)
   }
 
+  /** [[codePointCompare]] as an `Ordering` (serializable, for RDD closures). */
+  private[graft] val codePointOrder: Ordering[String] = (a, b) => codePointCompare(a, b)
+
   /** Split by CODE POINT, not UTF-16 code unit: train()'s regex split("")
     * is code-point aware, so a supplementary-plane char is one trainable
     * symbol — `w.map(_.toString)` would shear it into surrogate halves no

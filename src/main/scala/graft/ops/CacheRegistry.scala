@@ -44,19 +44,6 @@ private[graft] object CacheRegistry {
     df
   }
 
-  /** Release every registered frame whose plan reads `input`'s plan: for
-    * an operator done with an input it built (a fresh checkpoint), so no
-    * later query can hit a frame cached over it.
-    */
-  def releaseReading(input: DataFrame): Unit = entries.synchronized {
-    val plan = input.queryExecution.analyzed
-    val it = entries.iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.queryExecution.analyzed.exists(_.sameResult(plan))) { it.remove(); release(e) }
-    }
-  }
-
   /** Unpersist, ignoring failures. Spark keeps a stopped context's
     * CacheManager reachable, so a frame of a stopped session must still be
     * unpersisted to drop its cached plan from that manager; what its dead

@@ -2,9 +2,15 @@ package graft.ops
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, GraftSqlBridge}
-import org.apache.spark.sql.expressions.Aggregator
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.{KryoSerializer, Serializer}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Harmonic centrality over the link graph — the ranking Common Crawl
@@ -26,16 +32,18 @@ import org.apache.spark.storage.StorageLevel
   *
   *   - `harmonicHll`: the 10^12-edge path — HyperBall (Boldi & Vigna,
   *     2013): every vertex carries a 2^B-register HyperLogLog sketch of
-  *     the set of vertices that reach it within t hops; one round is
-  *     edges ⋈ sketches → register-wise max groupBy — a plain
-  *     partial-aggregating shuffle whose state is m bytes per vertex, no
-  *     per-pair work anywhere. H accumulates (|B_t| − |B_{t−1}|)/t from
-  *     the HLL estimates. Every round is lineage-truncated ([[Lineage]])
-  *     like the pagerank loop. The sketch hash (md5 head), register
-  *     update rule, estimator (raw + linear-counting branch, portable
-  *     ln) and all fold orders are PINNED, so the sketch registers are
-  *     cross-engine identical integers and the estimates bit-identical
-  *     doubles — the HLL path gets a hard golden too, not a tolerance.
+  *     the set of vertices that reach it within t hops; one round sends
+  *     each sketch along the out-edges and register-maxes what a vertex
+  *     receives — one map-side-combining shuffle whose state is m bytes
+  *     per vertex, no per-pair work anywhere. H accumulates
+  *     (|B_t| − |B_{t−1}|)/t from the HLL estimates. The rounds are RDD
+  *     rounds, like WCC's and LPA's (see [[loopPartitions]]), one
+  *     checkpointed job each ([[Lineage.rddFixpoint]]). The sketch hash
+  *     (md5 head), register update rule, estimator (raw + linear-counting
+  *     branch, portable ln) and all fold orders are PINNED, so the sketch
+  *     registers are cross-engine identical integers and the estimates
+  *     bit-identical doubles — the HLL path gets a hard golden too, not a
+  *     tolerance.
   */
 object Centrality {
 
@@ -96,66 +104,21 @@ object Centrality {
     else raw
   }
 
-  /** Register-wise max over sketch arrays — the HyperBall union. Max is
-    * commutative/associative/idempotent, so partial (map-side) aggregation
-    * is exact regardless of partitioning.
+  /** Register-wise max of `b` into `a` (mutated and returned) — the
+    * HyperBall union. Max is commutative/associative/idempotent, so
+    * map-side combining is exact regardless of partitioning.
     */
-  private final class RegMax extends Aggregator[Array[Byte], Array[Byte], Array[Byte]] {
-    def zero: Array[Byte] = new Array[Byte](M)
-    // mutate the buffer in place (the Aggregator contract allows it):
-    // this runs once per edge per round — a fresh allocation here is
-    // per-edge garbage on the graphs the HyperBall path exists for
-    def reduce(acc: Array[Byte], x: Array[Byte]): Array[Byte] = merge(acc, x)
-    def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-      var i = 0
-      while (i < M) {
-        if (b(i) > a(i)) a(i) = b(i)
-        i += 1
-      }
-      a
+  private def regMax(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    var i = 0
+    while (i < M) {
+      if (b(i) > a(i)) a(i) = b(i)
+      i += 1
     }
-    def finish(acc: Array[Byte]): Array[Byte] = acc
-    def bufferEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+    a
   }
 
   /** The exact-path edge cap (shared by every oracle kernel here). */
   private val ExactModeEdgeCap = 5000000L
-
-  /** Run an iterative loop body under a SCALE-DERIVED shuffle layout
-    * (optimization round 7, guide §2.2 "fewer, larger partitions" + the
-    * round brief's "derive partitioning from input size, never a local
-    * constant"): partitions = ceil(stateRows / 2M) — ~100 MB of
-    * (url, label) rows per partition. When that lands BELOW the session
-    * parallelism (the loop state fits a handful of partitions), AQE's
-    * per-stage query-stage materialization is pure overhead — each tiny
-    * round paid 4–6 driver roundtrips ≈ 100 ms each — so the loop runs
-    * with AQE off and the derived partition count: one job per round
-    * action instead of one per exchange (measured: q_components_dist
-    * 5.2 → 3.9 s, q_lpa_dist 4.9 → 3.5, q_harmonic_hll 3.9 → 2.8 at
-    * sf0.1). At production scale the derived count exceeds the session
-    * parallelism and the body runs UNCHANGED (AQE on, its skew handling
-    * intact) — the dispatch is data-driven, same discipline as the
-    * smallInputThreshold windows.
-    *
-    * The small-state overrides live in a session clone
-    * ([[org.apache.spark.sql.GraftSqlBridge.withConf]]), never in the
-    * caller's conf: `loop` gets the edges re-homed into the clone, and its
-    * result is re-homed to the caller's session.
-    */
-  private[graft] def withLoopShuffleLayout(edgesDf: DataFrame, stateRows: Long)(
-      loop: DataFrame => DataFrame): DataFrame = {
-    val spark = edgesDf.sparkSession
-    val targetRowsPerPartition = 2000000L
-    val derived = math.max(1L, (stateRows + targetRowsPerPartition - 1) / targetRowsPerPartition)
-    if (derived >= spark.sparkContext.defaultParallelism) loop(edgesDf)
-    else GraftSqlBridge.withConf(spark,
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" -> derived.toString) { clone =>
-      val out = loop(GraftSqlBridge.ofRows(clone, edgesDf.queryExecution.analyzed))
-      GraftSqlBridge.ofRows(spark, out.queryExecution.analyzed)
-    }
-  }
 
   /** ONE bounded collect of the deduplicated edge set — the shared
     * oracle-path gate (loud failure past the cap).
@@ -308,10 +271,9 @@ object Centrality {
     * pagerank production loop: each half-iteration is one edge ⋈ scores
     * join + one partial-aggregating sum, the L2 normalizer is a 1-row
     * agg broadcast back in (one action per round via the eager
-    * checkpoint), `iters` rounds of [[Lineage.fixpoint]] (no `__chg`, so
-    * no early stop). Float sums shuffle-order
-    * wobble at the ULP level (documented — the exact path is the
-    * oracle).
+    * checkpoint), `iters` rounds of [[Lineage.fixpoint]]. Float sums
+    * wobble with shuffle order at the ULP level (documented — the exact
+    * path is the oracle).
     */
   def hits(edgesDf: DataFrame, iters: Int = 20): DataFrame = {
     require(iters >= 1, s"hits: iters must be >= 1, got $iters")
@@ -350,7 +312,7 @@ object Centrality {
             when(col("__n2") === 0.0, col("__hh"))
               .otherwise(col("__hh") / col("__n2")).as("hub")),
         Seq("url"))
-    }._1
+    }
   }
 
   /** Label-propagation community detection (Raghavan et al. 2007) over
@@ -386,15 +348,10 @@ object Centrality {
       while (v < verts.length) {
         if (nbrs(v).isEmpty) next(v) = labels(v)
         else {
-          val counts = scala.collection.mutable.HashMap.empty[String, Long]
+          val counts = mutable.HashMap.empty[String, Long]
           nbrs(v).foreach(u =>
             counts.updateWith(labels(u))(c => Some(c.getOrElse(0L) + 1L)))
-          var best: String = null
-          var bestC = 0L
-          counts.foreach { case (l, c) =>
-            if (c > bestC || (c == bestC && Bpe.codePointCompare(l, best) < 0)) { best = l; bestC = c }
-          }
-          next(v) = best
+          next(v) = mostFrequent(counts)
         }
         v += 1
       }
@@ -451,11 +408,12 @@ object Centrality {
     verts.indices.map(i => (verts(i), canon(find(i)))).toArray
   }
 
+
   /** The deduplicated (src, dst) edge set, persisted `MEMORY_AND_DISK`
-    * and registered — the one edge build of every distributed graph loop
-    * ([[hits]], [[harmonicHll]], [[undirectedView]], [[LinkGraph.pagerank]]).
-    * The same plan over the same edges is one CacheManager entry, so loops
-    * over one memoized edge frame share the cached data.
+    * and registered — the edge build of the DataFrame loops ([[hits]],
+    * [[LinkGraph.pagerank]]). The same plan over the same edges is one
+    * CacheManager entry, so loops over one memoized edge frame share the
+    * cached data.
     */
   private[ops] def distinctEdges(edgesDf: DataFrame): DataFrame =
     CacheRegistry.register(edgesDf.select(col("src"), col("dst")).distinct()
@@ -469,75 +427,119 @@ object Centrality {
       .union(simple.select(col("dst").as("url"))).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** The persisted undirected-neighbor view both vertex-label loops
-    * ([[lpa]], [[components]]) iterate over — PRE-PARTITIONED on the
-    * per-round join key `nbr`, so the cached frame's outputPartitioning
-    * already satisfies the loop join's required distribution and the edge
-    * side never re-shuffles inside the loop (guide §2.4: operations keyed
-    * the same way share one exchange — here it happens once at build time
-    * and every round reads it back from the cache). At local SF the tiny
-    * cached side broadcast-converts anyway; at 10^12 edges this is the
-    * difference between one edge shuffle total and one per round.
+  // ---------------- the distributed vertex loops: RDD rounds ----------------
+  //
+  // WCC, LPA and HyperBall run Pregel-style rounds (GraphX's design) over an
+  // adjacency built once: each round zips the adjacency with the state to
+  // emit messages, combines them map-side into the loop's partitioner, and
+  // zips the result with the co-partitioned previous state.
+  // [[Lineage.rddFixpoint]] runs each round as ONE Spark job (persist,
+  // checkpoint, count the changed rows). The rounds are planned once, as
+  // RDD operations, and read no SQL conf: no per-round analysis or
+  // planning, and no session setting to override.
+
+  /** `edgesDf`'s row count in one job (a SQL count runs two under AQE). */
+  private def edgeCount(edgesDf: DataFrame): Long = edgesDf.select(col("src")).rdd.count()
+
+  /** Loop state rows per partition: about 100 MB of (id, label) rows. */
+  private val LoopRowsPerPartition = 2000000L
+
+  /** A loop's partition count over `stateRows` rows of state:
+    * ⌈stateRows / 2M⌉, at least 1 — derived from the data, so one tiny
+    * graph runs its rounds in one task per stage and a large one spreads.
     */
-  private def undirectedView(edgesDf: DataFrame): DataFrame = {
-    val simple = distinctEdges(edgesDf)
-    val und = CacheRegistry.register(
-      simple.select(col("src").as("v"), col("dst").as("nbr"))
-        .unionAll(simple.select(col("dst").as("v"), col("src").as("nbr")))
-        .repartition(col("nbr"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    und.count()
-    und
+  private[graft] def loopPartitions(stateRows: Long): Int =
+    math.max(1L, (stateRows + LoopRowsPerPartition - 1) / LoopRowsPerPartition).toInt
+
+  /** A distributed vertex loop: the start state and the round, as
+    * [[Lineage.rddFixpoint]] takes them, over `adj`, the persisted
+    * adjacency that [[run]] unpersists once the loop is done.
+    */
+  private[graft] final case class RddLoop[K, S](
+      adj: RDD[(K, Array[K])],
+      start: RDD[(K, S)],
+      round: (RDD[(K, S)], Int) => RDD[(K, S, Boolean)]) {
+    def run(maxRounds: Int): (RDD[(K, S)], Boolean) =
+      try Lineage.rddFixpoint(start, maxRounds)(round)
+      finally adj.unpersist(blocking = false)
   }
 
-  /** Every vertex of the undirected view labelled with itself — the start
-    * state of the WCC and LPA loops. Distinct here (not in the view): LPA
-    * counts multiplicity, WCC must not.
+  /** The loop's graph over the distinct (src, dst) edges of `edgesDf` (an
+    * edge with a null endpoint is dropped): every endpoint with its
+    * neighbour list — `undirected`, the other endpoint of every edge
+    * touching it, so a reciprocal pair counts twice (the LPA multiplicity
+    * rule); else its out-neighbours, empty for a sink. Hash-partitioned by
+    * `part`, sorted by id within each partition (a recomputed partition
+    * keeps the order its state rows are zipped in) and persisted: the
+    * first round's job materializes it.
     */
-  private def selfLabelled(und: DataFrame, labelCol: String): DataFrame =
-    und.select(col("v").as("url")).distinct()
-      .select(col("url"), col("url").as(labelCol))
+  private def adjacency[K: ClassTag](
+      edgesDf: DataFrame, part: Partitioner, undirected: Boolean, ser: Serializer)(
+      implicit ord: Ordering[K]): RDD[(K, Array[K])] = {
+    // (out-neighbours, in-neighbours); an edge reaches both endpoints
+    type Nbrs = (mutable.HashSet[K], mutable.HashSet[K])
+    def add(c: Nbrs, e: (K, Boolean)): Nbrs = {
+      if (e._2) c._1 += e._1 else if (undirected) c._2 += e._1
+      c
+    }
+    edgesDf.select(col("src"), col("dst")).rdd
+      .filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .flatMap { r =>
+        val (s, d) = (r.getAs[K](0), r.getAs[K](1))
+        Iterator((s, (d, true)), (d, (s, false)))
+      }
+      .combineByKeyWithClassTag[Nbrs](
+        e => add((mutable.HashSet.empty[K], mutable.HashSet.empty[K]), e), add,
+        (a, b) => { a._1 ++= b._1; a._2 ++= b._2; a }, part, mapSideCombine = true, ser)
+      .mapPartitions(_.map { case (v, (out, in)) => (v, (out.iterator ++ in.iterator).toArray) }
+        .toArray.sortBy(_._1).iterator, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
-  /** One round's neighbor-min frame: component' = min(own, neighbors'
-    * labels). The own-label union rows double as the PREV-label carrier
-    * (`__prev` = max over {nulls…, own} = own), so certifying the fixpoint
-    * needs NO per-round join against the superseded table — the old
-    * changed-count self-join was a full extra shuffle join per round
-    * (guide §2.4). The null carrier takes the label column's type, so the
-    * round works for any ordered id type (urls, doc ids).
+  /** One round's messages: `adj` zipped with `state` (same partitions,
+    * same order), each vertex sending `msg` of its state to every
+    * neighbour, combined map-side and per receiver into `part`. The rows
+    * are keyed by the receiver, so they do not keep `adj`'s partitioner
+    * (`preservesPartitioning = false`): with it, combineByKey would skip
+    * the shuffle and combine each message in its sender's partition.
     */
-  private def componentsNbrMin(und: DataFrame, labels: DataFrame): DataFrame =
-    und.join(
-        labels.select(col("url").as("__n"), col("component").as("__l")),
-        und("nbr") === col("__n"))
-      .select(col("v").as("url"), col("__l").as("component"),
-        lit(null).cast(labels.schema("component").dataType).as("__own"))
-      .unionAll(labels.select(col("url"), col("component"),
-        col("component").as("__own")))
-      .groupBy(col("url"))
-      .agg(min(col("component")).as("component"), max(col("__own")).as("__prev"))
+  private def messages[K: ClassTag, S, A: ClassTag, C: ClassTag](
+      adj: RDD[(K, Array[K])], state: RDD[(K, S)], part: Partitioner, ser: Serializer)(
+      msg: S => A)(create: A => C)(add: (C, A) => C, merge: (C, C) => C): RDD[(K, C)] =
+    adj.zipPartitions(state, preservesPartitioning = false) { (as, ss) =>
+      as.zip(ss).flatMap { case ((v, nbrs), (u, s)) =>
+        require(v == u, s"graph loop: adjacency row $v zipped with state row $u")
+        val m = msg(s)
+        nbrs.iterator.map(n => (n, m))
+      }
+    }.combineByKeyWithClassTag(create, add, merge, part, mapSideCombine = true, ser)
 
-  /** One pointer jump over a (persisted) labels frame carrying `__prev`:
-    * component' = component(component) — always ≤ component (labels only
-    * shrink), collapses label chains exponentially. (A double jump per
-    * round was tried in this optimization round and reverted: convergence
-    * on the fixture is edge-hop-bound — the min label travels one GRAPH
-    * hop per neighbor-min — so extra jumps bought zero rounds and paid
-    * two more joins per round.) `__chg` compares the final label to the
-    * round-start label so the convergence read is a scan of the
-    * checkpointed state, not a join.
+  /** `state` in its own order, each row updated with what its vertex
+    * received: `inbox` is keyed into the same partitioner, so partition i
+    * of both holds the same vertices.
     */
-  private def componentsJump(nm: DataFrame): DataFrame =
-    nm.join(
-      nm.select(col("url").as("__cu"), col("component").as("__cc")),
-      nm("component") === col("__cu"))
-      .select(col("url"), col("__cc").as("component"),
-        (col("__cc") =!= col("__prev")).as("__chg"))
+  private def receive[K, S, C, T: ClassTag](state: RDD[(K, S)], inbox: RDD[(K, C)])(
+      update: (K, S, Option[C]) => T): RDD[T] =
+    state.zipPartitions(inbox) { (ss, cs) =>
+      val got = new java.util.HashMap[K, C]()
+      cs.foreach { case (k, c) => got.put(k, c) }
+      ss.map { case (v, s) => update(v, s, Option(got.get(v))) }
+    }
+
+  /** Each loop's shuffles use Kryo, set on the shuffle itself: the
+    * session's `spark.serializer` is not the loop's to choose.
+    */
+  private def loopSerializer(edgesDf: DataFrame): Serializer =
+    new KryoSerializer(edgesDf.sparkSession.sparkContext.getConf)
+
+  /** A loop's final state as a DataFrame with the given columns. */
+  private def frame(spark: SparkSession, rows: RDD[Row], cols: (String, DataType)*): DataFrame =
+    spark.createDataFrame(rows, StructType(cols.map { case (n, t) => StructField(n, t) }))
 
   /** Weakly-connected components, distributed: (url, component) with
     * component = the MIN member id. Min-label propagation to fixpoint,
     * accelerated by POINTER JUMPING: each round takes the neighbor-min and
-    * then the label-of-its-label. Min over binary string order is
+    * then the label-of-its-label. Min over code-point (or long) order is
     * order-insensitive, so the fixpoint is bit-identical to
     * [[componentsExact]]; convergence is certified by an explicit
     * changed-row count. Rounds: when ids increase along a path the
@@ -558,93 +560,122 @@ object Centrality {
     labels
   }
 
-  /** The [[components]] loop over `src`/`dst` edges of any ordered id type:
-    * the labels after at most `maxIters` rounds and whether they reached
-    * the fixpoint. Unconverged labels are still a valid REFINEMENT (every
-    * label is a smaller-or-equal id in the same component), which
+  /** The [[components]] loop over `src`/`dst` edges of string or long
+    * ids: the labels after at most `maxIters` rounds and whether they
+    * reached the fixpoint. Unconverged labels are still a valid REFINEMENT
+    * (every label is a smaller-or-equal id in the same component), which
     * [[Dedup.nearDupClusters]] returns at its cap.
     */
   private[ops] def componentLabels(
-      edgesDf: DataFrame, maxIters: Int): (DataFrame, Boolean) = {
+      edgesDf: DataFrame, maxIters: Int): (DataFrame, Boolean) =
+    componentLabels(edgesDf, maxIters, loopPartitions(2L * edgeCount(edgesDf)))
+
+  /** [[componentLabels]] over `parts` partitions. */
+  private[ops] def componentLabels(
+      edgesDf: DataFrame, maxIters: Int, parts: Int): (DataFrame, Boolean) = {
     require(maxIters >= 1, s"components: maxIters must be >= 1")
-    var converged = false
-    // the edge count drives the loop's shuffle layout, and the undirected
-    // view must be BUILT (and cached) inside the scope so its physical
-    // partitioning matches the rounds that consume it
-    val out = withLoopShuffleLayout(edgesDf, 2L * edgesDf.count()) { edges =>
-      val (start, round) = componentsLoop(edges)
-      val (labels, fixed) = Lineage.fixpoint(start, maxIters)(round)
-      converged = fixed
-      labels
+    def labels[K: ClassTag](ord: Ordering[K]): (RDD[Row], Boolean) = {
+      val (state, converged) = componentsLoop[K](edgesDf, parts)(implicitly, ord).run(maxIters)
+      (state.map { case (v, l) => Row(v, l) }, converged)
     }
-    (out, converged)
+    val idType = edgesDf.schema("src").dataType
+    val (rows, converged) = idType match {
+      case StringType => labels(Bpe.codePointOrder)
+      case LongType => labels(Ordering.Long)
+      case t => throw new IllegalArgumentException(s"components: ids must be string or long, not $t")
+    }
+    (frame(edgesDf.sparkSession, rows, "url" -> idType, "component" -> idType), converged)
   }
 
-  /** A distributed loop's start state and round, as [[Lineage.fixpoint]] takes them. */
-  private[graft] type Loop = (DataFrame, (DataFrame, Int) => DataFrame)
-
-  /** The [[components]] loop: every vertex labelled with itself
-    * (truncated), and the pointer-jumping round. The round persists the
-    * neighbor-min frame across the self-join: that frame (a join + full
-    * shuffle aggregation) feeds BOTH sides — without the persist the
-    * planner only reuses the agg's input exchange and the aggregation
-    * itself runs twice per round (VERDICT r6 wrong #2). It is registered,
-    * so the driver drops it once the round is checkpointed.
+  /** The [[components]] loop: every vertex labelled with itself, and the
+    * pointer-jumping round — the neighbour-min (own label included), then
+    * one jump: component' = component(component), always ≤ component
+    * (labels only shrink), which collapses label chains exponentially. A
+    * vertex asks the vertex its neighbour-min names for that vertex's
+    * neighbour-min (a vertex labelled with itself asks nobody), and the
+    * answer comes back to it. (A double jump per round was tried and
+    * reverted: convergence on the fixture is edge-hop-bound — the min
+    * label travels one GRAPH hop per neighbor-min — so extra jumps bought
+    * zero rounds.) A row changed when its label differs from the round's
+    * start label.
     */
-  private[graft] def componentsLoop(edgesDf: DataFrame): Loop = {
-    val und = undirectedView(edgesDf)
-    (Lineage.truncate(selfLabelled(und, "component")),
-      (labels, _) => componentsJump(
-        CacheRegistry.register(componentsNbrMin(und, labels).persist())))
+  private[graft] def componentsLoop[K: ClassTag](edgesDf: DataFrame, parts: Int)(
+      implicit ord: Ordering[K]): RddLoop[K, K] = {
+    val part = new HashPartitioner(parts)
+    val ser = loopSerializer(edgesDf)
+    val adj = adjacency[K](edgesDf, part, undirected = true, ser)
+    RddLoop(adj, adj.map { case (v, _) => (v, v) }, { (labels, _) =>
+      // (vertex, neighbour-min, round-start label)
+      val nm = receive(labels,
+        messages(adj, labels, part, ser)(identity[K])((l: K) => l)(ord.min, ord.min)) {
+        (v, own, in) => (v, in.fold(own)(ord.min(own, _)), own)
+      }
+      val asks = new ShuffledRDD[K, K, K](
+        nm.flatMap { case (v, l, _) => if (l == v) None else Some((l, v)) }, part)
+        .setSerializer(ser)
+      val answers = nm.zipPartitions(asks) { (ns, as) =>
+        val label = new java.util.HashMap[K, K]()
+        ns.foreach { case (v, l, _) => label.put(v, l) }
+        as.map { case (l, v) => (v, label.get(l)) }
+      }
+      receive(labels, new ShuffledRDD[K, K, K](answers, part).setSerializer(ser)) {
+        (v, own, jumped) =>
+          val l = jumped.getOrElse(v)
+          (v, l, l != own)
+      }
+    })
   }
 
-  /** Distributed LPA — one undirected-neighbor join + one two-level
-    * aggregation per round (label counts, then a min(struct) argmax
-    * whose struct order IS the pinned tie-break), lineage-truncated.
-    * Integer counts + binary string order make it bit-identical to
+  /** Distributed LPA — synchronous rounds in which every vertex takes its
+    * neighbours' most frequent label, counted with multiplicity (map-side
+    * partial counts per receiver), ties to the smallest label in
+    * code-point order. Integer counts make it bit-identical to
     * [[lpaExact]].
     */
-  def lpa(edgesDf: DataFrame, iters: Int = 10): DataFrame = {
+  def lpa(edgesDf: DataFrame, iters: Int = 10): DataFrame =
+    lpa(edgesDf, iters, loopPartitions(2L * edgeCount(edgesDf)))
+
+  /** [[lpa]] over `parts` partitions. */
+  private[ops] def lpa(edgesDf: DataFrame, iters: Int, parts: Int): DataFrame = {
     require(iters >= 1, s"lpa: iters must be >= 1, got $iters")
     // synchronous LPA is deterministic, so a round with ZERO label changes
     // makes every remaining round a no-op: stopping at the fixpoint is
     // bit-identical to running all `iters` rounds. Oscillating graphs
     // simply never reach it and still run the full `iters`.
-    withLoopShuffleLayout(edgesDf, 2L * edgesDf.count()) { edges =>
-      val (start, round) = lpaLoop(edges)
-      Lineage.fixpoint(start, iters)(round)._1
-    }
+    val (state, _) = lpaLoop(edgesDf, parts).run(iters)
+    frame(edgesDf.sparkSession, state.map { case (v, l) => Row(v, l) },
+      "url" -> StringType, "community" -> StringType)
   }
 
-  /** The [[lpa]] loop: every vertex labelled with itself, and [[lpaRound]]. */
-  private[graft] def lpaLoop(edgesDf: DataFrame): Loop = {
-    val und = undirectedView(edgesDf)
-    (selfLabelled(und, "community"), (state, _) => lpaRound(und, state))
+  /** The [[lpa]] loop: every vertex labelled with itself, and the round. */
+  private[graft] def lpaLoop(edgesDf: DataFrame, parts: Int): RddLoop[String, String] = {
+    val part = new HashPartitioner(parts)
+    val ser = loopSerializer(edgesDf)
+    val adj = adjacency[String](edgesDf, part, undirected = true, ser)(
+      implicitly, Bpe.codePointOrder)
+    RddLoop(adj, adj.map { case (v, _) => (v, v) }, { (labels, _) =>
+      val counts = messages(adj, labels, part, ser)(identity[String])(
+        l => mutable.HashMap(l -> 1L))(
+        (c, l) => { c(l) = c.getOrElse(l, 0L) + 1L; c },
+        (a, b) => { b.foreach { case (l, n) => a(l) = a.getOrElse(l, 0L) + n }; a })
+      receive(labels, counts) { (v, own, in) =>
+        val l = in.fold(own)(mostFrequent)
+        (v, l, l != own)
+      }
+    })
   }
 
-  /** One LPA round's pre-truncation frame. The unioned own-label rows
-    * enter the argmax with `__c = 0`: every vertex in `state` has ≥ 1
-    * neighbor (state is built from the edge view), so a real neighbor
-    * count (nc ≤ −1) always beats the own row (nc = 0) and the argmax is
-    * UNCHANGED — the row exists only to carry `__prev` through the
-    * aggregation (`max` over {nulls…, own} = own), so the loop's
-    * convergence read is a scan, not a join (guide §2.4).
+  /** The label with the highest count, ties to the smallest in code-point
+    * order — the LPA rule of both paths.
     */
-  private def lpaRound(und: DataFrame, state: DataFrame): DataFrame =
-    und.join(
-        state.select(col("url").as("__n"), col("community").as("__l")),
-        und("nbr") === col("__n"))
-      .select(col("v"), col("__l"))
-      .groupBy(col("v"), col("__l")).agg(count(lit(1)).as("__c"))
-      .select(col("v"), col("__l"), col("__c"),
-        lit(null).cast("string").as("__own"))
-      .unionAll(state.select(col("url").as("v"), col("community").as("__l"),
-        lit(0L).as("__c"), col("community").as("__own")))
-      .groupBy(col("v"))
-      .agg(min(struct((-col("__c")).as("nc"), col("__l").as("l"))).as("__m"),
-        max(col("__own")).as("__prev"))
-      .select(col("v").as("url"), col("__m.l").as("community"),
-        (col("__m.l") =!= col("__prev")).as("__chg"))
+  private def mostFrequent(counts: collection.Map[String, Long]): String = {
+    var best: String = null
+    var bestC = 0L
+    counts.foreach { case (l, c) =>
+      if (c > bestC || (c == bestC && Bpe.codePointCompare(l, best) < 0)) { best = l; bestC = c }
+    }
+    best
+  }
 
   /** HyperBall harmonic centrality — the production path. Returns
     * (url, harmonic, reach_est): reach_est is the final ball's size
@@ -657,59 +688,35 @@ object Centrality {
     // vertex's registers changed is a fixpoint — every remaining round's
     // est − prev_est increment is 0.0 and the state is bit-identical to
     // running all `iters` rounds
-    withLoopShuffleLayout(edgesDf, edgesDf.count()) { edges =>
-      val (start, round) = harmonicLoop(edges)
-      Lineage.fixpoint(start, iters)(round)._1
-        .select(col("url"), col("h").as("harmonic"), col("prev_est").as("reach_est"))
+    val (state, _) = harmonicLoop(edgesDf, loopPartitions(edgeCount(edgesDf))).run(iters)
+    frame(edgesDf.sparkSession, state.map { case (v, (_, est, h)) => Row(v, h, est) },
+      "url" -> StringType, "harmonic" -> DoubleType, "reach_est" -> DoubleType)
+  }
+
+  /** The [[harmonicHll]] loop: every vertex with (its own one-element
+    * sketch, the sketch's estimate, h = 0), and round t: each vertex sends
+    * its sketch along its out-edges, the sketches a vertex receives are
+    * register-maxed map-side and then into its own, and h += (est −
+    * prev_est) / t. A row changed when its registers did.
+    */
+  private[graft] def harmonicLoop(
+      edgesDf: DataFrame, parts: Int): RddLoop[String, (Array[Byte], Double, Double)] = {
+    val part = new HashPartitioner(parts)
+    val ser = loopSerializer(edgesDf)
+    val adj = adjacency[String](edgesDf, part, undirected = false, ser)(
+      implicitly, Bpe.codePointOrder)
+    val start = adj.map { case (v, _) =>
+      val regs = initRegisters(v)
+      (v, (regs, estimate(regs), 0.0))
     }
-  }
-
-  /** The [[harmonicHll]] loop: every vertex with its own one-element
-    * sketch (`regs`), its estimate and h = 0, and [[harmonicRound]] t.
-    */
-  private[graft] def harmonicLoop(edgesDf: DataFrame): Loop = {
-    val simple = distinctEdges(edgesDf)
-    val vertices = vertexSet(simple)
-    vertices.count()
-    val initUdf = udf((u: String) => initRegisters(u))
-    val estUdf = udf((r: Array[Byte]) => estimate(r))
-    (vertices.select(col("url"), initUdf(col("url")).as("regs"))
-      .withColumn("prev_est", estUdf(col("regs")))
-      .withColumn("h", lit(0.0)),
-      (state, t) => harmonicRound(simple, state, t))
-  }
-
-  /** One HyperBall round's pre-truncation frame. The own-state union rows carry prev_est / h / the
-    * previous sketch THROUGH the register-max aggregation (`max` over
-    * {nulls…, own} recovers the single own value), so the old post-agg
-    * `state ⋈ merged` join — a second full shuffle of the sketch table
-    * every round — is gone (guide §2.3-2.4: one exchange per round, not
-    * two).
-    */
-  private def harmonicRound(
-      simple: DataFrame, state: DataFrame, t: Int): DataFrame = {
-    val regMax = udaf(new RegMax)
-    val estUdf = udf((r: Array[Byte]) => estimate(r))
-    // alias before joining the multiply-referenced edge frame
-    // (self-join ambiguity — same rule as the pagerank loop)
-    val inbound = simple
-      .join(state.select(col("url").as("__src"), col("regs").as("__regs")),
-        simple("src") === col("__src"))
-      .select(col("dst").as("url"), col("__regs").as("regs"),
-        lit(null).cast("double").as("prev_est"),
-        lit(null).cast("double").as("h"),
-        lit(null).cast("binary").as("__own"))
-    state.select(col("url"), col("regs"), col("prev_est"), col("h"),
-        col("regs").as("__own"))
-      .unionByName(inbound)
-      .groupBy(col("url"))
-      .agg(regMax(col("regs")).as("regs"),
-        max(col("prev_est")).as("__pe"), max(col("h")).as("__h"),
-        max(col("__own")).as("__pregs"))
-      .withColumn("est", estUdf(col("regs")))
-      .select(col("url"), col("regs"),
-        col("est").as("prev_est"),
-        (col("__h") + (col("est") - col("__pe")) / lit(t.toDouble)).as("h"),
-        (col("regs") =!= col("__pregs")).as("__chg"))
+    RddLoop(adj, start, { (state, t) =>
+      // the combiner starts from a copy: the state's sketches are never written
+      val inbox = messages(adj, state, part, ser)(_._1)(_.clone())(regMax, regMax)
+      receive(state, inbox) { case (v, (regs, prevEst, h), in) =>
+        val next = in.fold(regs)(regMax(_, regs))
+        val est = estimate(next)
+        (v, (next, est, h + (est - prevEst) / t.toDouble), !java.util.Arrays.equals(next, regs))
+      }
+    })
   }
 }

@@ -594,7 +594,7 @@ object Dedup {
     * emitted group is genuinely connected, merely possibly split).
     *
     * Scale shape: the pairs are EAGERLY CHECKPOINTED once before the loop
-    * ([[Lineage]]), so the loop's edge count and edge-view build never
+    * ([[Lineage]]), so the loop's edge count and adjacency build never
     * re-run whatever produced them (the full minhash+simhash pipelines
     * here), and every round's label table is checkpointed too, so the
     * result's lineage holds no pair plan. This is the same label
@@ -606,11 +606,8 @@ object Dedup {
     val edges = Lineage.truncate(pairs.select(
       col("doc_a").cast("long").as("src"), col("doc_b").cast("long").as("dst")))
     val (labels, _) = Centrality.componentLabels(edges, maxIters)
-    // the pair table and the loop frames cached over it (its distinct
-    // edges and undirected view) are dead once the labels are
-    // checkpointed; only the (pairs-sized) final label table stays
-    // materialized for consumers
-    CacheRegistry.releaseReading(edges)
+    // the pair table is dead once the labels are checkpointed; only the
+    // (pairs-sized) final label table stays materialized for consumers
     Lineage.release(edges)
     labels.select(col("url").as("doc_id"), col("component").as("canonical_doc_id"))
   }

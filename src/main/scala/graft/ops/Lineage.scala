@@ -1,13 +1,14 @@
 package graft.ops
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-/** Eager lineage truncation for iterative DataFrame algorithms (label
-  * propagation, BPE training): reliable `checkpoint()` when the session has
+/** Eager lineage truncation for iterative algorithms (BPE training, the
+  * graph loops' rounds): reliable `checkpoint()` when the session has
   * a checkpoint dir (the cluster path — survives executor loss),
   * `localCheckpoint` otherwise (single-box/test path).
   *
@@ -46,29 +47,49 @@ private[graft] object Lineage {
     if (df.storageLevel == StorageLevel.NONE) free(df.queryExecution.analyzed)
   }
 
-  /** Run `round` from `start` for at most `maxRounds` rounds, stopping
-    * after the first whose `__chg` column is all false. `round(state, t)`
-    * (t = 1, 2, …) returns `start`'s columns plus a boolean `__chg`; a
-    * round without `__chg` (a fixed-count loop) runs all `maxRounds`. Each
-    * round's output is truncated and its `__chg` scanned (isEmpty stops at
-    * the first changed row); then the superseded state is released with
-    * every registered frame that read it (a frame a round persists over its
-    * input lives for that round). Returns the final state, projected to
-    * `start`'s columns, and whether it converged.
+  /** Run `round` from `start` for exactly `rounds` rounds: the fixed-count
+    * DataFrame loops ([[Centrality.hits]], [[LinkGraph.pagerank]]), whose
+    * float sums are order-sensitive. `round(state, t)` (t = 1, 2, …)
+    * returns `start`'s columns (others are dropped); each round's output is
+    * truncated and the superseded state released. Returns the final state.
     */
-  def fixpoint(start: DataFrame, maxRounds: Int)(
-      round: (DataFrame, Int) => DataFrame): (DataFrame, Boolean) = {
+  def fixpoint(start: DataFrame, rounds: Int)(
+      round: (DataFrame, Int) => DataFrame): DataFrame = {
     val cols = start.columns.toSeq.map(col)
     var state = start
+    for (t <- 1 to rounds) {
+      val next = truncate(round(state, t))
+      release(state)
+      state = next.select(cols: _*)
+    }
+    state
+  }
+
+  /** Run `round` from `start` for at most `maxRounds` RDD rounds, stopping
+    * after the first that changes no row: the vertex loops of
+    * [[Centrality]]. `round(state, t)` (t = 1, 2, …) returns the next
+    * state with each row's changed flag. Each round is ONE Spark job: its
+    * output is persisted, marked for checkpointing (reliable when the
+    * context has a checkpoint dir, as in [[truncate]], else local) and its
+    * changed rows counted, which materializes and checkpoints it (a
+    * reliable checkpoint is written by a second job over the persisted
+    * blocks); then the superseded round is unpersisted. Returns the final
+    * state, without the flags, and whether it converged.
+    */
+  def rddFixpoint[K, S](start: RDD[(K, S)], maxRounds: Int)(
+      round: (RDD[(K, S)], Int) => RDD[(K, S, Boolean)]): (RDD[(K, S)], Boolean) = {
+    var state = start
+    var last: RDD[(K, S, Boolean)] = null
     var converged = false
     var t = 0
     while (!converged && t < maxRounds) {
       t += 1
-      val next = truncate(round(state, t))
-      converged = next.columns.contains("__chg") && next.filter(col("__chg")).isEmpty
-      CacheRegistry.releaseReading(state)
-      release(state)
-      state = next.select(cols: _*)
+      val next = round(state, t).persist(StorageLevel.MEMORY_AND_DISK)
+      if (next.sparkContext.getCheckpointDir.isDefined) next.checkpoint() else next.localCheckpoint()
+      converged = next.filter(_._3).count() == 0L
+      if (last != null) last.unpersist(blocking = false)
+      last = next
+      state = next.map(r => (r._1, r._2))
     }
     (state, converged)
   }

@@ -364,7 +364,7 @@ object LinkGraph {
     * list, hot in-degrees never materialize in one task), the dangling
     * mass folded into the round's plan as a broadcast 1-row agg (one
     * action per round, no driver collect), `iters` rounds of
-    * [[Lineage.fixpoint]] (no `__chg`, so no early stop), each rank frame
+    * [[Lineage.fixpoint]], each rank frame
     * lineage-truncated so the logical plan stays O(1) instead of 2^k.
     * Same algorithm, ULP-level run-to-run wobble documented.
     */
@@ -436,7 +436,7 @@ object LinkGraph {
           (lit(base) + lit(damping) *
             (coalesce(col("contrib_sum"), lit(0.0)) + col("__dm") / lit(nD)))
             .as("rank"))
-    }._1
+    }
   }
 
   /** The exact-mode kernel: K damped iterations over a collected simple

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.{LocalSession, SparkEntry}
+import graft.ops.Centrality
 import graft.pipeline.AlignJob
 import java.nio.file.{Files, Paths}
 
@@ -24,8 +25,16 @@ object PlanDump {
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       sb.append("```\n")
     }
-    def firstRound(loop: graft.ops.Centrality.Loop) = loop._2(loop._1, 1)
+    // a graph loop's round is RDD operations: its lineage, not a SQL plan
+    def dumpRound[K, S](title: String, note: String)(loop: => Centrality.RddLoop[K, S]): Unit = {
+      val l = loop
+      sb.append(s"\n## $title\n\n$note\n\n```\n")
+      try sb.append(l.round(l.start, 1).toDebugString).append("\n")
+      finally l.adj.unpersist(blocking = false)
+      sb.append("```\n")
+    }
     def linkEdges = SparkEntry.queries("q_link_edges")(spark, sfDir)
+    def parts(stateRows: Long) = Centrality.loopPartitions(stateRows)
 
     dump("Flagship align (salted)",
       "One FileScan (pruned to doc_id/text/lang), ONE Exchange (the explicit " +
@@ -87,11 +96,12 @@ object PlanDump {
       SparkEntry.queries("q_domain_stats")(spark, sfDir)
     }
     dump("q_dedup_clusters (cluster resolution result)",
-      "The emitted plan is Project over a CHECKPOINTED label table " +
+      "The emitted plan is Project over the label table's LogicalRDD " +
         "(LogicalRDD leaves only — asserted in DedupClusterSpec): the " +
-        "pointer-jumping WCC loop (Centrality.components') ran with eager " +
-        "per-round lineage truncation, so no downstream consumer can " +
-        "re-trigger the pair pipelines.") {
+        "pointer-jumping WCC loop (Centrality.components') ran as RDD " +
+        "rounds, each checkpointed, and its final state came back through " +
+        "createDataFrame, so no downstream consumer can re-trigger the pair " +
+        "pipelines.") {
       SparkEntry.queries("q_dedup_clusters")(spark, sfDir)
     }
 
@@ -208,10 +218,10 @@ object PlanDump {
       SparkEntry.queries("q_markdown")(spark, sfDir)
     }
     dump("q_harmonic_hll (HyperBall round loop)",
-      "Per round: edges ⋈ sketches (broadcast or shuffled hash join on " +
-        "src) → register-wise-max hash aggregate (partial map-side — max " +
-        "is idempotent) → lineage-truncated state. State is m bytes per " +
-        "vertex; no per-pair structure anywhere.") {
+      "The final sort over the loop's state: a LogicalRDD over the last " +
+        "round's checkpoint. The rounds are RDD operations (see the " +
+        "HyperBall round below). State is m bytes per vertex; no per-pair " +
+        "structure anywhere.") {
       SparkEntry.queries("q_harmonic_hll")(spark, sfDir)
     }
     dump("q_dsir (importance-resampling selection)",
@@ -221,34 +231,37 @@ object PlanDump {
         "(collected 8192 rows), which ran before this plan.") {
       SparkEntry.queries("q_dsir")(spark, sfDir)
     }
-    dump("Components round (the distributed WCC loop's per-round plan)",
-      "Neighbor-min join + min/max aggregation (the own-label union rows " +
-        "carry the PREV label through the agg, so the fixpoint certificate " +
-        "is a scan, not a join), then the pointer-jump self-join reading " +
-        "the neighbor-min frame from InMemoryTableScan — persisted per " +
-        "round exactly like the loop (VERDICT r6 wrong #2: the aggregation " +
-        "computes once per round by construction, not by hoping for " +
-        "ReusedExchange).") {
-      firstRound(graft.ops.Centrality.componentsLoop(linkEdges))
+    dumpRound("Components round (the distributed WCC loop's per-round lineage)",
+      "One Spark job per round over the persisted adjacency (built once, " +
+        "hash-partitioned into ⌈2·edges / 2M⌉ partitions): the adjacency " +
+        "zipped with the labels sends each label to the neighbours, " +
+        "combined map-side to the neighbour-min (first shuffle); each vertex " +
+        "asks its neighbour-min for that vertex's neighbour-min (second " +
+        "shuffle) and gets the answer back (third): the pointer jump. The " +
+        "last zip with the round-start labels flags the changed rows, which " +
+        "the round's one job counts after checkpointing.") {
+      val e = linkEdges
+      Centrality.componentsLoop[String](e, parts(2L * e.count()))(
+        implicitly, graft.ops.Bpe.codePointOrder)
     }
-    dump("HyperBall round (the harmonic-centrality loop's per-round plan)",
-      "ONE shuffle per round: edges ⋈ sketches, unioned with the own-state " +
-        "rows (which carry prev_est / h / the previous sketch through the " +
-        "register-max aggregation — max over {nulls, own} recovers the " +
-        "single own value), then the register-max groupBy. The old " +
-        "post-agg state ⋈ merged join — a second full shuffle of the " +
-        "sketch table every round — is gone (optimization round 7).") {
-      firstRound(graft.ops.Centrality.harmonicLoop(linkEdges))
+    dumpRound("HyperBall round (the harmonic-centrality loop's per-round lineage)",
+      "ONE shuffle per round: the out-adjacency zipped with the sketches " +
+        "sends each sketch along its out-edges, register-maxed map-side " +
+        "(max is idempotent) into the same partitioner; the zip with the " +
+        "previous state maxes a vertex's own sketch in and adds " +
+        "(est − prev_est) / t to h.") {
+      val e = linkEdges
+      Centrality.harmonicLoop(e, parts(e.count()))
     }
-    dump("LPA round (the distributed loop's per-round plan)",
-      "One undirected-neighbor join + a two-level aggregation per round " +
-        "(label counts, then the min(struct) argmax whose struct order IS " +
-        "the pinned tie-break); integer counts + binary string order make " +
-        "the loop bit-identical to the exact local path — q_lpa_dist " +
-        "shares q_lpa's golden. Dumped via the ROUND frame: the loop " +
-        "state itself is eagerly checkpointed, so q_lpa_dist's own final " +
-        "plan is just a LogicalRDD scan.") {
-      firstRound(graft.ops.Centrality.lpaLoop(linkEdges))
+    dumpRound("LPA round (the distributed loop's per-round lineage)",
+      "ONE shuffle per round: the adjacency zipped with the labels sends " +
+        "each label to the neighbours, counted map-side per receiver; the " +
+        "zip with the previous labels takes the most frequent, ties to the " +
+        "smallest in code-point order. Integer counts make the loop " +
+        "bit-identical to the exact local path — q_lpa_dist shares q_lpa's " +
+        "golden.") {
+      val e = linkEdges
+      Centrality.lpaLoop(e, parts(2L * e.count()))
     }
     dump("q_recrawl (change-rate scheduling)",
       "The lag window and the per-urlkey aggregation share one key — " +

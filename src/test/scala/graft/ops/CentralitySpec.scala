@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, udf}
 import org.scalatest.BeforeAndAfterAll
@@ -190,25 +191,139 @@ class CentralitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(CentralitySpec.seen.asScala.toSet === Set(("true", "4")))
   }
 
-  test("withLoopShuffleLayout: large state runs on the caller's session, small state on an AQE-off clone") {
+  test("loopPartitions derives the count from the state; the loops clone no session and write no conf") {
+    assert(Centrality.loopPartitions(0L) === 1)
+    assert(Centrality.loopPartitions(1L) === 1)
+    for (p <- Seq(1, 4)) assert(Centrality.loopPartitions(2000000L * p + 1) === p + 1)
+
     import spark.implicits._
-    val edges = Seq(("a", "b")).toDF("src", "dst")
-    // (ran on the caller's session, AQE, shuffle partitions) as the loop sees them
-    def layoutFor(stateRows: Long): (Boolean, String, String) = {
-      var seen: (Boolean, String, String) = null
-      val out = Centrality.withLoopShuffleLayout(edges, stateRows) { e =>
-        val s = e.sparkSession
-        seen = (s eq spark, s.conf.get(AqeKey), s.conf.get(PartKey))
-        e.select(col("src"))
+    // a SQL execution tags its jobs with the id of the session it runs on,
+    // so a session clone would show as a second id
+    val sc = spark.sparkContext
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Option(e.properties).foreach { p =>
+        Option(p.getProperty("spark.job.tags")).foreach(_.split(",").filter(_.nonEmpty).foreach(tags.add))
+        if (p.getProperty("spark.jobGroup.id") == "centrality-end") ended.countDown()
       }
-      assert(out.sparkSession eq spark)
-      assert(out.as[String].collect().toSeq === Seq("a"))
-      seen
     }
-    val parallelism = spark.sparkContext.defaultParallelism
-    assert(layoutFor(2000000L * parallelism) === ((true, "true", "4")))
-    assert(layoutFor(1L) === ((false, "false", "1")))
-    assert((spark.conf.get(AqeKey), spark.conf.get(PartKey)) === (("true", "4")))
+    val edges = Seq(("a2", "a1"), ("a3", "a2"), ("b1", "b2"), ("b3", "b2"))
+      .toDF("src", "dst")
+    val conf = spark.conf.getAll
+    sc.addSparkListener(listener)
+    try {
+      Centrality.components(edges).collect()
+      Centrality.lpa(edges).collect()
+      Centrality.harmonicHll(edges).collect()
+      // a last job in a group of its own marks the end of the events
+      sc.setJobGroup("centrality-end", "end marker")
+      sc.parallelize(1 to 1).count()
+      sc.clearJobGroup()
+      assert(ended.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    val uuid = org.apache.spark.sql.SessionId(spark)
+    val sessionTags = tags.asScala.toSet
+    assert(sessionTags.nonEmpty)
+    assert(sessionTags.forall(_.contains(uuid)), sessionTags)
+    assert(spark.conf.getAll === conf)
+  }
+
+  // ---- RDD rounds == the round's sequential definition ----
+
+  import CentralitySpec.{randomGraph, simulateWcc}
+
+  /** Pinned random graphs: string ids (two of them outside the BMP or
+    * above U+E000, where code-point and UTF-16 order differ) and long ids.
+    */
+  private lazy val stringGraph: Seq[(String, String)] = {
+    val ids = (0 until 40).map(i => s"v$i") ++ Seq("\uFF41z", "\uD83D\uDE00y")
+    randomGraph(7, ids, 46)
+  }
+  private lazy val longGraph: Seq[(Long, Long)] = randomGraph(11, (0L until 42L).map(_ * 7L % 43L), 46)
+
+  private def labelsOf[K](df: org.apache.spark.sql.DataFrame): Map[K, K] =
+    df.collect().map(r => r.getAs[K](0) -> r.getAs[K](1)).toMap
+
+  for (parts <- Seq(1, 4)) {
+    test(s"componentLabels at caps 1-4 equals the sequential round, string and long ids, $parts partitions") {
+      import spark.implicits._
+      def check[K](graph: Seq[(K, K)], df: org.apache.spark.sql.DataFrame)(implicit ord: Ordering[K]): Unit = {
+        val sims = (0 to 4).map(k => simulateWcc(graph, k))
+        // the caps are discriminating: the labels still move in round 4
+        assert(sims(3) != sims(4))
+        for (k <- 1 to 4) {
+          val (labels, converged) = Centrality.componentLabels(df, k, parts)
+          assert(labelsOf[K](labels) === sims(k), s"cap $k")
+          assert(converged === (sims(k) == sims(k - 1)), s"cap $k")
+        }
+      }
+      check(stringGraph, stringGraph.toDF("src", "dst"))(graft.ops.Bpe.codePointOrder)
+      check(longGraph, longGraph.toDF("src", "dst"))
+    }
+
+    test(s"lpa(edges, k) equals lpaExact(edges, k) at caps 1-4, $parts partitions") {
+      import spark.implicits._
+      val edges = stringGraph.toDF("src", "dst")
+      for (k <- 1 to 4) {
+        val exact = labelsOf[String](Centrality.lpaExact(edges, k))
+        assert(labelsOf[String](Centrality.lpa(edges, k, parts)) === exact, s"cap $k")
+      }
+    }
+  }
+
+  test("harmonicHll's rounds give bit-identical doubles at 1 and 4 partitions") {
+    import spark.implicits._
+    val edges = stringGraph.toDF("src", "dst")
+    def at(parts: Int): Map[String, (Double, Double)] = {
+      val (state, _) = Centrality.harmonicLoop(edges, parts).run(4)
+      state.collect().map { case (v, (_, est, h)) => v -> (h, est) }.toMap
+    }
+    assert(at(4) === at(1))
+  }
+
+  test("with a checkpoint dir set, the rounds checkpoint reliably and give the same results") {
+    import spark.implicits._
+    val edges = stringGraph.toDF("src", "dst")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    def hll(): Map[String, (Double, Double)] = {
+      val (state, _) = Centrality.harmonicLoop(edges, 4).run(4)
+      // the final state maps the last round's output: a checkpoint file
+      assert(state.dependencies.head.rdd.getCheckpointFile.isDefined ===
+        spark.sparkContext.getCheckpointDir.isDefined)
+      state.collect().map { case (v, (_, est, h)) => v -> (h, est) }.toMap
+    }
+    val local = hll()
+    try org.apache.spark.CheckpointDirs.withDir(spark.sparkContext, dir.toString) {
+      assert(hll() === local)
+      val (labels, converged) = Centrality.componentLabels(edges, 50, 4)
+      assert(converged)
+      assert(labelsOf[String](labels) === labelsOf[String](Centrality.componentsExact(edges)))
+      assert(labelsOf[String](Centrality.lpa(edges, 4, 4)) ===
+        labelsOf[String](Centrality.lpaExact(edges, 4)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  test("components, lpa and harmonicHll leave no cached frame, persisted RDD or registry slot") {
+    import spark.implicits._
+    val edges = stringGraph.toDF("src", "dst")
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // the rounds' checkpoints (the final state among them) are freed by
+    // the context cleaner when collected; anything else persisted is left over
+    def cached = spark.sparkContext.getPersistentRDDs.values.filterNot(_.isCheckpointed)
+    for ((name, loop) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "components" -> (() => Centrality.components(edges)),
+        "lpa" -> (() => Centrality.lpa(edges)),
+        "harmonicHll" -> (() => Centrality.harmonicHll(edges)))) {
+      spark.catalog.clearCache()
+      val registered = CacheRegistry.size
+      val out = loop()
+      assert(cacheManager.isEmpty, s"$name left frames cached")
+      assert(cached.isEmpty, s"$name: " + cached.map(_.toDebugString).mkString("\n"))
+      assert(CacheRegistry.size === registered, name)
+      assert(out.count() === 42L, name)
+    }
   }
 
   test("harmonicHll reach_est approaches component size on a cycle") {
@@ -230,4 +345,31 @@ object CentralitySpec {
   /** The session whose conf the probe UDF reads, and what it read. */
   @volatile var caller: SparkSession = _
   val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+
+  /** `edges` draws of (src, dst) from `ids` with a pinned seed: repeated
+    * and reciprocal pairs and self-loops stay in, and every id is an
+    * endpoint (chained in a random order first, then random pairs).
+    */
+  def randomGraph[K](seed: Int, ids: Seq[K], edges: Int): Seq[(K, K)] = {
+    val rnd = new scala.util.Random(seed)
+    val order = rnd.shuffle(ids)
+    // short random-order paths give chains several rounds deep
+    val paths = order.grouped(7).flatMap(p => p.zip(p.tail)).toSeq
+    paths ++ Seq.fill(edges - paths.size)((ids(rnd.nextInt(ids.size)), ids(rnd.nextInt(ids.size))))
+  }
+
+  /** `k` rounds of WCC's round, one vertex at a time: the neighbour-min
+    * over the distinct edges in both directions (own label included),
+    * then one pointer jump, label' = nm(nm(v)).
+    */
+  def simulateWcc[K](edges: Seq[(K, K)], k: Int)(implicit ord: Ordering[K]): Map[K, K] = {
+    val simple = edges.distinct
+    val nbrs = (simple ++ simple.map(_.swap)).groupMap(_._1)(_._2)
+    var labels = nbrs.keys.map(v => v -> v).toMap
+    for (_ <- 1 to k) {
+      val nm = labels.map { case (v, l) => v -> (l +: nbrs(v).map(labels)).min }
+      labels = nm.map { case (v, l) => v -> nm(l) }
+    }
+    labels
+  }
 }

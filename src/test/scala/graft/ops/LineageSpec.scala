@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The graph loops' round driver: `Lineage.fixpoint` stops at the first
-  * round that changes nothing or at its cap, and frees every superseded
-  * round's checkpoint; `Lineage.release` frees only a checkpoint the frame
-  * reads through projections, nothing else.
+/** The graph loops' round drivers: `Lineage.fixpoint` runs a fixed count
+  * of DataFrame rounds and frees every superseded round's checkpoint;
+  * `Lineage.rddFixpoint` stops at the first RDD round that changes nothing
+  * or at its cap; `Lineage.release` frees only a checkpoint the frame reads
+  * through projections, nothing else.
   */
 class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -32,10 +33,10 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Eight rows with x = 0 and a round x' = min(x + 1, 3): rounds 1–3
-    * change every row, round 4 none. `seen` keeps a strong reference to
-    * every state the round receives, with its round number, so only an
-    * explicit release (not GC) can drop their checkpoints.
+  /** Eight rows with x = 0 and a round x' = min(x + 1, 3). `seen` keeps a
+    * strong reference to every state the round receives, with its round
+    * number, so only an explicit release (not GC) can drop their
+    * checkpoints.
     */
   private final class Counting {
     val seen = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Int)]
@@ -43,20 +44,33 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
       Lineage.truncate(spark.range(8).select(col("id"), lit(0L).as("x")))
     def round(state: DataFrame, t: Int): DataFrame = {
       seen += state -> t
-      state.select(col("id"), least(col("x") + 1L, lit(3L)).as("x"),
-        (col("x") < 3L).as("__chg"))
+      state.select(col("id"), least(col("x") + 1L, lit(3L)).as("x"))
     }
-    def run(maxRounds: Int): (DataFrame, Boolean) =
-      Lineage.fixpoint(start, maxRounds)(round)
+    def run(rounds: Int): DataFrame = Lineage.fixpoint(start, rounds)(round)
+  }
+
+  /** [[Counting]] over RDD state, with each row's changed flag: rounds 1–3
+    * change every row, round 4 none.
+    */
+  private final class RddCounting {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
+    val start: RDD[(Long, Long)] = spark.sparkContext.parallelize(0L until 8L, 2).map(_ -> 0L)
+    def round(state: RDD[(Long, Long)], t: Int): RDD[(Long, Long, Boolean)] = {
+      seen += t
+      state.map { case (id, x) => (id, math.min(x + 1L, 3L), x < 3L) }
+    }
+    def run(maxRounds: Int): (RDD[(Long, Long)], Boolean) =
+      Lineage.rddFixpoint(start, maxRounds)(round)
   }
 
   private def xs(df: DataFrame): Set[Long] =
     df.select(col("x")).collect().map(_.getLong(0)).toSet
 
+  private def xs(state: RDD[(Long, Long)]): Set[Long] = state.values.collect().toSet
+
   test("fixpoint releases every superseded round's checkpoint and keeps the final one") {
     val loop = new Counting
-    val (out, converged) = loop.run(10)
-    assert(converged)
+    val out = loop.run(4)
     assert(loop.seen.size === 4)
     val live = persistentIds
     assert(live.contains(checkpointRdd(out).id), "the final state's checkpoint was freed")
@@ -68,21 +82,21 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(xs(out) === Set(3L))
   }
 
-  test("fixpoint stops at the first unchanged round, or after exactly maxRounds") {
-    val converging = new Counting
+  test("rddFixpoint stops at the first unchanged round, or after exactly maxRounds") {
+    val converging = new RddCounting
     val (fixed, c1) = converging.run(10)
     assert(c1)
-    assert(converging.seen.map(_._2).toSeq === Seq(1, 2, 3, 4))
+    assert(converging.seen.toSeq === Seq(1, 2, 3, 4))
     assert(xs(fixed) === Set(3L))
 
     // round 3 reaches x = 3 but only round 4 certifies it
-    val capped = new Counting
+    val capped = new RddCounting
     val (last, c2) = capped.run(3)
     assert(!c2)
-    assert(capped.seen.map(_._2).toSeq === Seq(1, 2, 3))
+    assert(capped.seen.toSeq === Seq(1, 2, 3))
     assert(xs(last) === Set(3L))
 
-    val short = new Counting
+    val short = new RddCounting
     val (early, c3) = short.run(2)
     assert(!c3)
     assert(short.seen.size === 2)
