@@ -110,7 +110,7 @@ object CrawlQueries {
 
     Query("q_pagerank")((s, dir) =>
       graft.ops.LinkGraph.pagerank(linkEdgesFor(s, dir),
-        iters = 20, damping = 0.85, exactFold = true)
+        iters = 20, damping = 0.85)
         .orderBy(col("url"))),
 
     // ---- harmonic centrality (Common Crawl's published host ranking):
@@ -333,7 +333,7 @@ object CrawlQueries {
         .select(col("doc_id")).as[Long]
         .map(graft.pipeline.LinkGen.linkUrlFor).toDF("url")
       val ranks = graft.ops.LinkGraph.pagerank(linkEdgesFor(s, dir),
-        iters = 20, damping = 0.85, exactFold = true)
+        iters = 20, damping = 0.85)
       graft.ops.Frontier.nextWaveRanked(linkEdgesFor(s, dir), crawled,
         robotsTable(s), graft.pipeline.RobotsGen.Agent, k = 5,
         ranks = ranks, saltBuckets = 4, crawlWindowSec = 7.0)

@@ -22,10 +22,10 @@ import org.apache.spark.storage.StorageLevel
   * with d(u,v) the directed shortest-path length FROM u TO v (a page is
   * central when many pages reach it over short link chains).
   *
-  * Two paths, dispatched like pagerank's:
+  * Two paths:
   *
   *   - `harmonicExact`: the oracle path — collects the deduplicated edge
-  *     set under the SAME enforced 5M-edge cap and runs pinned-order BFS
+  *     set under the shared enforced 5M-edge cap and runs pinned-order BFS
   *     from every vertex locally (sources iterated in sorted order, so
   *     the 1/d additions fold deterministically; bit-identical to the
   *     clean-room mirror `hc_exact` by construction).
@@ -120,18 +120,19 @@ object Centrality {
   /** The exact-path edge cap (shared by every oracle kernel here). */
   private val ExactModeEdgeCap = 5000000L
 
-  /** ONE bounded collect of the deduplicated edge set — the shared
-    * oracle-path gate (loud failure past the cap).
+  /** ONE bounded collect of the deduplicated edge set — the shared gate of
+    * every exact kernel here and of [[LinkGraph.pagerank]] (loud failure
+    * past the cap).
     */
-  private def collectBoundedEdges(
+  private[ops] def collectBoundedEdges(
       edgesDf: DataFrame, opName: String): Array[(String, String)] = {
     val spark = edgesDf.sparkSession
     import spark.implicits._
     val bounded = edgesDf.select(col("src"), col("dst")).distinct()
       .limit((ExactModeEdgeCap + 1).toInt).as[(String, String)].collect()
     require(bounded.length <= ExactModeEdgeCap,
-      s"$opName is the oracle path (local kernel over collected edges): " +
-        s"> $ExactModeEdgeCap edges — use the distributed form")
+      s"$opName runs a local kernel over the collected edge set, capped at " +
+        s"$ExactModeEdgeCap distinct edges: this graph has more")
     bounded
   }
 
@@ -141,7 +142,7 @@ object Centrality {
     * adds BOTH endpoints per edge (reciprocal edges then contribute
     * twice — the LPA multiplicity rule).
     */
-  private def sortedAdjacency(
+  private[ops] def sortedAdjacency(
       pairs: Array[(String, String)], reverse: Boolean,
       undirected: Boolean = false): (Array[String], Array[List[Int]]) = {
     val simple = pairs.distinct.sorted
@@ -159,10 +160,10 @@ object Centrality {
     (verts, adj)
   }
 
-  /** Exact harmonic centrality — oracle path. Unlike pagerank's exactFold
-    * (whose kernel is linear per iteration), all-sources BFS is Θ(V·E),
-    * so the edge cap alone bounds memory but NOT runtime: a 1M-edge /
-    * 300k-vertex graph passes a 5M-edge gate and then hangs for days.
+  /** Exact harmonic centrality — oracle path. Unlike pagerank's kernel
+    * (linear per iteration), all-sources BFS is Θ(V·E), so the edge cap
+    * alone bounds memory but NOT runtime: a 1M-edge / 300k-vertex graph
+    * passes a 5M-edge gate and then hangs for days.
     * The gate here is the actual WORK product V·E — loud failure, never
     * a silent hang.
     */
@@ -217,8 +218,8 @@ object Centrality {
     * with EVERY fold pinned (sorted vertices, sorted in/out neighbor
     * lists, L2 normalization folded in sorted-vertex order; Math.sqrt is
     * correctly-rounded IEEE, so the whole run is bit-identical to the
-    * mirror). Same enforced edge cap as pagerank's exactFold; the
-    * distributed form is [[hits]].
+    * mirror). Same enforced edge cap as pagerank's; there is no
+    * distributed form.
     */
   def hitsExact(edgesDf: DataFrame, iters: Int = 20): DataFrame = {
     require(iters >= 1, s"hitsExact: iters must be >= 1, got $iters")
@@ -265,54 +266,6 @@ object Centrality {
       k += 1
     }
     verts.indices.map(i => (verts(i), auth(i), hub(i))).toArray
-  }
-
-  /** Distributed HITS — the 10^12-edge path, structured like the
-    * pagerank production loop: each half-iteration is one edge ⋈ scores
-    * join + one partial-aggregating sum, the L2 normalizer is a 1-row
-    * agg broadcast back in (one action per round via the eager
-    * checkpoint), `iters` rounds of [[Lineage.fixpoint]]. Float sums
-    * wobble with shuffle order at the ULP level (documented — the exact
-    * path is the oracle).
-    */
-  def hits(edgesDf: DataFrame, iters: Int = 20): DataFrame = {
-    require(iters >= 1, s"hits: iters must be >= 1, got $iters")
-    val simple = distinctEdges(edgesDf)
-    val vertices = vertexSet(simple)
-    vertices.count()
-
-    val start = vertices.select(col("url"), lit(1.0).as("authority"),
-      lit(1.0).as("hub"))
-    Lineage.fixpoint(start, iters) { (state, _) =>
-      // authority half: a(v) = sum of hub over in-neighbors, L2-normalized
-      val hubSrc = state.select(col("url").as("__u"), col("hub").as("__h"))
-      val aRaw = vertices.join(
-        simple.join(hubSrc, simple("src") === col("__u"))
-          .groupBy(col("dst")).agg(sum(col("__h")).as("__a"))
-          .withColumnRenamed("dst", "url"),
-        Seq("url"), "left")
-        .select(col("url"), coalesce(col("__a"), lit(0.0)).as("__a"))
-      val aNorm = aRaw.agg(sqrt(sum(col("__a") * col("__a"))).as("__n"))
-      val withA = aRaw.crossJoin(broadcast(aNorm))
-        .select(col("url"),
-          when(col("__n") === 0.0, col("__a"))
-            .otherwise(col("__a") / col("__n")).as("authority"))
-      // hub half: h(v) = sum of authority over out-neighbors, normalized
-      val aDst = withA.select(col("url").as("__w"), col("authority").as("__av"))
-      val hRaw = vertices.join(
-        simple.join(aDst, simple("dst") === col("__w"))
-          .groupBy(col("src")).agg(sum(col("__av")).as("__hh"))
-          .withColumnRenamed("src", "url"),
-        Seq("url"), "left")
-        .select(col("url"), coalesce(col("__hh"), lit(0.0)).as("__hh"))
-      val hNorm = hRaw.agg(sqrt(sum(col("__hh") * col("__hh"))).as("__n2"))
-      withA.join(
-        hRaw.crossJoin(broadcast(hNorm))
-          .select(col("url"),
-            when(col("__n2") === 0.0, col("__hh"))
-              .otherwise(col("__hh") / col("__n2")).as("hub")),
-        Seq("url"))
-    }
   }
 
   /** Label-propagation community detection (Raghavan et al. 2007) over
@@ -407,25 +360,6 @@ object Centrality {
     }
     verts.indices.map(i => (verts(i), canon(find(i)))).toArray
   }
-
-
-  /** The deduplicated (src, dst) edge set, persisted `MEMORY_AND_DISK`
-    * and registered — the edge build of the DataFrame loops ([[hits]],
-    * [[LinkGraph.pagerank]]). The same plan over the same edges is one
-    * CacheManager entry, so loops over one memoized edge frame share the
-    * cached data.
-    */
-  private[ops] def distinctEdges(edgesDf: DataFrame): DataFrame =
-    CacheRegistry.register(edgesDf.select(col("src"), col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
-
-  /** Every endpoint of a [[distinctEdges]] frame as `url`, persisted and
-    * registered like it.
-    */
-  private[ops] def vertexSet(simple: DataFrame): DataFrame =
-    CacheRegistry.register(simple.select(col("src").as("url"))
-      .union(simple.select(col("dst").as("url"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK))
 
   // ---------------- the distributed vertex loops: RDD rounds ----------------
   //

@@ -165,8 +165,8 @@ object Classifier {
     z
   }
 
-  /** Dispatching trainer (same path-dispatch shape as LinkGraph.pagerank
-    * and Bpe.train): the cap is decided by a doc_id-only (column-pruned)
+  /** Dispatching trainer (the same path-dispatch shape as
+    * Bpe.train's): the cap is decided by a doc_id-only (column-pruned)
     * `limit(cap+1)` count that never ships text to the driver; a corpus
     * under `maxDocs` is then collected in one bounded action and trained
     * in the pinned local loop — bit-identical to the clean-room mirror, so

@@ -1,28 +1,29 @@
 package graft.ops
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-/** Eager lineage truncation for iterative algorithms (BPE training, the
-  * graph loops' rounds): reliable `checkpoint()` when the session has
-  * a checkpoint dir (the cluster path — survives executor loss),
-  * `localCheckpoint` otherwise (single-box/test path).
+/** Lineage truncation and the RDD round driver for iterative algorithms.
   *
-  * WHY truncation and not persist(): the loop state appears on both the
-  * join and the union side of the next round's plan, so the LOGICAL plan is
-  * 2^k × base by round k — the driver OOMs during analysis long before any
-  * data moves. Only a checkpoint (fresh LogicalRDD) cuts the plan.
+  * [[truncate]] cuts a DataFrame's lineage eagerly, for the DataFrame
+  * loops ([[Bpe.train]]'s merge rounds) and for a loop input that should
+  * not re-run its producer ([[Dedup.nearDupClusters]]' pairs): reliable
+  * `checkpoint()` when the session has a checkpoint dir (the cluster path
+  * — survives executor loss), `localCheckpoint` otherwise (single-box/test
+  * path). A DataFrame loop needs the cut: a state that appears on both the
+  * join and the union side of the next round's plan makes the LOGICAL plan
+  * 2^k × base by round k, and the driver OOMs during analysis long before
+  * any data moves. [[release]] frees a truncated frame once it is
+  * superseded: `Dataset.unpersist` cannot, because a checkpoint's blocks
+  * belong to the RDD behind its `LogicalRDD` leaf, not to the CacheManager.
   *
-  * A loop frees each superseded round with [[release]]: `Dataset.unpersist`
-  * cannot, because a checkpoint's blocks belong to the RDD behind its
-  * `LogicalRDD` leaf, not to the CacheManager. Reliable checkpoint files
-  * belong to Spark's context cleaner: a deployment that sets a checkpoint
-  * dir and wants each superseded round's files removed sets
-  * `spark.cleaner.referenceTracking.cleanCheckpoints`.
+  * [[rddFixpoint]] drives the vertex loops of [[Centrality]] as RDD rounds.
+  *
+  * Reliable checkpoint files belong to Spark's context cleaner: a
+  * deployment that sets a checkpoint dir and wants each superseded round's
+  * files removed sets `spark.cleaner.referenceTracking.cleanCheckpoints`.
   */
 private[graft] object Lineage {
 
@@ -31,39 +32,17 @@ private[graft] object Lineage {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager = true)
     else df.localCheckpoint(eager = true)
 
-  /** Free the checkpoint `df` reads: unpersist the RDD behind its plan when
-    * that plan is a `LogicalRDD` leaf or projections over one, and `df` is
-    * not itself cached. Any other frame (a start state over cached frames,
-    * a plan that reads a checkpoint under a join or an aggregate) is left
-    * alone. A released frame must not be read again: Spark then fails with
-    * "Checkpoint block … not found".
+  /** Free the checkpoint `df` is: unpersist the RDD behind its plan when
+    * that plan is a `LogicalRDD` leaf (a [[truncate]] output) and `df` is
+    * not itself cached. Any other frame is left alone. A released frame
+    * must not be read again: Spark then fails with "Checkpoint block … not
+    * found".
     */
-  def release(df: DataFrame): Unit = {
-    def free(p: LogicalPlan): Unit = p match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case Project(_, child) => free(child)
+  def release(df: DataFrame): Unit =
+    if (df.storageLevel == StorageLevel.NONE) df.queryExecution.analyzed match {
+      case r: LogicalRDD => GraftSqlBridge.unpersistBlocks(r.rdd)
       case _ =>
     }
-    if (df.storageLevel == StorageLevel.NONE) free(df.queryExecution.analyzed)
-  }
-
-  /** Run `round` from `start` for exactly `rounds` rounds: the fixed-count
-    * DataFrame loops ([[Centrality.hits]], [[LinkGraph.pagerank]]), whose
-    * float sums are order-sensitive. `round(state, t)` (t = 1, 2, …)
-    * returns `start`'s columns (others are dropped); each round's output is
-    * truncated and the superseded state released. Returns the final state.
-    */
-  def fixpoint(start: DataFrame, rounds: Int)(
-      round: (DataFrame, Int) => DataFrame): DataFrame = {
-    val cols = start.columns.toSeq.map(col)
-    var state = start
-    for (t <- 1 to rounds) {
-      val next = truncate(round(state, t))
-      release(state)
-      state = next.select(cols: _*)
-    }
-    state
-  }
 
   /** Run `round` from `start` for at most `maxRounds` RDD rounds, stopping
     * after the first that changes no row: the vertex loops of
@@ -73,8 +52,8 @@ private[graft] object Lineage {
     * context has a checkpoint dir, as in [[truncate]], else local) and its
     * changed rows counted, which materializes and checkpoints it (a
     * reliable checkpoint is written by a second job over the persisted
-    * blocks); then the superseded round is unpersisted. Returns the final
-    * state, without the flags, and whether it converged.
+    * blocks); then the superseded round's blocks are freed. Returns the
+    * final state, without the flags, and whether it converged.
     */
   def rddFixpoint[K, S](start: RDD[(K, S)], maxRounds: Int)(
       round: (RDD[(K, S)], Int) => RDD[(K, S, Boolean)]): (RDD[(K, S)], Boolean) = {
@@ -87,7 +66,7 @@ private[graft] object Lineage {
       val next = round(state, t).persist(StorageLevel.MEMORY_AND_DISK)
       if (next.sparkContext.getCheckpointDir.isDefined) next.checkpoint() else next.localCheckpoint()
       converged = next.filter(_._3).count() == 0L
-      if (last != null) last.unpersist(blocking = false)
+      if (last != null) GraftSqlBridge.unpersistBlocks(last)
       last = next
       state = next.map(r => (r._1, r._2))
     }

@@ -21,14 +21,11 @@ import org.apache.spark.sql.functions._
   *   3. graph aggregates ([[degrees]], [[anchorStats]], [[hostGraph]]) and
   *      iterative [[pagerank]] with dangling-mass redistribution.
   *
-  * Cross-engine determinism of pagerank: every per-vertex contribution sum
-  * folds in SORTED source-url order via a higher-order `aggregate` over
-  * `sort_array(collect_list(...))` (exact mode), and the dangling mass
-  * folds in sorted vertex order — so K iterations of IEEE-double
-  * arithmetic are bit-identical to the Python mirror regardless of
-  * partitioning. The production path ([[exactFold]]=false) swaps both for
-  * plain partial-aggregating `sum`s (ULP-level run-to-run wobble,
-  * arbitrarily hot in-degrees stay out of any single task's memory).
+  * Cross-engine determinism of pagerank: the simple edge set is collected
+  * under a hard cap and every per-vertex contribution sum folds in SORTED
+  * source-url order, the dangling mass in sorted vertex order — so K
+  * iterations of IEEE-double arithmetic are bit-identical to the Python
+  * mirror regardless of partitioning.
   */
 object LinkGraph {
 
@@ -349,97 +346,25 @@ object LinkGraph {
     * graph (parallel edges deduplicated; self-loops kept). Vertex set =
     * every url appearing as src or dst.
     *
-    * Exact mode (`exactFold=true`, the oracle path): the graph is
-    * collected under a HARD edge cap and K iterations run as a LOCAL
-    * pinned loop — per-vertex inbound sums fold in sorted-src order and
-    * the dangling mass folds in sorted-vertex order, so the result is
-    * bit-identical to the clean-room Python mirror (graftpy.py
-    * lg_pagerank) at any parallelism. This is the same dispatch shape as
-    * [[Bpe.train]]'s local exact path: K driver-synchronized distributed
-    * rounds over a bounded state are strictly worse than one collect +
-    * a tight local loop — 0 distributed jobs per iteration instead of ~4.
-    *
-    * Production mode (`exactFold=false`, the 10^12-edge path): the
-    * distributed loop — plain partial-aggregating `sum`s (no per-vertex
-    * list, hot in-degrees never materialize in one task), the dangling
-    * mass folded into the round's plan as a broadcast 1-row agg (one
-    * action per round, no driver collect), `iters` rounds of
-    * [[Lineage.fixpoint]], each rank frame
-    * lineage-truncated so the logical plan stays O(1) instead of 2^k.
-    * Same algorithm, ULP-level run-to-run wobble documented.
+    * The graph is collected through [[Centrality.collectBoundedEdges]],
+    * the exact kernels' shared gate (past its 5M-edge cap the call fails
+    * loudly), and K iterations run as a LOCAL pinned loop — per-vertex
+    * inbound sums fold in sorted-src order and the dangling mass folds in
+    * sorted-vertex order, so the result is bit-identical to the clean-room
+    * Python mirror (graftpy.py lg_pagerank) at any parallelism. As in
+    * [[Bpe.train]]'s local exact path, K driver-synchronized distributed
+    * rounds over a bounded state are strictly worse than one collect + a
+    * tight local loop.
     */
-  def pagerank(
-      edgesDf: DataFrame,
-      iters: Int = 20,
-      damping: Double = 0.85,
-      exactFold: Boolean = true): DataFrame = {
+  def pagerank(edgesDf: DataFrame, iters: Int = 20, damping: Double = 0.85): DataFrame = {
     require(iters >= 0 && damping >= 0.0 && damping <= 1.0)
     val spark = edgesDf.sparkSession
     import spark.implicits._
-    // exact mode collects the deduplicated edge set to the driver — a HARD
-    // edge cap (enforced, not documented): past it, use the production path
-    val ExactModeEdgeCap = 5000000L
-
-    val simple = Centrality.distinctEdges(edgesDf)
-
-    if (exactFold) {
-      val nEdges = simple.count()
-      require(nEdges <= ExactModeEdgeCap,
-        s"pagerank exactFold is the oracle path (local pinned loop over " +
-          s"collected edges): $nEdges edges > cap $ExactModeEdgeCap — use " +
-          "exactFold=false")
-      val pairs = simple.as[(String, String)].collect()
-      return localExactPagerank(pairs, iters, damping).toSeq
-        .toDF("url", "rank")
-    }
-
-    val outDeg = CacheRegistry.register(
-      simple.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val vertices = Centrality.vertexSet(simple)
-
-    val n = vertices.count()
-    if (n == 0L) return spark.emptyDataset[(String, Double)].toDF("url", "rank")
-    val nD = n.toDouble
-    val base = (1.0 - damping) / nD
-
-    // vertex ∪ out-degree once: dangling vertices carry out_deg 0
-    val vDeg = CacheRegistry.register(
-      vertices.join(outDeg.withColumnRenamed("src", "url"), Seq("url"), "left")
-        .select(col("url"), coalesce(col("out_deg"), lit(0L)).as("out_deg"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    vDeg.count()
-
-    val start = vDeg.select(col("url"), lit(1.0 / nD).as("rank"))
-    Lineage.fixpoint(start, iters) { (ranks, _) =>
-      val withDeg = ranks.join(vDeg, Seq("url"))
-      // dangling mass as a 1-ROW AGG cross-joined back in (broadcast):
-      // the whole round is ONE plan / ONE action (the eager checkpoint) —
-      // no per-round driver collect
-      val dmDf = withDeg.agg(coalesce(
-        sum(when(col("out_deg") === 0L, col("rank")).otherwise(lit(0.0))),
-        lit(0.0)).as("__dm"))
-      // alias the rank side into fresh attributes before re-joining the
-      // (persisted, multiply-referenced) edge frame — ranks descend from
-      // `simple`, so an unaliased join is an ambiguous self-join
-      val rankSrc = withDeg.filter(col("out_deg") > 0L)
-        .select(col("url").as("__src"),
-          (col("rank") / col("out_deg").cast("double")).as("contrib"))
-      val contribs = simple.join(rankSrc, simple("src") === col("__src"))
-        .select(col("src"), col("dst"), col("contrib"))
-      val inbound =
-        contribs.groupBy(col("dst")).agg(sum(col("contrib")).as("contrib_sum"))
-      vertices
-        .join(inbound.withColumnRenamed("dst", "url"), Seq("url"), "left")
-        .crossJoin(broadcast(dmDf))
-        .select(col("url"),
-          (lit(base) + lit(damping) *
-            (coalesce(col("contrib_sum"), lit(0.0)) + col("__dm") / lit(nD)))
-            .as("rank"))
-    }
+    localExactPagerank(Centrality.collectBoundedEdges(edgesDf, "pagerank"), iters, damping)
+      .toSeq.toDF("url", "rank")
   }
 
-  /** The exact-mode kernel: K damped iterations over a collected simple
+  /** The pagerank kernel: K damped iterations over a collected simple
     * edge set with EVERY addition in a pinned order (vertices and inbound
     * sources both sorted lexicographically) — bit-identical to
     * graftpy.py's lg_pagerank by construction. Urls here are ASCII
@@ -450,21 +375,15 @@ object LinkGraph {
       pairs: Array[(String, String)],
       iters: Int,
       damping: Double): Array[(String, Double)] = {
-    val simple = pairs.distinct.sorted
-    val verts = (simple.map(_._1) ++ simple.map(_._2)).distinct.sorted
+    // inbound sources per vertex, sorted by src url (== sorted by src
+    // index, since the vertex index is order-isomorphic to the sort)
+    val (verts, inbound) = Centrality.sortedAdjacency(pairs, reverse = true)
     val n = verts.length
     if (n == 0) return Array.empty
     val nD = n.toDouble
     val base = (1.0 - damping) / nD
-    val idx = verts.zipWithIndex.toMap
     val outDeg = new Array[Int](n)
-    simple.foreach { case (s, _) => outDeg(idx(s)) += 1 }
-    // inbound sources per vertex, sorted by src url (== sorted by src
-    // index, since idx is order-isomorphic to the sort)
-    val inbound = Array.fill(n)(List.empty[Int])
-    simple.reverseIterator.foreach { case (s, d) =>
-      inbound(idx(d)) = idx(s) :: inbound(idx(d))
-    }
+    inbound.foreach(_.foreach(s => outDeg(s) += 1))
     var rank = Array.fill(n)(1.0 / nD)
     var round = 0
     while (round < iters) {

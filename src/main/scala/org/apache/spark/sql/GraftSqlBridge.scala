@@ -2,9 +2,9 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` helpers so the graft library can build Columns
-  * directly from custom Catalyst expressions (the standard extension-library
-  * pattern — same package, no reflection).
+/** Bridge into `private[sql]` and `private[spark]` helpers so the graft
+  * library can build Columns directly from custom Catalyst expressions (the
+  * standard extension-library pattern — same package, no reflection).
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -45,6 +45,16 @@ object GraftSqlBridge {
       finally c.sparkContext.listenerBus.removeListener(
         StreamBusField.get(c.streams).asInstanceOf[org.apache.spark.scheduler.SparkListenerInterface])
     }
+
+  /** Free `rdd`'s cached blocks without blocking, as `RDD.unpersist`
+    * does, through the context's `private[spark]` `unpersistRDD`:
+    * `RDD.unpersist` on a locally checkpointed RDD also logs a WARN that
+    * it cannot be recomputed, and the graph loops free one such RDD per
+    * round, never to read it again. `rdd`'s own storage level is left
+    * set.
+    */
+  def unpersistBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 
   /** `classic.StreamingQueryManager`'s private `listenerBus`. */
   private lazy val StreamBusField = {

@@ -113,23 +113,6 @@ class CentralitySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(an - 1.0) < 1e-12 && math.abs(hn - 1.0) < 1e-12)
   }
 
-  test("distributed hits agrees with the exact path to float wobble") {
-    import spark.implicits._
-    val edges = Seq(
-      ("u1", "u2"), ("u2", "u4"), ("u1", "u3"), ("u3", "u4"),
-      ("u4", "u5"), ("u2", "u5"), ("u6", "u1"), ("u5", "u6"))
-      .toDF("src", "dst")
-    val exact = Centrality.hitsExact(edges, iters = 10).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val dist = Centrality.hits(edges, iters = 10).collect()
-      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    assert(exact.keySet === dist.keySet)
-    for ((u, (ea, eh)) <- exact) {
-      assert(math.abs(dist(u)._1 - ea) < 1e-9, s"$u authority")
-      assert(math.abs(dist(u)._2 - eh) < 1e-9, s"$u hub")
-    }
-  }
-
   test("lpa: two triangles joined by one bridge form two communities") {
     import spark.implicits._
     val edges = Seq(
@@ -321,6 +304,29 @@ class CentralitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = loop()
       assert(cacheManager.isEmpty, s"$name left frames cached")
       assert(cached.isEmpty, s"$name: " + cached.map(_.toDebugString).mkString("\n"))
+      assert(CacheRegistry.size === registered, name)
+      assert(out.count() === 42L, name)
+    }
+  }
+
+  test("pagerank and the exact centralities leave no cached frame, persisted RDD or registry slot") {
+    import spark.implicits._
+    val edges = stringGraph.toDF("src", "dst")
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    for ((name, op) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "pagerank" -> (() => LinkGraph.pagerank(edges)),
+        "hitsExact" -> (() => Centrality.hitsExact(edges)),
+        "harmonicExact" -> (() => Centrality.harmonicExact(edges)),
+        "lpaExact" -> (() => Centrality.lpaExact(edges)),
+        "componentsExact" -> (() => Centrality.componentsExact(edges)))) {
+      spark.catalog.clearCache()
+      val registered = CacheRegistry.size
+      val before = persisted
+      val out = op()
+      assert(cacheManager.isEmpty, s"$name left frames cached")
+      assert((persisted -- before).isEmpty, s"$name left RDDs persisted")
       assert(CacheRegistry.size === registered, name)
       assert(out.count() === 42L, name)
     }

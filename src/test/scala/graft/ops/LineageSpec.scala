@@ -7,11 +7,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The graph loops' round drivers: `Lineage.fixpoint` runs a fixed count
-  * of DataFrame rounds and frees every superseded round's checkpoint;
+/** The graph loops' round driver and the truncated frames' release:
   * `Lineage.rddFixpoint` stops at the first RDD round that changes nothing
-  * or at its cap; `Lineage.release` frees only a checkpoint the frame reads
-  * through projections, nothing else.
+  * or at its cap; `Lineage.release` frees only a checkpoint frame itself,
+  * nothing else.
   */
 class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -33,24 +32,8 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def persistentIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Eight rows with x = 0 and a round x' = min(x + 1, 3). `seen` keeps a
-    * strong reference to every state the round receives, with its round
-    * number, so only an explicit release (not GC) can drop their
-    * checkpoints.
-    */
-  private final class Counting {
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(DataFrame, Int)]
-    val start: DataFrame =
-      Lineage.truncate(spark.range(8).select(col("id"), lit(0L).as("x")))
-    def round(state: DataFrame, t: Int): DataFrame = {
-      seen += state -> t
-      state.select(col("id"), least(col("x") + 1L, lit(3L)).as("x"))
-    }
-    def run(rounds: Int): DataFrame = Lineage.fixpoint(start, rounds)(round)
-  }
-
-  /** [[Counting]] over RDD state, with each row's changed flag: rounds 1–3
-    * change every row, round 4 none.
+  /** Eight rows with x = 0 and a round x' = min(x + 1, 3), with each
+    * row's changed flag: rounds 1–3 change every row, round 4 none.
     */
   private final class RddCounting {
     val seen = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -63,24 +46,7 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
       Lineage.rddFixpoint(start, maxRounds)(round)
   }
 
-  private def xs(df: DataFrame): Set[Long] =
-    df.select(col("x")).collect().map(_.getLong(0)).toSet
-
   private def xs(state: RDD[(Long, Long)]): Set[Long] = state.values.collect().toSet
-
-  test("fixpoint releases every superseded round's checkpoint and keeps the final one") {
-    val loop = new Counting
-    val out = loop.run(4)
-    assert(loop.seen.size === 4)
-    val live = persistentIds
-    assert(live.contains(checkpointRdd(out).id), "the final state's checkpoint was freed")
-    loop.seen.foreach { case (state, t) =>
-      assert(!live.contains(checkpointRdd(state).id),
-        s"the checkpoint of the state round $t read is still persisted")
-    }
-    assert(out.columns.toSeq === Seq("id", "x"))
-    assert(xs(out) === Set(3L))
-  }
 
   test("rddFixpoint stops at the first unchanged round, or after exactly maxRounds") {
     val converging = new RddCounting
@@ -108,7 +74,7 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
     // persisted, not yet materialized: it still reads the checkpoint
     val projected = ck.select(col("id"), col("y")).persist()
     val aggregated = ck.groupBy((col("id") % 2L).as("k")).agg(sum(col("y")).as("s")).persist()
-    // a start state over a cached frame, like hits' and pagerank's
+    // a frame over a cached frame, not a checkpoint
     val vertices = spark.range(5).select(col("id").as("url")).distinct().persist()
     vertices.count()
     val start = vertices.select(col("url"), lit(1.0).as("rank"))
@@ -126,10 +92,9 @@ class LineageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a released checkpoint is freed, and reading it again fails loudly") {
     val ck = Lineage.truncate(spark.range(10).toDF("id"))
-    val state = ck.select(col("id"))
     val id = checkpointRdd(ck).id
     assert(persistentIds.contains(id))
-    Lineage.release(state)
+    Lineage.release(ck)
     assert(!persistentIds.contains(id))
     val err = intercept[Exception](ck.count())
     assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
