@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft.SparkEntry.{docs, tbl, fanOut, alignedFor, rmTree, scratchDir}
 import graft.catalog.Query.{RepoDir, golden}
-import graft.align.{CleanText, Syllabify}
+import graft.align.{CleanText, SylBox, Syllabify}
 import graft.ops.{CacheRegistry, Multimodal, ScaleWindows}
 import graft.pipeline.{AlignJob, EvalJob, Functions, GtXml, MeiAssign, PageGen}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -110,10 +110,9 @@ object AlignQueries {
     Query("q_eval_alignment") { (s, dir) =>
       // ONE kernel pass aligns each page under both scorings and scores
       // it in the same task: no span rows leave the task, no url shuffle.
-      // The relational EvalJob.evaluate form is exercised (and
-      // oracle-checked) by q_eval_gtxml; both forms are asserted
-      // row-identical in tests. Persisted under the sort: the range
-      // partitioner's sampling job would otherwise re-run the kernel.
+      // Tests assert it row-identical to the relational reference
+      // evaluator. Persisted under the sort: the range partitioner's
+      // sampling job would otherwise re-run the kernel.
       val scored = CacheRegistry.register(
         AlignJob.evaluate(AlignJob.synthPages(s, dir), graft.align.Scoring.Default,
           graft.align.Scoring.symmetric(10, -5, -7, -7),
@@ -162,16 +161,22 @@ object AlignQueries {
         throw new IllegalStateException(
           s"GT-XML fixture dir missing or empty: $fixtureDir (set GRAFT_REPO_DIR)")
       } else {
-        val files = listed.filter(_.getName.endsWith(".xml")).sortBy(_.getName)
-        val gt = files.map { f =>
-          val docId = f.getName.stripSuffix(".xml").toLong
-          GtXml.toDataFrame(s, PageGen.urlFor(docId),
-            new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-        }.reduce(_ unionAll _)
-        val urls = files.map(f => PageGen.urlFor(f.getName.stripSuffix(".xml").toLong)).toSet
-        val pages = AlignJob.synthPages(s, dir).filter(p => urls.contains(p.url))
-        val pred = AlignJob.spans(AlignJob.align(pages))
-        EvalJob.evaluate(gt, pred).orderBy(col("url"))
+        // each page is scored in the task that aligns it, against its GT
+        // spans shipped in the closure: no join, window or shuffle before
+        // the final sort
+        val gt = listed.filter(_.getName.endsWith(".xml")).map { f =>
+          PageGen.urlFor(f.getName.stripSuffix(".xml").toLong) ->
+            GtXml.sylBoxes(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+        }.toMap
+        AlignJob.align(AlignJob.synthPages(s, dir).filter(p => gt.contains(p.url)))
+          .flatMap { d =>
+            val pred = d.spans.map(c => SylBox(c.syl, c.ulx, c.uly, c.lrx, c.lry)).toIndexedSeq
+            EvalJob.docMeans(gt(d.url), pred).map { case (iou, rangeIou, n) =>
+              (d.url, iou, rangeIou, n)
+            }
+          }
+          .toDF("url", "mean_iou", "mean_range_iou", "n_gt_spans")
+          .orderBy(col("url"))
       }
     },
 

@@ -94,8 +94,7 @@ object AlignJob {
 
   /** Per-page evaluation of the `pred` scoring's spans against the `gt`
     * scoring's spans of the same page, scored in the kernel task: (url,
-    * mean_iou, mean_range_iou, n_gt_spans) by [[EvalJob.docMeans]] — the
-    * values of [[EvalJob.evaluate]] over the two systems' [[spans]]. Each
+    * mean_iou, mean_range_iou, n_gt_spans) by [[EvalJob.docMeans]]. Each
     * page is extracted once and only the DP runs per scoring; no shuffle
     * after the layout. A page with no GT spans emits no row.
     */

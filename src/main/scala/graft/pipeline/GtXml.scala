@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.align.SylBox
 import scala.xml.XML
 
 /** Ground-truth box (PASCAL-VOC-style) — data model D9 (SURVEY.md),
@@ -28,21 +29,12 @@ object GtXml {
     }.toVector
   }
 
-  /** GT boxes as a DataFrame (url column attached), difficult boxes
-    * optionally dropped as in the reference (`eval_difficult=False`,
-    * evaluate_text_alignment.py:111-113).
+  /** One page's GT spans in XML order, the `gt` side of
+    * [[EvalJob.docMeans]]; difficult boxes optionally dropped as in the
+    * reference (`eval_difficult=False`, evaluate_text_alignment.py:111-113).
     */
-  def toDataFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      url: String,
-      xml: String,
-      evalDifficult: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import spark.implicits._
-    // seq is assigned BEFORE the difficult filter so it stably identifies
-    // the source XML object regardless of evalDifficult
-    parse(xml).zipWithIndex
-      .filter { case (b, _) => evalDifficult || b.difficult == 0 }
-      .map { case (b, i) => (url, i, b.syl, b.ulx, b.uly, b.lrx, b.lry) }
-      .toDF("url", "seq", "syl", "ulx", "uly", "lrx", "lry")
-  }
+  def sylBoxes(xml: String, evalDifficult: Boolean = false): Vector[SylBox] =
+    parse(xml).collect {
+      case b if evalDifficult || b.difficult == 0 => SylBox(b.syl, b.ulx, b.uly, b.lrx, b.lry)
+    }
 }

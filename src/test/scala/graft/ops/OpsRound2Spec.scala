@@ -128,13 +128,13 @@ class OpsRound2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("in-task AlignJob.evaluate equals the relational evaluate") {
     import graft.align.Scoring
-    import graft.pipeline.{AlignJob, EvalJob}
+    import graft.pipeline.{AlignJob, EvalJob, RelationalEval}
     val pages = AlignJob.synthPages(spark, "/root/testdata/sf0.001")
     val pred = Scoring.symmetric(10, -5, -7, -7)
     val inTask = AlignJob.evaluate(pages, Scoring.Default, pred,
         saltPartitions = spark.sparkContext.defaultParallelism)
       .orderBy("url").collect().map(_.toSeq)
-    val relational = EvalJob.evaluate(
+    val relational = RelationalEval.evaluate(
         AlignJob.spans(AlignJob.align(pages, Scoring.Default)),
         AlignJob.spans(AlignJob.align(pages, pred)))
       .orderBy("url").collect().map(_.toSeq)
@@ -157,7 +157,7 @@ class OpsRound2Spec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("url", "seq", "syl", "ulx", "uly", "lrx", "lry")
     val (iou, rangeIou, n) = EvalJob.docMeans(gt, pr).get
     assert(Seq("u", iou, rangeIou, n) ===
-      EvalJob.evaluate(df(gt), df(pr)).collect().head.toSeq)
+      RelationalEval.evaluate(df(gt), df(pr)).collect().head.toSeq)
     assert(n === 2 && iou === (1.0 / 3) / 2)
   }
 

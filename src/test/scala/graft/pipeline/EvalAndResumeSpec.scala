@@ -49,10 +49,61 @@ class EvalAndResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(parsed === Vector(
       GtBox("al", 0, 0, 0, 2, 1), GtBox("le", 1, 2, 0, 4, 1), GtBox("lu", 0, 4, 0, 7, 1)))
     // difficult boxes dropped by default (evaluate_text_alignment.py:111-113)
-    val gt = GtXml.toDataFrame(spark, "u1", xml)
-    assert(gt.count() === 2)
-    val res = EvalJob.evaluate(gt, gt).collect()
-    assert(res.length === 1 && res(0).getAs[Double]("mean_iou") === 1.0)
+    val gt = GtXml.sylBoxes(xml)
+    assert(gt.length === 2)
+    val res = EvalJob.docMeans(gt, gt).toSeq
+    assert(res.length === 1 && res(0)._1 === 1.0)
+  }
+
+  test("q_eval_gtxml equals the relational reference, evalDifficult false and true") {
+    import spark.implicits._
+    val sf = "/root/testdata/sf0.01"
+    val files = new java.io.File(s"${graft.catalog.Query.RepoDir}/src/test/resources/gtxml").listFiles()
+      .filter(_.getName.endsWith(".xml")).sortBy(_.getName)
+    assert(files.length === 3)
+    // one more page whose every box is difficult: no row unless evalDifficult
+    val allDifficult =
+      """<annotation>
+        |<object><name>a</name><difficult>1</difficult>
+        |  <bndbox><xmin>0</xmin><ymin>0</ymin><xmax>2</xmax><ymax>1</ymax></bndbox></object>
+        |<object><name>b</name><difficult>1</difficult>
+        |  <bndbox><xmin>2</xmin><ymin>0</ymin><xmax>5</xmax><ymax>1</ymax></bndbox></object>
+        |</annotation>""".stripMargin
+    val xmls = files.toSeq.map { f =>
+      PageGen.urlFor(f.getName.stripSuffix(".xml").toLong) ->
+        new String(Files.readAllBytes(f.toPath), "UTF-8")
+    } :+ (PageGen.urlFor(3) -> allDifficult)
+    val urls = xmls.map(_._1).toSet
+    val aligned = AlignJob.align(AlignJob.synthPages(spark, sf).filter(p => urls.contains(p.url)))
+      .persist()
+    val docs = aligned.collect()
+    assert(docs.map(_.url).toSet === urls)
+    val pred = AlignJob.spans(aligned)
+
+    def perPage(evalDifficult: Boolean): Seq[Seq[Any]] = {
+      val gt = xmls.map { case (u, x) => u -> GtXml.sylBoxes(x, evalDifficult) }.toMap
+      docs.toSeq.flatMap { d =>
+        val spans = d.spans.map(c => graft.align.SylBox(c.syl, c.ulx, c.uly, c.lrx, c.lry)).toIndexedSeq
+        EvalJob.docMeans(gt(d.url), spans).map { case (iou, rangeIou, n) => Seq(d.url, iou, rangeIou, n) }
+      }.sortBy(_.head.toString)
+    }
+    def reference(evalDifficult: Boolean): Seq[Seq[Any]] =
+      RelationalEval.evaluate(
+          xmls.map { case (u, x) => RelationalEval.gtFrame(spark, u, x, evalDifficult) }.reduce(_ unionAll _),
+          pred)
+        .orderBy("url").collect().map(_.toSeq).toSeq
+
+    for (evalDifficult <- Seq(false, true)) {
+      val (typed, relational) = (perPage(evalDifficult), reference(evalDifficult))
+      assert(typed === relational, s"evalDifficult=$evalDifficult")
+      assert(typed.exists(_.head == PageGen.urlFor(3)) === evalDifficult,
+        s"all-difficult page, evalDifficult=$evalDifficult")
+    }
+    // the query itself: the three fixture files, difficult boxes dropped
+    val rows = graft.SparkEntry.queries("q_eval_gtxml")(spark, sf).collect().map(_.toSeq).toSeq
+    assert(rows.map(_(3)) === Seq(23, 42, 30))
+    assert(rows === reference(evalDifficult = false))
+    aligned.unpersist()
   }
 
   test("EvalJob: a span set evaluated against itself scores IOU 1.0 everywhere") {
@@ -60,7 +111,7 @@ class EvalAndResumeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = AlignJob.synthPages(spark, sfDir).filter(_.url < PageGen.urlFor(40))
     val spans = AlignJob.spans(AlignJob.align(pages))
     spans.persist()
-    val res = EvalJob.evaluate(spans, spans)
+    val res = RelationalEval.evaluate(spans, spans)
     val rows = res.collect()
     assert(rows.length > 0)
     for (r <- rows) {

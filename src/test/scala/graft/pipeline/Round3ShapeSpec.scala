@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-3 plan-shape assertions (VERDICT r2 #8): the hot queries must keep
   * the shapes the perf fixes established — cached signature/span passes
   * consumed from InMemoryTableScan on every side, the forced
-  * boundary-exchange lag with no single-partition window, and a broadcast
-  * GT side in the XML evaluation.
+  * boundary-exchange lag with no single-partition window, and an XML
+  * evaluation that scores each page in its kernel task (no GT shuffle).
   */
 class Round3ShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -77,8 +77,28 @@ class Round3ShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("partial_count"), plan.take(2000))
   }
 
-  test("q_eval_gtxml broadcasts the (tiny) ground-truth side") {
-    val plan = planOf("q_eval_gtxml")
-    assert(plan.contains("Broadcast"), s"GT side not broadcast:\n${plan.take(3000)}")
+  test("q_eval_gtxml never shuffles the ground-truth side") {
+    // no join, no window, and no exchange but the final sort's
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    // the executed adaptive plan, with the exchanges inside its query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    val df = graft.SparkEntry.queries("q_eval_gtxml")(spark, sfDir)
+    df.collect()
+    val all = nodes(df.queryExecution.executedPlan)
+    val joins = all.map(_.nodeName).filter(_.contains("Join"))
+    val windows = all.map(_.nodeName).filter(_.contains("Window"))
+    val otherExchanges = all.collect {
+      case e: Exchange if !(e.isInstanceOf[ShuffleExchangeExec] &&
+          e.outputPartitioning.isInstanceOf[RangePartitioning]) => e.nodeName
+    }
+    assert(joins.isEmpty && windows.isEmpty && otherExchanges.isEmpty,
+      s"joins $joins, windows $windows, exchanges $otherExchanges:\n${df.queryExecution.executedPlan}")
   }
 }

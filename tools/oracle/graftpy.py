@@ -480,7 +480,7 @@ def collapse_gt(gt_spans):
 
 
 def evaluate_per_span(gt_spans, pred_spans):
-    """graft.pipeline.EvalJob.evaluatePerSpan for ONE document.
+    """graft.pipeline.EvalJob.scoreDoc for ONE document.
     Returns [(gt_seq, iou, range_iou)] for the collapsed GT spans."""
     out = []
     for g in collapse_gt(gt_spans):
